@@ -17,6 +17,14 @@ Spark-first re-expression of the reference's meta service + tskv storage:
 - database TTL is applied as a query-time lower bound on time
   (database_schema.rs:70-84), not at write time.
 
+The write rule: every table mutation (INSERT, UPDATE/DELETE, COMPACT,
+RENAME COLUMN) stages its ``_tb=`` buckets and series index, range-checks
+them, then commits through ``Catalog._commit`` — the only code that moves
+data into a table. It bumps the table's version, which the Engine's temp
+views are keyed on. Not crash-atomic yet: a crash mid-commit can leave an
+INSERT partly visible, and a rewrite deletes the old buckets before it
+moves the new ones in.
+
 At 100 TB scale: the dedup view is an aggregation keyed on
 (tags..., time) — Spark plans it as partial/final hash aggregate over a
 shuffle on exactly the key the data is naturally clustered by; `compact()`
@@ -25,11 +33,14 @@ materializes the merge so steady-state reads skip it entirely.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import json
 import os
 import re
 import shutil
 import time as _time
+from collections.abc import Collection
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -43,7 +54,13 @@ from .schema import (
 
 _CATALOG_FILE = "_tskv_table.json"
 _TB_COL = "_tb"
+_SERIES_DIR = "_series"
 _TB_DAY_FMT = "yyyyMMdd"
+
+# table path -> commit count. Process-wide and in memory only: the temp
+# views keyed on it never outlive the process. Entries are never removed,
+# so a dropped and re-created table never repeats a version.
+_VERSIONS: dict[str, int] = {}
 
 # vnode_duration → _tb granularity thresholds (days)
 _TB_MONTH_MIN_DAYS = 28
@@ -100,6 +117,7 @@ class Catalog:
         self.spark = spark
         self.warehouse = warehouse
         self.tenant = tenant
+        self.root = os.path.abspath(os.path.join(warehouse, tenant))
         # "now" provider for the TTL retention filter — the engine rebinds
         # this to its virtual clock so slt `sleep` advances expiry
         # (data_tests/data_ttl.slt) without wall-clock waits
@@ -114,10 +132,11 @@ class Catalog:
         self._render_poison: set[tuple[str, str]] = set()
 
     def _poison_marker_path(self, db: str, name: str) -> str:
-        return os.path.join(self._table_path(db, name), "_render_poison")
+        return os.path.join(self.table_path(db, name), "_render_poison")
 
     def _poison(self, db: str, name: str) -> None:
         self._render_poison.add((db, name))
+        self._bump(db, name)  # a view built before must now fail to rebuild
         try:
             with open(self._poison_marker_path(db, name), "w") as f:
                 f.write("")
@@ -132,20 +151,36 @@ class Catalog:
             return True
         return False
 
-    # ---------- paths ----------
+    # ---------- paths and versions ----------
     def _db_path(self, db: str) -> str:
-        return os.path.join(self.warehouse, self.tenant, db)
+        return os.path.join(self.root, db)
 
-    def _table_path(self, db: str, name: str) -> str:
+    def table_path(self, db: str, name: str) -> str:
         return os.path.join(self._db_path(db), name)
+
+    def _series_path(self, db: str, name: str) -> str:
+        return os.path.join(self.table_path(db, name), _SERIES_DIR)
+
+    def version(self, db: str, name: str) -> int:
+        """Bumped by every commit, schema save and drop of the table."""
+        return _VERSIONS.get(self.table_path(db, name), 0)
+
+    def _bump(self, db: str, name: str) -> None:
+        p = self.table_path(db, name)
+        _VERSIONS[p] = _VERSIONS.get(p, 0) + 1
 
     # ---------- DDL ----------
     def create_database(self, db: str, ttl: str | None = None, **options) -> None:
-        path = self._db_path(db)
-        os.makedirs(path, exist_ok=True)
-        meta = {"ttl": ttl, **options}
-        with open(os.path.join(path, "_db.json"), "w") as f:
-            json.dump(meta, f)
+        os.makedirs(self._db_path(db), exist_ok=True)
+        self._save_database_options(db, {"ttl": ttl, **options})
+
+    def _save_database_options(self, db: str, options: dict) -> None:
+        with open(os.path.join(self._db_path(db), "_db.json"), "w") as f:
+            json.dump(options, f)
+
+    def set_database_option(self, db: str, key: str, value) -> None:
+        """ALTER DATABASE ... SET <key> <value>."""
+        self._save_database_options(db, {**self.database_options(db), key: value})
 
     def database_options(self, db: str) -> dict:
         p = os.path.join(self._db_path(db), "_db.json")
@@ -154,16 +189,43 @@ class Catalog:
         with open(p) as f:
             return json.load(f)
 
+    def drop_database(self, db: str) -> None:
+        for name in self.list_tables(db):
+            self._bump(db, name)
+        shutil.rmtree(self._db_path(db), ignore_errors=True)
+        self._render_poison = {k for k in self._render_poison if k[0] != db}
+
+    def disk_bytes(self, db: str) -> int:
+        """Bytes of every file under the database's directory."""
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, fs in os.walk(self._db_path(db))
+            for f in fs
+        )
+
+    def metadata_digest(self) -> str:
+        """Digest of every database's options and every table's schema —
+        the catalog state the information_schema views are built from."""
+        meta = {
+            db: [self.database_options(db), {
+                t: self.get_schema(db, t).to_json() for t in self.list_tables(db)
+            }]
+            for db in self.list_databases()
+        }
+        return hashlib.md5(
+            json.dumps([self.root, meta], sort_keys=True).encode()
+        ).hexdigest()
+
     def list_databases(self) -> list[str]:
-        root = os.path.join(self.warehouse, self.tenant)
-        if not os.path.isdir(root):
+        if not os.path.isdir(self.root):
             return []
         return sorted(
-            d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))
+            d for d in os.listdir(self.root)
+            if os.path.isdir(os.path.join(self.root, d))
         )
 
     def create_table(self, db: str, schema: TskvTableSchema) -> None:
-        path = self._table_path(db, schema.name)
+        path = self.table_path(db, schema.name)
         if os.path.exists(os.path.join(path, _CATALOG_FILE)):
             raise ValueError(f"table {db}.{schema.name} already exists")
         os.makedirs(path, exist_ok=True)
@@ -176,22 +238,24 @@ class Catalog:
         fmt = bucket_fmt_for(self.database_options(db))
         if fmt != _TB_DAY_FMT:
             schema.options["bucket_fmt"] = fmt
-        self._save_schema(db, schema)
+        self.save_schema(db, schema)
 
     def bucket_fmt(self, schema: TskvTableSchema) -> str:
         """The table's ``_tb`` date_format pattern (fixed at creation)."""
         return schema.options.get("bucket_fmt", _TB_DAY_FMT)
 
-    def _save_schema(self, db: str, schema: TskvTableSchema) -> None:
-        with open(os.path.join(self._table_path(db, schema.name), _CATALOG_FILE), "w") as f:
+    def save_schema(self, db: str, schema: TskvTableSchema) -> None:
+        with open(os.path.join(self.table_path(db, schema.name), _CATALOG_FILE), "w") as f:
             json.dump(schema.to_json(), f, indent=2)
+        self._bump(db, schema.name)
 
     def drop_table(self, db: str, name: str) -> None:
-        shutil.rmtree(self._table_path(db, name), ignore_errors=True)
+        shutil.rmtree(self.table_path(db, name), ignore_errors=True)
         self._render_poison.discard((db, name))
+        self._bump(db, name)
 
     def get_schema(self, db: str, name: str) -> TskvTableSchema:
-        p = os.path.join(self._table_path(db, name), _CATALOG_FILE)
+        p = os.path.join(self.table_path(db, name), _CATALOG_FILE)
         if not os.path.exists(p):
             # ValueError = legitimate semantic error (the slt expected-error
             # classifier treats KeyError as an engine bug)
@@ -217,7 +281,7 @@ class Catalog:
             raise ValueError(f"column {col} already exists")
         schema.fields[col] = ftype
         schema.schema_version += 1
-        self._save_schema(db, schema)
+        self.save_schema(db, schema)
 
     def alter_table_add_tag(self, db: str, name: str, col: str) -> None:
         """ALTER TABLE ADD TAG (ddl/alter_table.slt) — new tag is NULL on
@@ -227,7 +291,7 @@ class Catalog:
             raise ValueError(f"column {col} already exists in table {name}")
         schema.tags.append(col)
         schema.schema_version += 1
-        self._save_schema(db, schema)
+        self.save_schema(db, schema)
 
     def alter_table_drop_field(self, db: str, name: str, col: str) -> None:
         schema = self.get_schema(db, name)
@@ -239,7 +303,7 @@ class Catalog:
             raise ValueError(f"cannot drop the only field {col} of {name}")
         del schema.fields[col]
         schema.schema_version += 1
-        self._save_schema(db, schema)
+        self.save_schema(db, schema)
 
     def alter_table_rename_column(self, db: str, name: str, old: str, new: str) -> None:
         """ALTER TABLE RENAME COLUMN (reference ddl/rename_field.slt,
@@ -258,29 +322,21 @@ class Catalog:
         is_tag = old in schema.tags
         if not is_tag and old not in schema.fields:
             raise ValueError(f"column {old} not found in {name}")
-        path = self._table_path(db, name)
-        has_data = any(e.startswith("_tb=") for e in os.listdir(path))
-        if has_data:
-            raw = self.spark.read.option("basePath", path).parquet(path)
-            renamed = raw.withColumnRenamed(old, new)
-            tmp = path + ".rename"
-            renamed.write.mode("overwrite").partitionBy("_tb").parquet(tmp)
-            for entry in os.listdir(path):
-                if entry.startswith("_tb="):
-                    shutil.rmtree(os.path.join(path, entry))
-            for entry in os.listdir(tmp):
-                if entry.startswith("_tb="):
-                    shutil.move(os.path.join(tmp, entry), os.path.join(path, entry))
-            shutil.rmtree(tmp, ignore_errors=True)
+        buckets = self._buckets(db, name)
+        sp = self._series_path(db, name)
+        with self._commit(db, name, replace=buckets) as stage:
+            if buckets:
+                # the table's own storage schema: inferring one from a
+                # single footer would mistype files of other writers
+                self.read_raw(db, name).withColumnRenamed(old, new).write.mode(
+                    "overwrite"
+                ).partitionBy(_TB_COL).parquet(stage)
+            if is_tag and os.path.isdir(sp):
+                self.spark.read.parquet(sp).withColumnRenamed(
+                    old, new
+                ).write.parquet(os.path.join(stage, _SERIES_DIR))
         if is_tag:
             schema.tags = [new if t == old else t for t in schema.tags]
-            sp = self._series_path(db, name)
-            if os.path.isdir(sp):
-                series = self.spark.read.parquet(sp).withColumnRenamed(old, new)
-                tmp = sp + ".rename"
-                series.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(sp, ignore_errors=True)
-                shutil.move(tmp, sp)
         else:
             schema.fields = {
                 (new if k == old else k): v for k, v in schema.fields.items()
@@ -289,7 +345,7 @@ class Catalog:
         if old in codecs:
             codecs[new] = codecs.pop(old)
         schema.schema_version += 1
-        self._save_schema(db, schema)
+        self.save_schema(db, schema)
 
     # Writable time range mirrors the reference's ns-i64 bucket math:
     # timestamps past i64::MAX ns (2262-04-11T23:47:16.854775807) overflow
@@ -455,21 +511,18 @@ class Catalog:
         # Single-pass write: the source plan executes exactly once — the
         # staged data write — with no persist holding a copy in memory (an
         # INSERT..SELECT source can be arbitrarily expensive; previously it
-        # was persisted and re-read by three jobs). The write lands in a
-        # staging dir INSIDE the table dir — the ``_stage-<seq>`` name has
-        # no ``=``, so Spark's hidden-path filter keeps it invisible to
-        # readers — and files move into the ``_tb=`` dirs only after the
-        # time-range check passes, preserving reject-before-visible
-        # semantics for TTL/overflow violations. The row-count/time-range
+        # was persisted and re-read by three jobs). The write lands in the
+        # commit's stage, and the commit moves it into the ``_tb=`` dirs
+        # only after the time-range check passes (a raise skips the
+        # commit), preserving reject-before-visible semantics for
+        # TTL/overflow violations. The row-count/time-range
         # stats and the series index are computed FROM the staged files
         # (column-pruned columnar scans), never by re-executing the source.
         # Deliberately NOT df.observe(): the first Observation initializes
         # SparkSession.observationManager, a non-serializable lazy field
         # that then breaks ANY later plan serializing the session (Spark ML
         # training summaries captured in model-transform UDFs do).
-        path = self._table_path(db, name)
-        stage = os.path.join(path, f"_stage-{seq}")
-        try:
+        with self._commit(db, name) as stage:
             out.write.mode("overwrite").partitionBy(_TB_COL).parquet(stage)
             staged_buckets = [
                 e for e in os.listdir(stage) if e.startswith(_TB_COL + "=")
@@ -527,8 +580,9 @@ class Catalog:
             if schema.tags and n:
                 # maintain the series index on write — the analogue of the
                 # reference's inverted tag index updated during ingest
-                # (tskv/src/index/ts_index.rs). Appends this batch's
-                # distinct tag tuples; readers dedup across appends. The
+                # (tskv/src/index/ts_index.rs). Stages this batch's
+                # distinct tag tuples, which the commit appends to the
+                # index; readers dedup across appends. The
                 # explicit tag-only schema prunes the read AND skips the
                 # footer schema-inference job.
                 from pyspark.sql import types as T
@@ -543,26 +597,8 @@ class Catalog:
                 # (546,208 true series vs 599,969 inflated)
                 self.spark.read.schema(tag_struct).parquet(stage).select(
                     *schema.tags
-                ).distinct().write.mode("append").parquet(
-                    self._series_path(db, name)
-                )
-            for entry in os.listdir(stage):
-                if not entry.startswith(_TB_COL + "="):
-                    continue
-                dst = os.path.join(path, entry)
-                src = os.path.join(stage, entry)
-                if not os.path.isdir(dst):
-                    os.rename(src, dst)  # fresh bucket: one dir rename
-                    continue
-                for fname in os.listdir(src):
-                    # part filenames embed the job UUID — append-unique
-                    shutil.move(os.path.join(src, fname), os.path.join(dst, fname))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+                ).distinct().write.parquet(os.path.join(stage, _SERIES_DIR))
         return n
-
-    def _series_path(self, db: str, name: str) -> str:
-        return os.path.join(self._table_path(db, name), "_series")
 
     def series(self, db: str, name: str) -> DataFrame:
         """Distinct series (tag tuples). Served from the write-maintained
@@ -586,7 +622,7 @@ class Catalog:
                 f"timestamp to datetime for table {db}.{name}"
             )
         schema = self.get_schema(db, name)
-        path = self._table_path(db, name)
+        path = self.table_path(db, name)
         df = (
             self.spark.read.schema(schema.to_struct_type(with_ingest_seq=True))
             .option("basePath", path)
@@ -594,7 +630,7 @@ class Catalog:
         )
         return df
 
-    def _ttl_filter(self, db: str, df: DataFrame) -> DataFrame:
+    def ttl_filter(self, db: str, df: DataFrame) -> DataFrame:
         """Retention: drop rows older than now − TTL ('INF' = no expiry,
         alter_database.slt). Applies to BOTH the merge-on-read view and the
         raw pre-merge count path — the reference's storage scan never
@@ -617,7 +653,7 @@ class Catalog:
         pinned by cases/sqlancer/repeat_write.slt:12-32).
         """
         schema = self.get_schema(db, name)
-        df = self._ttl_filter(db, self.read_raw(db, name))
+        df = self.ttl_filter(db, self.read_raw(db, name))
 
         if not dedup:
             return df.drop(INGEST_SEQ_COL, INGEST_ROW_COL, NS_RESIDUE_COL)
@@ -650,24 +686,103 @@ class Catalog:
 
     def compact(self, db: str, name: str) -> None:
         """Materialize the merge-on-read view (the analogue of tskv
-        compaction, tskv/src/compaction/) so reads skip dedup."""
+        compaction, tskv/src/compaction/) so reads skip dedup. Merging
+        changes no tag, so the series index stays."""
+        self.overwrite(
+            db, name, self.read(db, name, keep_residue=True), rebuild_index=False
+        )
+
+    def overwrite(
+        self,
+        db: str,
+        name: str,
+        df: DataFrame,
+        partitions: list[str] | None = None,
+        rebuild_index: bool = True,
+    ) -> None:
+        """Rewrite a table's data files from a merged view (UPDATE/DELETE,
+        COMPACT; tskv/src/compaction analogue). When ``partitions`` is
+        given, ONLY those ``_tb`` buckets are rewritten — at 100 TB an
+        UPDATE ... WHERE time > X must not rewrite years of history.
+
+        ``rebuild_index=False`` skips the series-index rewrite — legal
+        exactly when no tag value changed and no row was removed (a
+        field-only UPDATE). Otherwise the index is computed from ``df``, the
+        caller's full post-state view (still backed by its persist of the
+        pre-swap files), not by re-scanning the rewritten table — one read
+        job less; it is staged before the commit deletes any file."""
         schema = self.get_schema(db, name)
-        merged = (
-            self.read(db, name, dedup=True, keep_residue=True)
-            .withColumn(INGEST_SEQ_COL, F.lit(0))
+        staged = (
+            df.withColumn(INGEST_SEQ_COL, F.lit(0))
             .withColumn(INGEST_ROW_COL, F.lit(0))
             .withColumn(_TB_COL, F.date_format(TIME_COL, self.bucket_fmt(schema)))
         )
-        path = self._table_path(db, name)
-        tmp = path + ".compact"
-        merged.write.mode("overwrite").partitionBy(_TB_COL).parquet(tmp)
-        for entry in os.listdir(path):
-            if entry.startswith(_TB_COL + "="):
-                shutil.rmtree(os.path.join(path, entry))
-        for entry in os.listdir(tmp):
-            if entry.startswith(_TB_COL + "="):
-                shutil.move(os.path.join(tmp, entry), os.path.join(path, entry))
-        shutil.rmtree(tmp, ignore_errors=True)
+        if partitions is None:
+            partitions = self._buckets(db, name)
+        else:
+            staged = staged.filter(F.col(_TB_COL).isin(list(partitions)))
+        with self._commit(db, name, replace=partitions) as stage:
+            staged.write.mode("overwrite").partitionBy(_TB_COL).parquet(stage)
+            if schema.tags and rebuild_index:
+                # df is the post-mutation table content regardless of the
+                # partition pruning above (unpruned buckets are unchanged rows)
+                df.select(*schema.tags).distinct().write.parquet(
+                    os.path.join(stage, _SERIES_DIR)
+                )
+
+    def _buckets(self, db: str, name: str) -> list[str]:
+        """The ``_tb`` values of the table's live buckets."""
+        return [
+            e.split("=", 1)[1]
+            for e in os.listdir(self.table_path(db, name))
+            if e.startswith(_TB_COL + "=")
+        ]
+
+    @contextlib.contextmanager
+    def _commit(self, db: str, name: str, replace: Collection[str] | None = None):
+        """The one commit of every table mutation. The ``with`` body stages
+        ``_tb=`` bucket dirs in the yielded directory, and optionally a
+        series index in its ``_series`` subdirectory. On a clean exit they
+        move into the table and the table's version is bumped; the stage is
+        removed either way, so a body that raises leaves the table as is.
+
+        ``replace=None`` appends (INSERT): a staged bucket the table lacks
+        is renamed into place (one dir rename, the common fresh-day case),
+        else it joins the live one file by file (part names embed the job
+        UUID); a staged index joins the live one the same way. Otherwise
+        ``replace`` lists the ``_tb`` values whose live buckets the stage
+        supersedes, and a staged index replaces the live one. Not
+        crash-atomic (see the module docstring)."""
+        path = self.table_path(db, name)
+        stage = os.path.join(path, f"_stage-{_time.time_ns()}")
+        try:
+            yield stage
+            staged = os.listdir(stage) if os.path.isdir(stage) else []
+            moves = [
+                (os.path.join(stage, e), os.path.join(path, e))
+                for e in staged
+                if e.startswith(_TB_COL + "=")
+            ]
+            if _SERIES_DIR in staged:
+                moves.append(
+                    (os.path.join(stage, _SERIES_DIR), self._series_path(db, name))
+                )
+            if replace is not None:
+                gone = [f"{_TB_COL}={v}" for v in replace]
+                if _SERIES_DIR in staged:
+                    gone.append(_SERIES_DIR)
+                for entry in gone:
+                    shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
+            for src, dst in moves:
+                if not os.path.isdir(dst):
+                    os.rename(src, dst)
+                    continue
+                for fname in os.listdir(src):
+                    shutil.move(os.path.join(src, fname), os.path.join(dst, fname))
+            if moves or replace:
+                self._bump(db, name)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
     # ---------- time-series metadata queries ----------
     def show_series(self, db: str, name: str) -> DataFrame:

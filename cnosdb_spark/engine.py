@@ -17,16 +17,17 @@ Statement surface (parser.rs):
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import re
-import shutil
+import weakref
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .catalog import Catalog, _TB_COL
+from .catalog import Catalog
 from .schema import (
-    INGEST_ROW_COL,
-    INGEST_SEQ_COL,
     NS_RESIDUE_COL,
     TIME_COL,
     TskvTableSchema,
@@ -67,6 +68,13 @@ _CODEC_COMPAT = {
     "geometry": {"DEFAULT", "NULL", "GZIP", "BZIP", "ZSTD", "SNAPPY", "ZLIB"},
     "boolean": {"DEFAULT", "NULL", "BITPACK", "BIT_PACK"},
 }
+
+
+# Temp views belong to the SparkSession, not to an Engine, so their cache
+# does too: per session, view name -> the stamp the view was built from
+# (see Engine._register_views), plus the information-schema digest.
+_SESSION_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SYS_DIGEST = "__information_schema__"  # map key; never a view name
 
 
 def _check_codec(codec: str | None, ftype: str) -> None:
@@ -119,13 +127,6 @@ class Engine:
         # batch-recompute analogue of the reference's micro-batch trigger
         # loop; LWW merge on the target makes re-emission idempotent.
         self.stream_jobs: dict = {}
-        # view-registration cache: (db, table) -> registered view name.
-        # DDL/DML mark entries dirty; _register_views only re-reads those.
-        self._registered: dict[tuple[str, str], str] = {}
-        self._dirty: set[tuple[str, str]] = set()
-        # digest of the state behind the information/cluster schema views
-        # as of their last registration (see _sys_views_fingerprint)
-        self._sys_views_fp: str | None = None
         # EXPLAIN plans under non-ANSI coercion by toggling the (shared)
         # session conf; _select also plans under this lock, so a concurrent
         # query can't be ANALYZED while the conf is flipped (execution
@@ -265,12 +266,7 @@ class Engine:
                 for db in c.list_databases():
                     if db == "usage_schema":
                         continue
-                    size = 0
-                    droot = c._db_path(db)
-                    for root, _dirs, fs in os.walk(droot):
-                        size += sum(
-                            os.path.getsize(os.path.join(root, f)) for f in fs
-                        )
+                    size = c.disk_bytes(db)
                     if size > 0:
                         rows.append((now, db, "1001", tenant, "3", size))
             if rows:
@@ -288,7 +284,6 @@ class Engine:
                 "usage_schema", table,
                 batch_df(self.spark, rows, schema_str),
             )
-            self._mark_dirty("usage_schema", table)
         self._usage_flushed.update(changed)
 
     @property
@@ -326,17 +321,8 @@ class Engine:
         return self._roles_by_tenant.setdefault(self.current_tenant, {})
 
     def set_tenant(self, tenant: str) -> None:
-        """Switch session tenant, invalidating every registered temp view
-        (views are session-global; each tenant resolves its own tables)."""
-        if tenant == self.current_tenant:
-            return
-        for view in list(self._registered.values()):
-            try:
-                self.spark.catalog.dropTempView(view)
-            except Exception:
-                pass
-        self._registered.clear()
-        self._dirty.clear()
+        """Switch session tenant. Views need no invalidation: their stamps
+        carry the catalog root, which is tenant-namespaced."""
         self.current_tenant = tenant
 
     # ------------------------------------------------------------- dispatch
@@ -438,13 +424,11 @@ class Engine:
                     raise ValueError(f"Database not found: {db}")
                 for t in self.catalog.list_tables(db):
                     self.catalog.compact(db, t)
-                    self._mark_dirty(db, t)
                 return None
             m = re.match(r"COMPACT\s+TABLE\s+([\w.]+)\s*;?\s*$", stmt, re.I)
             if m:
                 db, t = self._split_table_name(m.group(1))
                 self.catalog.compact(db, t)
-                self._mark_dirty(db, t)
                 return None
             raise ValueError(f"cannot parse COMPACT statement: {stmt[:80]!r}")
         if kw == "SHOW":
@@ -483,57 +467,68 @@ class Engine:
         raise ValueError(f"unsupported statement: {stmt[:80]!r}")
 
     # ---------------------------------------------------------------- DQL
-    def _mark_dirty(self, db: str, name: str) -> None:
-        self._dirty.add((db, name))
-
     def _register_views(self) -> str | None:
-        """Register catalog tables as temp views — incrementally: only
-        unregistered or dirty (written-since-last-registration) tables are
-        re-read. Tables in the current database get their bare name;
-        qualified ``db.table`` references are rewritten by ``_qualify``."""
+        """Register catalog tables as temp views: bare names for the
+        current database, ``__db__table`` (see ``_qualify``) for others.
+
+        Per SparkSession, ``_SESSION_VIEWS`` maps each view to the stamp it
+        was built from: catalog root, db, db options, the clock offset if
+        the db has a TTL (its views freeze "now"), table and table version.
+        Every Catalog commit, schema save and drop bumps the version, so a
+        view is re-read exactly when its stamp changed, whoever changed it.
+        A mapped view that no current listing produces is dropped."""
+        views = _SESSION_VIEWS.setdefault(self.spark, {})
+        want: dict[str, tuple] = {}  # view -> (stamp, builds its DataFrame)
+
+        def db_stamp(cat: Catalog, db: str) -> tuple:
+            opts = cat.database_options(db)
+            ttl = str(opts.get("ttl") or "INF").upper()
+            clock = None if ttl == "INF" else self.clock_offset_us
+            return (cat.root, db, json.dumps(opts, sort_keys=True), clock)
+
+        def add_tables(cat: Catalog, db: str, prefix: str) -> None:
+            stamp = db_stamp(cat, db)
+            for name in cat.list_tables(db):
+                want[prefix + name] = (
+                    (*stamp, name, cat.version(db, name)),
+                    partial(cat.read, db, name),
+                )
+
         for db in self.catalog.list_databases():
-            if db == "usage_schema":
-                continue  # registered from the home catalog below
-            for name in self.catalog.list_tables(db):
-                key = (db, name)
-                view = name if db == self.database else f"__{db}__{name}"
-                if self._registered.get(key) == view and key not in self._dirty:
-                    continue
-                self.catalog.read(db, name).createOrReplaceTempView(view)
-                self._registered[key] = view
-                self._dirty.discard(key)
+            if db != "usage_schema":  # registered from the home catalog below
+                add_tables(
+                    self.catalog, db, "" if db == self.database else f"__{db}__"
+                )
         # usage_schema: home-catalog tables, visible from every tenant
         home = self._home_catalog
         if "usage_schema" in home.list_databases():
-            for name in home.list_tables("usage_schema"):
-                key = ("usage_schema", name)
-                view = f"__usage_schema__{name}"
-                if self._registered.get(key) != view or key in self._dirty:
-                    df = home.read("usage_schema", name)
-                    df.createOrReplaceTempView(view)
-                    self._registered[key] = view
-                    self._dirty.discard(key)
-                if self.database == "usage_schema":
-                    home.read("usage_schema", name).createOrReplaceTempView(name)
+            add_tables(home, "usage_schema", "__usage_schema__")
+            if self.database == "usage_schema":
+                add_tables(home, "usage_schema", "")
         for name, (fmt, path, opts) in self.external.items():
-            key = ("", name)
-            view = _ext_view_name(name)
-            if self._registered.get(key) == view and key not in self._dirty:
-                continue
-            self._read_external(fmt, path, opts).createOrReplaceTempView(view)
-            self._registered[key] = view
-            self._dirty.discard(key)
+            want[_ext_view_name(name)] = (
+                ("external", fmt, path, json.dumps(opts, sort_keys=True)),
+                partial(self._read_external, fmt, path, opts),
+            )
         for sname, st in self.streams.items():
             # stream tables are selectable/explainable as batch views over
             # their source (stream/basic.slt:70-78); the streaming path
             # proper goes through StreamTable.read/run_incremental_agg
-            if st.src_table and st.src_table in self.catalog.list_tables(
-                st.src_db or self.database
-            ):
-                sdf = self.catalog.read(st.src_db or self.database, st.src_table)
-                if st.columns:
-                    sdf = sdf.select(*st.columns)
-                sdf.createOrReplaceTempView(sname)
+            src_db = st.src_db or self.database
+            if st.src_table and st.src_table in self.catalog.list_tables(src_db):
+                want[sname] = (
+                    ("stream", *db_stamp(self.catalog, src_db), st.src_table,
+                     self.catalog.version(src_db, st.src_table),
+                     tuple(st.columns or ())),
+                    partial(_stream_view, self.catalog, src_db, st),
+                )
+        for view in [v for v in views if v != _SYS_DIGEST and v not in want]:
+            del views[view]
+            self.spark.catalog.dropTempView(view)
+        for view, (stamp, build) in want.items():
+            if views.get(view) != stamp:
+                build().createOrReplaceTempView(view)
+                views[view] = stamp
         from . import sys_schema
 
         # information_schema.queries is self-referential (it must show the
@@ -565,11 +560,11 @@ class Engine:
         # The remaining ~10 information/cluster-schema views are pure
         # functions of driver-side state (catalog schema files, session
         # dicts) — re-deriving them was ~2/3 of warm engine-statement
-        # latency. Skip the whole block when that state's digest is
-        # unchanged since the last registration.
-        fp = self._sys_views_fingerprint(res_rows)
-        if fp == self._sys_views_fp:
-            return
+        # latency. Skip the whole block when that state's digest equals
+        # the one the session's views were last built from.
+        digest = self._sys_views_digest(res_rows)
+        if views.get(_SYS_DIGEST) == digest:
+            return None
         sys_schema.databases_df(
             self.spark, self.catalog, hidden=self._hidden_dbs
         ).createOrReplaceTempView("__information_schema__databases")
@@ -631,50 +626,27 @@ class Engine:
         ).createOrReplaceTempView("__information_schema__database_privileges")
         # set only after every view registered, so a mid-build failure
         # retries the whole block next statement
-        self._sys_views_fp = fp
+        views[_SYS_DIGEST] = digest
 
-    def _sys_views_fingerprint(self, res_rows: list) -> str:
-        """Exact digest of the driver-side state the information/cluster
-        schema views are derived from: catalog files by CONTENT (db
-        options + per-table schema json — any DDL/DCL/schemaless schema
-        evolution path invalidates, even ones that bypass the Engine),
-        session dicts by value. Hashing a typical catalog is tens of µs
-        of driver time vs ~10 createDataFrame+view swaps per statement."""
-        import hashlib
-
-        from .catalog import _CATALOG_FILE
-
-        h = hashlib.md5()
-        cat = self.catalog
-        for db in cat.list_databases():
-            h.update(db.encode())
-            p = os.path.join(cat._db_path(db), "_db.json")
-            if os.path.exists(p):
-                with open(p, "rb") as f:
-                    h.update(f.read())
-            for t in cat.list_tables(db):
-                h.update(t.encode())
-                try:
-                    fp_ = os.path.join(cat._table_path(db, t), _CATALOG_FILE)
-                    with open(fp_, "rb") as f:
-                        h.update(f.read())
-                except OSError:
-                    pass
-        state = (
-            self.current_tenant, self.user, self.database,
-            sorted(self.external.items(), key=lambda kv: kv[0]),
-            sorted(
-                (s, st.src_db, st.src_table, st.columns,
-                 getattr(st, "home_db", "public"))
+    def _sys_views_digest(self, res_rows: list) -> str:
+        """Digest of the state the information/cluster-schema views are
+        derived from, as canonical JSON of plain data: the catalog's
+        metadata by content (any DDL or schemaless schema evolution, even
+        one that bypasses the Engine, changes it) and this Engine's session
+        state by value. Content, not table versions: a data write must not
+        rebuild these views."""
+        state = [
+            self.catalog.metadata_digest(), self._home_tenant,
+            self.current_tenant, self.user, self.database, self.external,
+            self.external_dbs, self.tenants, self.users, self.roles,
+            self.grants, sorted(self._hidden_dbs), sorted(self._hidden_tenants),
+            res_rows, {
+                s: [st.src_db, st.src_table, st.columns,
+                    getattr(st, "home_db", "public")]
                 for s, st in self.streams.items()
-            ),
-            sorted(self.external_dbs.items()),
-            self.tenants, self.users, self.roles, self.grants,
-            sorted(self._hidden_dbs), sorted(self._hidden_tenants),
-            res_rows,
-        )
-        h.update(repr(state).encode())
-        return h.hexdigest()
+            },
+        ]
+        return hashlib.md5(json.dumps(state, sort_keys=True).encode()).hexdigest()
 
     def _qualify(self, sql: str) -> str:
         """Rewrite known ``db.table`` references to their mangled temp-view
@@ -926,7 +898,7 @@ class Engine:
         }:
             return None  # count(0) / count(NULL) / expressions: normal path
         cat = self._cat_for(db)
-        raw = cat._ttl_filter(db, cat.read_raw(db, name))
+        raw = cat.ttl_filter(db, cat.read_raw(db, name))
         col = F.lit(1) if arg == "*" else F.col(arg)
         label = f"COUNT({'*' if arg == '*' else arg})"
         return raw.agg(F.count(col).alias(label))
@@ -1747,7 +1719,7 @@ class Engine:
                 f"Invalid option [event_time_column] of table {name.lower()}:"
                 f" The data type of column '{etc}' is not timestamp"
             )
-        path = self.catalog._table_path(src_db, src_table)
+        path = self.catalog.table_path(src_db, src_table)
         st = StreamTable(
             name=name,
             source_path=path,
@@ -1789,14 +1761,7 @@ class Engine:
             # parity: sys_table/system_database.slt
             raise ValueError(f"Forbidden to drop system database: {name}")
         if kind == "DATABASE":
-            # Invalidate every registered view of the dropped db's tables
-            # (they may be registered under bare names if it is the current
-            # database, else under the __db__tbl mangled name).
-            for key in [k for k in self._registered if k[0] == name]:
-                view = self._registered.pop(key)
-                self.spark.catalog.dropTempView(view)
-                self._dirty.discard(key)
-            shutil.rmtree(self.catalog._db_path(name), ignore_errors=True)
+            self.catalog.drop_database(name)
             # immediate drops also land in information_schema.resource_status
             # (resource manager records every DropDatabase —
             # resource_status.slt:26 expects a row without AFTER)
@@ -1812,7 +1777,6 @@ class Engine:
             self._require_db_full(db)
             if tbl in self.external:
                 del self.external[tbl]
-                key = ("", tbl)
             else:
                 cat = self._cat_for(db)
                 if tbl not in cat.list_tables(db):
@@ -1820,14 +1784,6 @@ class Engine:
                         return None
                     raise ValueError(f'Table not found: "{tbl}"')
                 cat.drop_table(db, tbl)
-                key = (db, tbl)
-            # Drop the view actually registered for this key — dropping the
-            # bare name for a qualified db.tbl would clobber the current
-            # database's same-named table's view.
-            view = self._registered.pop(key, None)
-            if view is not None:
-                self.spark.catalog.dropTempView(view)
-            self._dirty.discard(key)
         else:
             self.streams.pop(name, None)
 
@@ -1842,19 +1798,10 @@ class Engine:
             db, opt, val = m.groups()
             if db not in self.catalog.list_databases():
                 raise ValueError(f'Database not found: "{db}"')
-            opts = self.catalog.database_options(db)
-            opts[opt.lower()] = (
-                _normalize_ttl(val) if opt.lower() in ("ttl", "vnode_duration") else val
+            self.catalog.set_database_option(
+                db, opt.lower(),
+                _normalize_ttl(val) if opt.lower() in ("ttl", "vnode_duration") else val,
             )
-            os.makedirs(self.catalog._db_path(db), exist_ok=True)
-            import json as _json
-
-            with open(os.path.join(self.catalog._db_path(db), "_db.json"), "w") as f:
-                _json.dump(opts, f)
-            # TTL changes alter the read-time retention filter baked into
-            # each registered view — force re-registration
-            for t in self.catalog.list_tables(db):
-                self._mark_dirty(db, t)
             return None
         m = re.match(
             r"ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+(?:COLUMN\s+)?(\w+)\s+TO\s+(\w+)\s*;?\s*$",
@@ -1865,7 +1812,6 @@ class Engine:
             tbl, old, new = m.groups()
             db, name = self._split_table_name(tbl)
             self.catalog.alter_table_rename_column(db, name, old, new)
-            self._mark_dirty(db, name)
             return None
         m = re.match(
             r"ALTER\s+TABLE\s+([\w.]+)\s+ALTER\s+(\w+)\s+SET\s+CODEC\s*\(\s*(\w+)\s*\)\s*;?\s*$",
@@ -1882,7 +1828,7 @@ class Engine:
             codecs = schema.options.setdefault("codecs", {})
             codecs[col] = codec.upper()
             schema.schema_version += 1
-            self.catalog._save_schema(db, schema)
+            self.catalog.save_schema(db, schema)
             return None
         m = re.match(
             r"ALTER\s+TABLE\s+([\w.]+)\s+(ADD|DROP)\s+(?:(FIELD|TAG|COLUMN)\s+)?(\w+)"
@@ -1906,10 +1852,9 @@ class Engine:
                 if codec:
                     schema = self.catalog.get_schema(db, name)
                     schema.options.setdefault("codecs", {})[col] = codec.upper()
-                    self.catalog._save_schema(db, schema)
+                    self.catalog.save_schema(db, schema)
         else:
             self.catalog.alter_table_drop_field(db, name, col)
-        self._mark_dirty(db, name)
 
     # ---------------------------------------------------------------- DML
     def _insert(self, stmt: str):
@@ -2064,7 +2009,6 @@ class Engine:
                     f"{gsub.capitalize()}, got {bad[0]}"
                 )
         n = cat.insert(db, name, src_df)
-        self._mark_dirty(db, name)
         return self.spark.createDataFrame([(n,)], ["rows"])
 
     def _update(self, stmt: str):
@@ -2084,7 +2028,14 @@ class Engine:
             tuple(p.strip() for p in a.partition("=")[::2])
             for a in _split_top_level(sets_str, ",")
         ]
-        set_names = [c.strip('"') for c, _ in set_pairs]
+        # SQL identifiers are case-insensitive: resolve each SET target to
+        # the schema's spelling of the column (SET T0 = ... is a tag update)
+        canon = {c.lower(): c for c in (*tschema.tags, *tschema.fields)}
+        set_pairs = [
+            (canon.get(c.strip('"').lower(), c.strip('"')), rhs)
+            for c, rhs in set_pairs
+        ]
+        set_names = [c for c, _ in set_pairs]
         if TIME_COL in [c.lower() for c in set_names]:
             # the time column is immutable (update_field.slt:820,
             # update_tag.slt:360)
@@ -2107,9 +2058,7 @@ class Engine:
                         "Failed to do analyze. err: Where clause cannot "
                         f"contain field/time column, but found: {other}"
                     )
-            tag_rhs = [
-                rhs for c, rhs in set_pairs if c.strip('"') in tschema.tags
-            ]
+            tag_rhs = [rhs for c, rhs in set_pairs if c in tschema.tags]
             if tag_rhs and all(r.strip().upper() == "NULL" for r in tag_rhs):
                 raise ValueError(
                     "Failed to do analyze. err: tag values cannot all be null"
@@ -2135,7 +2084,7 @@ class Engine:
                     "table, if you want to continue, please add `where true`"
                 )
             for c, rhs in set_pairs:
-                t = str(tschema.fields.get(c.strip('"'), "")).lower()
+                t = str(tschema.fields.get(c, "")).lower()
                 if "unsigned" in t and re.fullmatch(r"-\d+(\.\d+)?", rhs.strip()):
                     raise ValueError(
                         "Failed to do analyze. err: negative value for "
@@ -2168,11 +2117,9 @@ class Engine:
                 assigns = []
                 out = df
                 types = {f.name: f.dataType for f in df.schema.fields}
-                for i, assign in enumerate(_split_top_level(sets_str, ",")):
-                    col, _, expr = assign.partition("=")
-                    col = col.strip().strip('"')
+                for i, (col, expr) in enumerate(set_pairs):
                     set_col = f"_set_{i}"
-                    rhs = F.expr(expr.strip())
+                    rhs = F.expr(expr)
                     # DataFusion coerces the SET rhs to the column type
                     # (dml/update_field.slt: f2_boolean = 0 → false)
                     if col in types:
@@ -2191,14 +2138,13 @@ class Engine:
                 # so the distinct-tags series index is untouched — skip
                 # its rebuild (one full extra job otherwise)
                 touches_tags = any(c in tschema.tags for c, _ in assigns)
-                self._overwrite(
+                self.catalog.overwrite(
                     db,
                     name,
                     out,
                     partitions=None if touches_time else affected,
                     rebuild_index=touches_tags,
                 )
-                self._mark_dirty(db, name)
         finally:
             df.unpersist()
         return self.spark.createDataFrame([(int(n),)], ["rows"])
@@ -2257,75 +2203,13 @@ class Engine:
                 ).first()
                 if n:
                     keep = df.filter(~cond | cond.isNull())
-                    self._overwrite(db, name, keep, partitions=affected)
-                    self._mark_dirty(db, name)
+                    self.catalog.overwrite(db, name, keep, partitions=affected)
             else:
                 n = df.count()
-                self._overwrite(db, name, df.limit(0))
-                self._mark_dirty(db, name)
+                self.catalog.overwrite(db, name, df.limit(0))
         finally:
             df.unpersist()
         return self.spark.createDataFrame([(int(n),)], ["rows"])
-
-    def _overwrite(
-        self,
-        db: str,
-        name: str,
-        df: DataFrame,
-        partitions: list[str] | None = None,
-        rebuild_index: bool = True,
-    ) -> None:
-        """Rewrite a table's data files from a merged view (tombstone-free
-        compaction path, tskv/src/compaction analogue). When ``partitions``
-        is given, ONLY those ``_tb`` time buckets are rewritten (dynamic
-        partition overwrite restricted to the affected buckets — at 100 TB
-        an UPDATE ... WHERE time > X must not rewrite years of history);
-        the input df is filtered to those buckets before writing.
-
-        ``rebuild_index=False`` skips the series-index rewrite — legal
-        exactly when the mutation provably changed no tag value and removed
-        no row (a field-only UPDATE), where the distinct-tags set is
-        untouched by construction. When it does rebuild, the index is
-        computed from ``df`` — the caller's full post-state view, still
-        backed by the caller's persist of the pre-swap files — rather than
-        re-listing and re-scanning the just-written table from disk (one
-        whole extra read job per UPDATE/DELETE otherwise). Both index
-        reads happen BEFORE any file is deleted, so a cache eviction can
-        only fall back to the intact pre-swap files."""
-        path = self.catalog._table_path(db, name)
-        schema = self.catalog.get_schema(db, name)
-        staged = (
-            df.withColumn(INGEST_SEQ_COL, F.lit(0))
-            .withColumn(INGEST_ROW_COL, F.lit(0))
-            .withColumn(
-                _TB_COL,
-                F.date_format(TIME_COL, self.catalog.bucket_fmt(schema)),
-            )
-        )
-        if partitions is not None:
-            staged = staged.filter(F.col(_TB_COL).isin(list(partitions)))
-        tmp = path + ".rewrite"
-        staged.write.mode("overwrite").partitionBy(_TB_COL).parquet(tmp)
-        sp = self.catalog._series_path(db, name)
-        sp_tmp = None
-        if schema.tags and rebuild_index:
-            # df is the post-mutation table content regardless of the
-            # partition pruning above (unpruned buckets are unchanged rows)
-            sp_tmp = sp + ".rewrite"
-            df.select(*schema.tags).distinct().write.mode("overwrite").parquet(sp_tmp)
-        wanted = (
-            None if partitions is None else {f"{_TB_COL}={p}" for p in partitions}
-        )
-        for entry in os.listdir(path):
-            if entry.startswith(_TB_COL + "=") and (wanted is None or entry in wanted):
-                shutil.rmtree(os.path.join(path, entry))
-        for entry in os.listdir(tmp):
-            if entry.startswith(_TB_COL + "="):
-                shutil.move(os.path.join(tmp, entry), os.path.join(path, entry))
-        shutil.rmtree(tmp, ignore_errors=True)
-        if sp_tmp is not None:
-            shutil.rmtree(sp, ignore_errors=True)
-            shutil.move(sp_tmp, sp)
 
     def _winpath(self, url: str) -> str:
         """Map Windows-style URLs (``file://C:\\tmp\\data\\out\\`` —
@@ -2416,7 +2300,9 @@ class Engine:
                         "header", str(eopts.get("header", False)).lower()
                     ).option("escape", '"')
                 getattr(writer, efmt)(self._winpath(epath))
-                self._dirty.add(("", name))
+                # the one explicit invalidation: the view over the
+                # external files is keyed on no catalog version
+                _SESSION_VIEWS.get(self.spark, {}).pop(_ext_view_name(name), None)
                 return self.spark.createDataFrame([(src.count(),)], ["rows"])
             # DataFusion's CsvReadOptions defaults to has_header=true
             # (dql/file_query.slt copies headered CSVs with no option)
@@ -2475,7 +2361,6 @@ class Engine:
             else:
                 src = src.toDF(*cols)
             n = self.catalog.insert(db, name, src)
-            self._mark_dirty(db, name)
             return self.spark.createDataFrame([(n,)], ["rows"])
         raise ValueError(f"cannot parse COPY: {stmt[:80]!r}")
 
@@ -2563,14 +2448,6 @@ class Engine:
             if dur_us >= 10_000_000:
                 self._flush_usage()
         self.clock_offset_us += dur_us - step * ticks
-        # TTL views freeze "now" at registration — a clock advance must
-        # re-register tables of TTL'd databases so expiry is re-evaluated
-        for cat in self._catalogs.values():
-            for db in cat.list_databases():
-                ttl = cat.database_options(db).get("ttl")
-                if ttl and str(ttl).upper() != "INF":
-                    for name in cat.list_tables(db):
-                        self._dirty.add((db, name))
         self._run_stream_jobs()
 
     def _run_stream_jobs(self) -> None:
@@ -2597,14 +2474,7 @@ class Engine:
             r["status"] = "Successed"  # sic — the reference's spelling
 
     def _drop_database_now(self, db: str) -> None:
-        for key in [k for k in self._registered if k[0] == db]:
-            view = self._registered.pop(key)
-            self.spark.catalog.dropTempView(view)
-            self._dirty.discard(key)
-        shutil.rmtree(self.catalog._db_path(db), ignore_errors=True)
-        self.catalog._render_poison = {
-            k for k in self.catalog._render_poison if k[0] != db
-        }
+        self.catalog.drop_database(db)
         self._hidden_dbs.discard(db)
 
     def _schedule_drop(self, kind: str, target: str, dur: str) -> None:
@@ -3429,14 +3299,13 @@ class Engine:
                     if fname not in schema.fields and fname not in schema.tags:
                         schema.fields[fname] = ftype
                         schema.schema_version += 1
-                self.catalog._save_schema(db, schema)
+                self.catalog.save_schema(db, schema)
             else:
                 schema = TskvTableSchema(
                     tenant=self.catalog.tenant, db=db, name=name, tags=tags, fields=fields
                 )
                 self.catalog.create_table(db, schema)
             out[name] = self.catalog.insert(db, name, df)
-            self._mark_dirty(db, name)
         return out
 
     # ------------------------------------------------------------- helpers
@@ -3517,6 +3386,12 @@ def _parse_with_options(withs: str) -> dict:
         for k, v1, v2 in pairs:
             opts[k.lower()] = v1 if v1 else v2
     return opts
+
+
+def _stream_view(cat: Catalog, db: str, st: StreamTable) -> DataFrame:
+    """The batch view of a stream table: its source table's columns."""
+    sdf = cat.read(db, st.src_table)
+    return sdf.select(*st.columns) if st.columns else sdf
 
 
 def _ext_view_name(name: str) -> str:

@@ -18,6 +18,20 @@ SF_SMOKE = "/root/testdata/sf0.001"
 os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 
 
+# The Hypothesis fuzzers run in the default gate as a seeded slice; the
+# full tier (SPARK_GRAFT_FULL_SLT=1) runs their whole budget, randomized.
+FULL_TIER = os.environ.get("SPARK_GRAFT_FULL_SLT", "") == "1"
+
+
+def fuzz_budget(full: int) -> dict:
+    """Hypothesis settings for a fuzz test with a full budget of ``full``
+    examples: all of them in the full tier, else a fifth of them (at least
+    two), derandomized so every default run tests the same examples."""
+    if FULL_TIER:
+        return {"max_examples": full}
+    return {"max_examples": max(2, full // 5), "derandomize": True, "database": None}
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="cnosdb_spark_tests", shuffle_partitions=8)

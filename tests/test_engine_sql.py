@@ -446,7 +446,7 @@ def test_update_delete_partition_pruned(eng, tmp_path):
         ('2024-01-01 00:00:01', 'a', 1.0), ('2024-01-02 00:00:01', 'a', 2.0),
         ('2024-01-03 00:00:01', 'a', 3.0)"""
     )
-    tbl = eng.catalog._table_path("public", "pp")
+    tbl = eng.catalog.table_path("public", "pp")
     def part_files(day):
         d = os.path.join(tbl, f"_tb={day}")
         return sorted(
@@ -485,7 +485,7 @@ def test_vnode_duration_bucket_granularity(eng):
         ('1992-03-01 00:00:01', 'a', 1.0), ('1994-07-01 00:00:01', 'a', 2.0),
         ('1998-11-30 00:00:01', 'b', 3.0)"""
     )
-    tbl = eng.catalog._table_path("ydb", "yt")
+    tbl = eng.catalog.table_path("ydb", "yt")
     dirs = sorted(e for e in os.listdir(tbl) if e.startswith("_tb="))
     assert dirs == ["_tb=1992", "_tb=1994", "_tb=1998"]
     # time-pruned UPDATE rewrites only the touched yearly bucket

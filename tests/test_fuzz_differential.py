@@ -19,7 +19,6 @@ handling), negative substr offsets, overflow-prone literals.
 from __future__ import annotations
 
 import math
-import os
 from datetime import date, datetime
 
 import pytest
@@ -28,13 +27,8 @@ from hypothesis import strategies as st
 
 from cnosdb_spark.engine import Engine
 
-# full tier only (round 11): Hypothesis fuzz is minutes of wall per run —
-# pushed out of the driver's bounded pytest window so a timeout there
-# can't mask a real failure. Run with SPARK_GRAFT_FULL_SLT=1 locally.
-pytestmark = pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_FULL_SLT", "") != "1",
-    reason="Hypothesis fuzz runs in the full tier (SPARK_GRAFT_FULL_SLT=1)",
-)
+from .conftest import fuzz_budget
+
 
 ROWS = [
     # (time, t0, f0 BIGINT, f1 DOUBLE, f2 BOOLEAN, f3 STRING)
@@ -172,7 +166,7 @@ def _run_both(feng, fduck, exprs: list[str]):
 
 
 @settings(
-    max_examples=25,
+    **fuzz_budget(25),
     deadline=None,
     suppress_health_check=[
         HealthCheck.too_slow,
@@ -187,7 +181,7 @@ def test_fuzz_numeric_and_bool(feng, fduck, e1, e2):
 
 
 @settings(
-    max_examples=25,
+    **fuzz_budget(25),
     deadline=None,
     suppress_health_check=[
         HealthCheck.too_slow,
@@ -202,7 +196,7 @@ def test_fuzz_string_and_numeric(feng, fduck, e1, e2):
 
 
 @settings(
-    max_examples=15,
+    **fuzz_budget(15),
     deadline=None,
     suppress_health_check=[
         HealthCheck.too_slow,
@@ -222,7 +216,7 @@ def test_fuzz_where_clause(feng, fduck, cond):
 
 
 _AGG_SETTINGS = settings(
-    max_examples=15,
+    **fuzz_budget(15),
     deadline=None,
     suppress_health_check=[
         HealthCheck.too_slow,

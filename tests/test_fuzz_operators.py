@@ -5,25 +5,15 @@ conservation."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cnosdb_spark.operators import curation, dedup, skew, zorder
 
-# full tier only (round 11): Hypothesis fuzz is minutes of wall per run —
-# pushed out of the driver's bounded pytest window so a timeout there
-# can't mask a real failure. Run with SPARK_GRAFT_FULL_SLT=1 locally.
-pytestmark = pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_FULL_SLT", "") != "1",
-    reason="Hypothesis fuzz runs in the full tier (SPARK_GRAFT_FULL_SLT=1)",
-)
-
+from .conftest import fuzz_budget
 
 _FUZZ = dict(
-    max_examples=12,
+    **fuzz_budget(12),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
@@ -660,7 +650,7 @@ def _lttb_scalar_reference(t, v, n_out):
     return kept
 
 
-@settings(max_examples=200, deadline=None)
+@settings(**fuzz_budget(200), deadline=None)
 @given(
     deltas=st.lists(st.integers(1, 9), min_size=2, max_size=60),
     vals=st.lists(st.integers(-50, 50), min_size=2, max_size=60),

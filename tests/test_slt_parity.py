@@ -588,7 +588,7 @@ VALUE_CHECKED = [
     ("function/common/statistical_agg/covar_samp.slt", 1.0),
     ("function/session.slt", 1.0),
     # round-4: the raw-count fast path applies the TTL retention filter and
-    # advance_clock re-registers TTL views (catalog._ttl_filter)
+    # advance_clock re-registers TTL views (catalog.ttl_filter)
     ("data_tests/data_ttl.slt", 1.0),
     # round-4: DataFusion log = log10; Float32-first signatures for
     # log(int)/atan2(int,int) (rewrite_f32_math); cancellation-stable
