@@ -3013,19 +3013,20 @@ class Engine:
         """OpenTSDB ingest (api/v1/opentsdb/write, http_service.rs:607;
         telnet `put` framing when tcp=True). Single implicit double field
         ``value`` per the reference parser."""
-        from .sources.open_tsdb import open_tsdb_to_tables
+        from .sources import points_to_tables
+        from .sources.open_tsdb import parse_open_tsdb, parse_open_tsdb_tcp
 
-        return self._write_schemaless(
-            open_tsdb_to_tables(self.spark, text, tcp=tcp), db
-        )
+        parse = parse_open_tsdb_tcp if tcp else parse_open_tsdb
+        return self._write_schemaless(points_to_tables(self.spark, parse(text)), db)
 
     def write_open_tsdb_json(self, text: str, db: str | None = None) -> dict[str, int]:
         """OpenTSDB HTTP JSON put ingest (api/v1/opentsdb/put JSON body —
         protocol_parser open_tsdb JSON branch)."""
-        from .sources.open_tsdb import open_tsdb_json_to_tables
+        from .sources import points_to_tables
+        from .sources.open_tsdb import parse_open_tsdb_json
 
         return self._write_schemaless(
-            open_tsdb_json_to_tables(self.spark, text), db
+            points_to_tables(self.spark, parse_open_tsdb_json(text)), db
         )
 
     def write_prometheus(
@@ -3035,10 +3036,11 @@ class Engine:
         http_service.rs:1190; remote_server.rs prom_write_request_to_lines):
         snappy-compressed protobuf WriteRequest → one table per metric
         (`__name__`), every label a tag, single double field ``value``."""
-        from .sources.prometheus import prom_to_tables
+        from .sources import points_to_tables
+        from .sources.prometheus import parse_remote_write
 
         return self._write_schemaless(
-            prom_to_tables(self.spark, data, compressed=compressed), db
+            points_to_tables(self.spark, parse_remote_write(data, compressed)), db
         )
 
     def sql_arrow(self, sql: str, db: str | None = None) -> bytes:
@@ -3249,26 +3251,22 @@ class Engine:
         """Elasticsearch-bulk JSON ingest (api/v1/es/_bulk,
         http_service.rs:691): command/fields pairs; _index names the
         table."""
-        from .sources.json_protocol import json_logs_to_tables, parse_es_log
+        from .sources import points_to_tables
+        from .sources.json_protocol import group_logs, parse_es_log
 
-        return self._write_schemaless(
-            json_logs_to_tables(
-                self.spark, parse_es_log(text), default_table, tag_keys
-            ),
-            db,
-        )
+        logs = group_logs(parse_es_log(text), default_table, tag_keys)
+        return self._write_schemaless(points_to_tables(self.spark, logs), db)
 
     def write_ndjson(
         self, text: str, db: str | None = None, table: str = "log",
         tag_keys: set[str] | None = None,
     ) -> dict[str, int]:
         """ndjson ingest: one flattened JSON object per line."""
-        from .sources.json_protocol import json_logs_to_tables, parse_ndjson
+        from .sources import points_to_tables
+        from .sources.json_protocol import group_logs, parse_ndjson
 
-        return self._write_schemaless(
-            json_logs_to_tables(self.spark, parse_ndjson(text), table, tag_keys),
-            db,
-        )
+        logs = group_logs(parse_ndjson(text), table, tag_keys)
+        return self._write_schemaless(points_to_tables(self.spark, logs), db)
 
     def _write_schemaless(self, tables: dict, db: str | None) -> dict[str, int]:
         """Shared schemaless write path: auto-create tables/columns, append

@@ -19,8 +19,6 @@ kept as ``pq_encode_expr`` and parity-pinned in tests.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -1063,6 +1061,10 @@ def _adc_score_joined(joined, m, kk, qid_type, query_id_col, refine, cid_type=No
     return joined.mapInArrow(_adc, s_schema)
 
 
+# salt width S of ivf_pq_topk_distributed's candidate join
+IVFPQ_SALT = 8
+
+
 def ivf_pq_topk_distributed(
     codes: DataFrame,
     queries: DataFrame,
@@ -1108,7 +1110,7 @@ def ivf_pq_topk_distributed(
     (query, candidate) pair still meets exactly once, so results are
     bit-identical (parity-pinned against the driver-side ivf_pq_topk).
     Reduce-side parallelism becomes n_centroids × S.
-    ``SPARK_GRAFT_IVFPQ_SALT`` (default 8) sizes S; at bench scale AQE
+    ``IVFPQ_SALT`` (8) sizes S; at bench scale AQE
     broadcasts the exploded query side anyway, so the salt only matters
     exactly when the join shuffles — the corpus-sized case it exists for.
 
@@ -1187,16 +1189,15 @@ def ivf_pq_topk_distributed(
 
     keep_vec = [F.col(vec_col).cast("array<double>").alias("_cv")] if refine else []
     cid_type = codes.schema[id_col].dataType  # preserve id type (no NULLing cast)
-    n_salt = max(1, int(os.environ.get("SPARK_GRAFT_IVFPQ_SALT", "8")))
     code_side = codes.select(
         F.col(id_col).alias("_cid"),
         F.col(cluster_col).cast("int").alias(cluster_col),
         code_col,
         *keep_vec,
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)).cast("int").alias("_salt"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(IVFPQ_SALT)).cast("int").alias("_salt"),
     )
     q_side = q.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(IVFPQ_SALT - 1)))
     )
     joined = (
         code_side.join(q_side, [cluster_col, "_salt"])

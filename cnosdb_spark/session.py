@@ -17,6 +17,12 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# input bytes per shuffle partition of a stateful stream
+# (stream_state_partitions) and per task of a spread small input
+# (spread_small_input)
+STREAM_TASK_BYTES = 256 * 1024
+SPREAD_TASK_BYTES = 64 * 1024
+
 
 def get_spark(
     app_name: str = "cnosdb_spark",
@@ -86,7 +92,7 @@ def get_spark(
         # interleaved min-of-4, OPTIMIZATION_r10.md §joins).
         .config(
             "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_STATIC_BCAST", "-1"),
+            "-1",
         )
         .config(
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
@@ -172,16 +178,14 @@ def stream_state_partitions(spark, input_bytes: int) -> int:
     every stateful operator materializes ONE state store PER shuffle
     partition PER micro-batch, each paying checkpoint/delta-file I/O even
     when its slice of state is empty. Sizing the partition count from the
-    staged input (``SPARK_GRAFT_STREAM_TASK_BYTES`` per partition,
-    default 256 KiB) keeps a small proof-arm input at a handful of
-    stores — measured 2.2× on the asof stream arm at sf0.1 — while any
+    staged input (``STREAM_TASK_BYTES``, 256 KiB, per partition) keeps a
+    small proof-arm input at a handful of stores — measured 2.2× on the asof stream arm at sf0.1 — while any
     production-sized input saturates the session's configured shuffle
     parallelism unchanged (the cap, not the floor, binds). This is the
     streaming analogue of :func:`spread_small_input`: a structural no-op
     at scale."""
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    task_bytes = int(os.environ.get("SPARK_GRAFT_STREAM_TASK_BYTES", "262144"))
-    return max(1, min(n_shuffle, -(-int(input_bytes) // max(task_bytes, 1))))
+    return max(1, min(n_shuffle, -(-int(input_bytes) // STREAM_TASK_BYTES)))
 
 
 @contextmanager
@@ -231,7 +235,7 @@ def spread_small_input(df, key: str | None = None):
     it never does.
 
     The target is ``defaultParallelism`` CAPPED by a per-task input-bytes
-    floor (``SPARK_GRAFT_SPREAD_TASK_BYTES``, default 64 KiB, from the
+    floor (``SPREAD_TASK_BYTES``, 64 KiB, from the
     optimizer's size estimate — no action): fanning a tiny corpus out to
     every core makes each Python worker re-pay interpreter/Arrow setup
     for crumbs of work — the round-10 scaling run measured the 8-core
@@ -255,10 +259,7 @@ def spread_small_input(df, key: str | None = None):
         probed = (n, size)
         _lru_put(_SPREAD_PROBE_CACHE, cache_key, probed)
     n, size = probed
-    task_bytes = int(os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", "65536"))
-    target = min(
-        sc.defaultParallelism, max(1, -(-size // max(task_bytes, 1)))
-    )
+    target = min(sc.defaultParallelism, max(1, -(-size // SPREAD_TASK_BYTES)))
     if n >= target or target <= 1:
         return df
     from pyspark.sql import functions as F

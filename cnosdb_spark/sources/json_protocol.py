@@ -14,10 +14,6 @@ from __future__ import annotations
 import json
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, types as T
-
-from . import batch_df
-
 
 def flatten_json(name: str, value) -> dict:
     """Nested objects/arrays → flat dotted keys (parser.rs:71-103: arrays
@@ -73,45 +69,24 @@ def _coerce_time(v) -> datetime:
     raise ValueError(f"invalid time format: {v!r}")
 
 
-def json_logs_to_tables(
-    spark: SparkSession,
+def group_logs(
     logs: list[dict],
     default_table: str = "log",
     tag_keys: set[str] | None = None,
-) -> dict[str, tuple[DataFrame, set[str]]]:
-    """Flattened logs → {table: (DataFrame, tag_keys)}. Dotted keys become
-    column names (schemaless, like line protocol); non-time scalars map
-    int→bigint, float→double, bool→boolean, str→string. String fields
-    listed in ``tag_keys`` become tags."""
-    tag_keys = tag_keys or set()
-    by_table: dict[str, list[dict]] = {}
+) -> dict[str, tuple[list[dict], set[str]]]:
+    """Flattened logs → the shared {table: (rows, tag_keys)} point shape.
+    Dotted keys become column names (schemaless, like line protocol); a
+    log's ``_table`` (the ES ``_index``) names its table, else
+    ``default_table``; keys listed in ``tag_keys`` become tags. A log
+    without ``time`` is stamped with the current time."""
+    tag_keys = set(tag_keys or ())
+    out: dict[str, tuple[list[dict], set[str]]] = {}
     for log in logs:
-        table = log.pop("_table", None) or default_table
         row = dict(log)
+        table = row.pop("_table", None) or default_table
         row["time"] = (
             _coerce_time(row["time"]) if "time" in row
             else datetime.now(timezone.utc).replace(tzinfo=None)
         )
-        by_table.setdefault(table, []).append(row)
-    out = {}
-    for table, rows in by_table.items():
-        keys: list[str] = ["time"]
-        types: dict[str, type] = {}
-        for r in rows:
-            for k, v in r.items():
-                if k not in keys:
-                    keys.append(k)
-                if k != "time" and v is not None:
-                    types[k] = bool if isinstance(v, bool) else type(v)
-        fields = [T.StructField("time", T.TimestampType(), False)]
-        for k in keys[1:]:
-            py = types.get(k, str)
-            spark_t = {int: T.LongType(), float: T.DoubleType(),
-                       bool: T.BooleanType(), str: T.StringType()}[py]
-            fields.append(T.StructField(k, spark_t, True))
-        data = [tuple(r.get(k) for k in keys) for r in rows]
-        out[table] = (
-            batch_df(spark, data, T.StructType(fields)),
-            {k for k in tag_keys if k in keys},
-        )
+        out.setdefault(table, ([], tag_keys))[0].append(row)
     return out

@@ -5,12 +5,14 @@ the api/v1/write endpoint main/src/http/http_service.rs:484). Schemaless
 writes auto-create tables/columns; tags are strings, fields are
 float/int/uint/bool/string, timestamp is an integer suffix.
 
-Spark-first: parse on the driver for small payloads (HTTP request
-bodies, ``lines_to_tables``) or fully distributed for bulk backfills
-(``lines_to_tables_distributed``: executor-side schema discovery +
-mapInPandas parse — raw text never reaches the driver); output is one
-DataFrame per measurement with columns time + tags + fields ready for
-Catalog.insert (which performs the schema merge / auto-create).
+Requests (HTTP bodies) parse on the driver: ``parse_lines_meta`` yields
+the shared ``{measurement: (rows, tag_keys)}`` point shape and
+``lines_to_tables`` turns it into one DataFrame per measurement through
+``sources.points_to_tables`` — columns time + tags + fields, ready for
+Catalog.insert (which performs the schema merge / auto-create). Bulk
+backfills parse on executors (``lines_to_tables_single_pass``: raw text
+never reaches the driver) under the same schema rule, so the driver path
+is the parity reference for the bulk path.
 """
 
 from __future__ import annotations
@@ -18,10 +20,10 @@ from __future__ import annotations
 import re
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import NS_RESIDUE_COL
-from . import batch_df
+from . import _KIND_OF, _SPARK_TYPES, _resolve_discovered, points_to_tables
 
 _UNESCAPE = re.compile(r"\\([ ,=])")
 
@@ -146,197 +148,16 @@ def parse_lines_meta(
     return out
 
 
-def lines_to_dfs(spark: SparkSession, text: str, precision: str = "ns") -> dict[str, DataFrame]:
-    """Line protocol → {measurement: DataFrame}."""
-    return {k: df for k, (df, _tags) in lines_to_tables(spark, text, precision).items()}
-
-
 def lines_to_tables(
     spark: SparkSession, text: str, precision: str = "ns"
 ) -> dict[str, tuple[DataFrame, set[str]]]:
-    """Line protocol → {measurement: (DataFrame, tag_keys)}. Schema is
-    inferred per measurement from the union of keys (schemaless semantics)."""
-    parsed = parse_lines_meta(text, precision)
-    out = {}
-    for name, (rows, tagkeys) in parsed.items():
-        seen: list[str] = []
-        types: dict[str, type] = {}
-        for r in rows:
-            for k, v in r.items():
-                if k not in seen:
-                    seen.append(k)
-                if not isinstance(v, bool) and isinstance(v, (int, float, str)):
-                    types[k] = type(v)
-                elif isinstance(v, bool):
-                    types[k] = bool
-        # column order = time, tags sorted, fields sorted — the reference
-        # creates the table from the whole write batch with name-ordered
-        # columns per group (sqlancer/repeat_write.slt:24-32: f0 precedes
-        # f1 although f1 arrived first)
-        keys = (
-            ["time"]
-            + sorted(k for k in seen if k in tagkeys)
-            + sorted(k for k in seen if k != "time" and k not in tagkeys)
-        )
-        fields = [T.StructField("time", T.TimestampType(), False)]
-        for k in keys[1:]:
-            py = types.get(k, str)
-            spark_t = {int: T.LongType(), float: T.DoubleType(), bool: T.BooleanType(), str: T.StringType()}[py]
-            fields.append(T.StructField(k, spark_t, True))
-        schema = T.StructType(fields)
-        data = [tuple(r.get(k) for k in keys) for r in rows]
-        out[name] = (batch_df(spark, data, schema), tagkeys)
-    return out
+    """Line protocol → {measurement: (DataFrame, tag_keys)}, the driver
+    path of ``Engine.write_lines`` (schemaless: the schema is the union of
+    keys, typed by ``sources.points_to_tables``)."""
+    return points_to_tables(spark, parse_lines_meta(text, precision))
 
 
 # ----------------------------------------------------- distributed (bulk)
-_SCHEMA_KIND_ORDER = {"bool": 0, "int": 1, "float": 2, "str": 3}
-
-
-def discover_line_schema(lines, line_col: str = "value", precision: str = "ns"):
-    """Pass 1 of the bulk path: distributed schema discovery over a
-    DataFrame of raw line-protocol strings (e.g. ``spark.read.text`` over
-    a backfill dump). Each partition parses its lines and emits the
-    DISTINCT (measurement, key, section, type) tuples; one small keyed
-    aggregation resolves column types. Returns
-    {measurement: (ordered_keys, tag_keys, {key: python_type})}.
-
-    Type conflicts across shards resolve WIDEST-WINS (bool < int < float
-    < str) — deterministic under any partitioning, unlike the driver
-    helper's last-line-wins (documented divergence; conflicting writes
-    are schema errors upstream in the reference anyway). A key seen as a
-    tag in one line and a field in another resolves TAG-WINS (tags are
-    strings, so the type also widens to str) — again deterministic,
-    where the driver helper keeps the last line's role."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F, types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("m", T.StringType()),
-            T.StructField("key", T.StringType()),
-            T.StructField("is_tag", T.BooleanType()),
-            T.StructField("kind", T.StringType()),
-        ]
-    )
-
-    def _discover(batches):
-        for pdf in batches:
-            seen = set()
-            for line in pdf[line_col]:
-                line = (line or "").strip()
-                if not line or line.startswith("#"):
-                    continue
-                for m, (rows, tagkeys) in parse_lines_meta(line, precision).items():
-                    for r in rows:
-                        for k, v in r.items():
-                            # NS_RESIDUE_COL rides along as an int field —
-                            # dropping it here would lose ns-distinctness
-                            # under the LWW merge (driver path keeps it)
-                            if k == "time":
-                                continue
-                            kind = (
-                                "bool" if isinstance(v, bool)
-                                else "int" if isinstance(v, int)
-                                else "float" if isinstance(v, float)
-                                else "str"
-                            )
-                            seen.add((m, k, k in tagkeys, kind))
-            yield pd.DataFrame(
-                list(seen), columns=["m", "key", "is_tag", "kind"]
-            )
-
-    dist = lines.mapInPandas(_discover, out_schema).distinct().collect()
-    return _resolve_discovered(
-        (r["m"], r["key"], bool(r["is_tag"]), r["kind"]) for r in dist
-    )
-
-
-def _resolve_discovered(tuples):
-    """Shared schema resolution for the bulk paths: fold distinct
-    (measurement, key, is_tag, kind) observations into
-    {m: (ordered_keys, tag_keys, {key: python_type})} — widest-wins on
-    type conflicts, tag-wins (and str) on tag/field role conflicts;
-    deterministic under any observation order."""
-    schemas: dict = {}
-    for m, key, is_tag, kind in tuples:
-        keys = schemas.setdefault(m, {})
-        prev = keys.get(key)
-        if prev is not None:
-            kind = max(prev[1], kind, key=lambda k: _SCHEMA_KIND_ORDER[k])
-            # tag-wins on a tag/field role conflict (order-independent);
-            # tags are strings, so the type widens to str alongside
-            is_tag = prev[0] or is_tag
-        if is_tag:
-            kind = "str"
-        keys[key] = (is_tag, kind)
-    out = {}
-    for m, keys in schemas.items():
-        tagk = {k for k, (is_tag, _) in keys.items() if is_tag}
-        ordered = (
-            ["time"]
-            + sorted(k for k in keys if k in tagk)
-            + sorted(k for k in keys if k not in tagk)
-        )
-        py = {k: {"bool": bool, "int": int, "float": float, "str": str}[kind]
-              for k, (_, kind) in keys.items()}
-        out[m] = (ordered, tagk, py)
-    return out
-
-
-def lines_to_tables_distributed(
-    spark, lines, line_col: str = "value", precision: str = "ns"
-):
-    """Bulk line-protocol ingest, fully distributed — the 100 TB backfill
-    path the driver-side ``lines_to_tables`` (HTTP request bodies) is not:
-    raw lines stay on executors end to end. Two passes per the schemaless
-    contract: distributed schema discovery (``discover_line_schema``, one
-    small shuffle of distinct key tuples), then one ``mapInPandas`` parse
-    per measurement into its fixed schema (a narrow map — lines for other
-    measurements are skipped, so m measurements cost m scans of the raw
-    text, the classic trade against a driver-side schema merge).
-
-    Returns the same {measurement: (DataFrame, tag_keys)} shape as
-    ``lines_to_tables``; parity with the driver path is pytest-pinned."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    schemas = discover_line_schema(lines, line_col, precision)
-    spark_t = {bool: T.BooleanType(), int: T.LongType(),
-               float: T.DoubleType(), str: T.StringType()}
-    out = {}
-    for m, (ordered, tagkeys, py) in schemas.items():
-        fields = [T.StructField("time", T.TimestampType(), False)] + [
-            T.StructField(k, spark_t[py[k]], True) for k in ordered[1:]
-        ]
-        schema = T.StructType(fields)
-
-        def _parse(batches, _m=m, _ordered=tuple(ordered), _py=dict(py)):
-            for pdf in batches:
-                rows = []
-                for line in pdf[line_col]:
-                    line = (line or "").strip()
-                    if not line or line.startswith("#"):
-                        continue
-                    for mm, (rws, _tk) in parse_lines_meta(line, precision).items():
-                        if mm != _m:
-                            continue
-                        for r in rws:
-                            rows.append(
-                                tuple(
-                                    _coerce_kind(r.get(k), _py.get(k))
-                                    if k != "time" else r["time"]
-                                    for k in _ordered
-                                )
-                            )
-                yield pd.DataFrame(rows, columns=list(_ordered))
-
-        out[m] = (lines.mapInPandas(_parse, schema), set(tagkeys))
-    return out
-
-
 def lines_to_tables_single_pass(
     spark,
     lines,
@@ -344,23 +165,23 @@ def lines_to_tables_single_pass(
     precision: str = "ns",
     staging_path: str | None = None,
 ):
-    """Single-pass variant of ``lines_to_tables_distributed`` for
-    many-measurement backfills: the two-pass path re-scans the RAW text
-    once per measurement (m measurements → m parses of every byte,
-    documented trade there); here the text is parsed exactly ONCE into a
-    long-format point table (uid, m, time, key, kind, is_tag, value_str)
-    that is either persisted in memory or — with ``staging_path`` —
-    written to parquet PARTITIONED BY measurement, so each measurement's
-    wide table reads only its own partition (file pruning). Schema
-    resolution reuses the exact widest-wins / tag-wins fold of the
-    two-pass path (``_resolve_discovered``); the wide pivot is one
+    """Bulk line-protocol ingest, fully distributed — the backfill path
+    the driver-side ``lines_to_tables`` (HTTP request bodies) is not: raw
+    lines stay on executors end to end. The text is parsed exactly ONCE
+    into a long-format point table (uid, m, time, key, kind, is_tag,
+    value_str) that is either persisted in memory or — with
+    ``staging_path`` — written to parquet PARTITIONED BY measurement, so
+    each measurement's wide table reads only its own partition (file
+    pruning). Schema resolution is the schemaless rule of the driver path
+    (``sources._resolve_discovered``: widest-wins, tag-wins) over the
+    distinct (m, key, is_tag, kind) tuples; the wide pivot is one
     groupBy(uid) per measurement over already-parsed rows, and values are
-    re-materialized through the same coercion semantics as
-    ``_coerce_kind`` (bool→int/float via CASE on the recorded kind, so
-    'true' never hits a lossy string→number cast).
+    re-materialized with the semantics of ``sources._coerce_kind``
+    (bool→int/float via CASE on the recorded kind, so 'true' never hits a
+    lossy string→number cast).
 
-    Returns the same {measurement: (DataFrame, tag_keys)} shape;
-    parity with the two-pass path is pytest-pinned."""
+    Returns the same {measurement: (DataFrame, tag_keys)} shape as
+    ``lines_to_tables``; parity with it is pytest-pinned."""
     import pandas as pd
 
     from pyspark import TaskContext
@@ -395,12 +216,7 @@ def lines_to_tables_single_pass(
                         for k, v in r.items():
                             if k == "time":
                                 continue
-                            kind = (
-                                "bool" if isinstance(v, bool)
-                                else "int" if isinstance(v, int)
-                                else "float" if isinstance(v, float)
-                                else "str"
-                            )
+                            kind = _KIND_OF[type(v)]
                             vs = (
                                 ("true" if v else "false")
                                 if isinstance(v, bool)
@@ -419,7 +235,7 @@ def lines_to_tables_single_pass(
         # explicit schema so the declared string type wins over partition
         # type INFERENCE, or numeric-looking names ('123', '01') come back
         # as integers, changing the dict's key type and colliding '01'
-        # with '1' (diverging from the in-memory and two-pass paths,
+        # with '1' (diverging from the in-memory and driver paths,
         # where m stays a string)
         long = spark.read.schema(long_schema).parquet(staging_path)
     else:
@@ -432,8 +248,6 @@ def lines_to_tables_single_pass(
         (r["m"], r["key"], bool(r["is_tag"]), r["kind"]) for r in disc
     )
 
-    spark_t = {bool: T.BooleanType(), int: T.LongType(),
-               float: T.DoubleType(), str: T.StringType()}
     out = {}
     for m, (ordered, tagkeys, py) in schemas.items():
         sub = long.filter(F.col("m") == m)
@@ -460,26 +274,7 @@ def lines_to_tables_single_pass(
             aggs.append(F.max(cast).alias(k))
         wide = sub.groupBy("_uid").agg(*aggs).drop("_uid").select(
             F.col("time").cast(T.TimestampType()),
-            *[F.col(k).cast(spark_t[py[k]]) for k in ordered[1:]],
+            *[F.col(k).cast(_SPARK_TYPES[py[k]]) for k in ordered[1:]],
         )
         out[m] = (wide, set(tagkeys))
     return out
-
-
-def _coerce_kind(v, py):
-    """Widen a parsed value to the resolved column type (int → float when
-    another shard saw floats; anything → str when strings won)."""
-    if v is None or py is None:
-        return v
-    if isinstance(v, bool):
-        # bool < int < float widening makes both conflicts reachable
-        # (one shard writes v=true, another v=3i or v=3.5)
-        if py is int:
-            return int(v)
-        if py is float:
-            return float(v)
-    if py is float and isinstance(v, int) and not isinstance(v, bool):
-        return float(v)
-    if py is str and not isinstance(v, str):
-        return str(v).lower() if isinstance(v, bool) else str(v)
-    return v

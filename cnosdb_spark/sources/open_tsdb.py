@@ -13,11 +13,8 @@ normalized to µs — the engine's native precision.
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timedelta, timezone
-
-from pyspark.sql import DataFrame, SparkSession, types as T
-
-from . import batch_df
 
 OPEN_TSDB_DEFAULT_FIELD = "value"
 
@@ -105,21 +102,6 @@ def _parse_point(tokens, lineno, out, default_time_us):
     rows.append(row)
 
 
-def open_tsdb_to_tables(
-    spark: SparkSession, text: str, tcp: bool = False
-) -> dict[str, tuple[DataFrame, set[str]]]:
-    parsed = (parse_open_tsdb_tcp if tcp else parse_open_tsdb)(text)
-    out = {}
-    for name, (rows, tagkeys) in parsed.items():
-        keys = ["time", OPEN_TSDB_DEFAULT_FIELD, *sorted(tagkeys)]
-        fields = [T.StructField("time", T.TimestampType(), False),
-                  T.StructField(OPEN_TSDB_DEFAULT_FIELD, T.DoubleType(), True)]
-        fields += [T.StructField(k, T.StringType(), True) for k in sorted(tagkeys)]
-        data = [tuple(r.get(k) for k in keys) for r in rows]
-        out[name] = (batch_df(spark, data, T.StructType(fields)), tagkeys)
-    return out
-
-
 def parse_open_tsdb_json(
     text: str,
 ) -> dict[str, tuple[list[dict], set[str]]]:
@@ -128,9 +110,6 @@ def parse_open_tsdb_json(
     point object or a list of {metric, timestamp, value, tags{}}.
     Timestamps go through the same magnitude heuristic as the text
     protocol."""
-    import json
-    from datetime import datetime, timedelta
-
     data = json.loads(text)
     if isinstance(data, dict):
         data = [data]
@@ -147,19 +126,4 @@ def parse_open_tsdb_json(
         ts_us = _ts_to_micros(int(pt["timestamp"]))
         row["time"] = datetime(1970, 1, 1) + timedelta(microseconds=ts_us)
         rows.append(row)
-    return out
-
-
-def open_tsdb_json_to_tables(
-    spark: SparkSession, text: str
-) -> dict[str, tuple[DataFrame, set[str]]]:
-    parsed = parse_open_tsdb_json(text)
-    out = {}
-    for name, (rows, tagkeys) in parsed.items():
-        keys = ["time", OPEN_TSDB_DEFAULT_FIELD, *sorted(tagkeys)]
-        fields = [T.StructField("time", T.TimestampType(), False),
-                  T.StructField(OPEN_TSDB_DEFAULT_FIELD, T.DoubleType(), True)]
-        fields += [T.StructField(k, T.StringType(), True) for k in sorted(tagkeys)]
-        data = [tuple(r.get(k) for k in keys) for r in rows]
-        out[name] = (batch_df(spark, data, T.StructType(fields)), tagkeys)
     return out

@@ -25,10 +25,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession, types as T
-
-from . import batch_df
-
 METRIC_NAME_LABEL = "__name__"
 METRIC_SAMPLE_COLUMN_NAME = "value"
 DEFAULT_PROM_TABLE_NAME = "prom_metric_not_specified"
@@ -390,21 +386,4 @@ def parse_remote_write(
             # scales ×1e6 to ns, our native precision is µs
             row["time"] = datetime(1970, 1, 1) + timedelta(milliseconds=sts_ms)
             rows.append(row)
-    return out
-
-
-def prom_to_tables(
-    spark: SparkSession, data: bytes, compressed: bool = True
-) -> dict[str, tuple[DataFrame, set[str]]]:
-    parsed = parse_remote_write(data, compressed)
-    out = {}
-    for name, (rows, tagkeys) in parsed.items():
-        keys = ["time", METRIC_SAMPLE_COLUMN_NAME, *sorted(tagkeys)]
-        fields = [
-            T.StructField("time", T.TimestampType(), False),
-            T.StructField(METRIC_SAMPLE_COLUMN_NAME, T.DoubleType(), True),
-        ]
-        fields += [T.StructField(k, T.StringType(), True) for k in sorted(tagkeys)]
-        data_rows = [tuple(r.get(k) for k in keys) for r in rows]
-        out[name] = (batch_df(spark, data_rows, T.StructType(fields)), tagkeys)
     return out

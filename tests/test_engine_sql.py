@@ -288,6 +288,29 @@ def test_write_lines_schemaless(eng):
     assert rows[0]["humidity"] == 40.0
 
 
+def test_write_lines_type_conflicts_in_one_request(eng):
+    """A key whose kind differs between lines of one request resolves
+    widest-wins (bool < int < float < str) and tag-wins (as a string),
+    whatever the line order, and every value is stored coerced — the
+    last-line-wins rule typed the column from the last line and the
+    executor rejected the other lines' values."""
+    assert eng.write_lines("m v=3i 1000\nm v=4.5 2000") == {"m": 2}
+    assert eng.catalog.get_schema("public", "m").fields == {"v": "double"}
+    rows = eng.sql("SELECT v FROM m ORDER BY time").collect()
+    assert [r["v"] for r in rows] == [3.0, 4.5]
+
+    assert eng.write_lines("mb v=true 1\nmb v=3i 2") == {"mb": 2}
+    assert eng.catalog.get_schema("public", "mb").fields == {"v": "bigint"}
+    rows = eng.sql("SELECT v FROM mb ORDER BY time").collect()
+    assert [r["v"] for r in rows] == [1, 3]
+
+    assert eng.write_lines("mt,t=a v=1 1\nmt t=7i,v=2 2") == {"mt": 2}
+    schema = eng.catalog.get_schema("public", "mt")
+    assert schema.tags == ["t"] and schema.fields == {"v": "double"}
+    rows = eng.sql("SELECT t FROM mt ORDER BY time").collect()
+    assert [r["t"] for r in rows] == ["a", "7"]
+
+
 def test_gapfill_sql_locf_interpolate(eng):
     """time_window_gapfill + locf/interpolate SQL surface
     (cases/function/gapfill-style queries)."""

@@ -510,14 +510,16 @@ _BULK_LINE = st.tuples(
 @given(lines=st.lists(_BULK_LINE, min_size=1, max_size=10),
        nparts=st.integers(1, 4))
 def test_fuzz_lines_to_tables_distributed_conflicts(spark, lines, nparts):
-    """Adversarial bulk-ingest fuzz: mixed measurements with the same key
-    appearing as bool/int/float/str AND as tag-vs-field across shards,
-    under arbitrary partitionings. The distributed path must resolve
-    widest-wins / tag-wins deterministically and coerce every stored
-    value per the documented rules — checked against an independent
-    pure-Python reference that shares only the single-line parser."""
+    """Adversarial ingest fuzz: mixed measurements with the same key
+    appearing as bool/int/float/str AND as tag-vs-field between lines.
+    The driver path (one request body) and the distributed single-pass
+    path (arbitrary partitionings) must both resolve widest-wins /
+    tag-wins deterministically and coerce every stored value per the
+    documented rules — checked against an independent pure-Python
+    reference that shares only the single-line parser."""
     from cnosdb_spark.sources.line_protocol import (
-        lines_to_tables_distributed,
+        lines_to_tables,
+        lines_to_tables_single_pass,
         parse_lines_meta,
     )
 
@@ -545,7 +547,7 @@ def test_fuzz_lines_to_tables_distributed_conflicts(spark, lines, nparts):
 
     # pure-python reference: parse each line with the shared single-line
     # parser, then fold the documented widest-wins / tag-wins resolution
-    # and coercion rules independently of the distributed code
+    # and coercion rules independently of the engine code
     parsed = []  # (m, row_dict, tagkeys)
     for ln in text:
         for m, (rows, tagkeys) in parse_lines_meta(ln, "ns").items():
@@ -594,10 +596,8 @@ def test_fuzz_lines_to_tables_distributed_conflicts(spark, lines, nparts):
     lines_df = spark.createDataFrame(
         [(ln,) for ln in text], ["value"]
     ).repartition(nparts)
-    from cnosdb_spark.sources.line_protocol import lines_to_tables_single_pass
-
     for label, tables in (
-        ("two_pass", lines_to_tables_distributed(spark, lines_df)),
+        ("driver", lines_to_tables(spark, "\n".join(text))),
         ("single_pass", lines_to_tables_single_pass(spark, lines_df)),
     ):
         assert set(tables) == set(want), label

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from cnosdb_spark.operators import dedup, similarity, text
 from cnosdb_spark.operators.multimodal import extract_features, synthetic_media
-from cnosdb_spark.sources.line_protocol import lines_to_dfs, parse_lines
+from cnosdb_spark.sources.line_protocol import lines_to_tables, parse_lines
 
 
 @pytest.fixture()
@@ -298,8 +298,10 @@ def test_line_protocol_escapes_and_df(spark):
     parsed = parse_lines(lp)
     assert "wea,ther" in parsed
     assert parsed["wea,ther"][0]["tag key"] == "va=lue"
-    dfs = lines_to_dfs(spark, 'm,t=a f=1.5,g=2i 1000000000\nm,t=b f=2.5 2000000000\n')
-    rows = dfs["m"].orderBy("time").collect()
+    tables = lines_to_tables(spark, 'm,t=a f=1.5,g=2i 1000000000\nm,t=b f=2.5 2000000000\n')
+    df, tags = tables["m"]
+    assert tags == {"t"}
+    rows = df.orderBy("time").collect()
     assert rows[0]["f"] == 1.5 and rows[0]["g"] == 2
     assert rows[1]["g"] is None  # schemaless union of fields
 

@@ -120,6 +120,77 @@ def test_json_write_path(eng):
     assert eng.sql("SELECT v FROM ndj").collect()[0]["v"] == 1.5
 
 
+def test_ingest_protocol_roundtrip_all_entry_points(eng):
+    """Small mirror of the ``ingest_protocol_roundtrip`` registry row: the
+    same 4 points (2 series) through each of the six ``Engine.write_*``
+    entry points read back as the same (time, tags, value) rows, with
+    user_id/event_type as TAGs and value as a FIELD in every table.
+    Times are whole milliseconds, the precision of the Prometheus wire
+    format."""
+    import json
+    from datetime import datetime, timedelta
+
+    from cnosdb_spark.sources.prometheus import encode_write_request, snappy_compress
+
+    t0 = 1_700_000_000_000_000  # µs
+    points = [  # (µs, user_id, event_type, value)
+        (t0, "1", "click", 1.5),
+        (t0 + 1_000, "2", "view", -2.25),
+        (t0 + 2_000, "1", "click", 3.0),
+        (t0 + 3_000, "2", "view", 4.125),
+    ]
+    eng.write_lines("\n".join(
+        f"ev_lp,user_id={u},event_type={e} value={v!r} {us * 1000}"
+        for us, u, e, v in points
+    ))
+    eng.write_open_tsdb("\r\n".join(
+        f"put ev_tsdb {us} {v!r} user_id={u} event_type={e}"
+        for us, u, e, v in points
+    ), tcp=True)
+    eng.write_open_tsdb_json(json.dumps([
+        {"metric": "ev_tsdbj", "timestamp": us, "value": v,
+         "tags": {"user_id": u, "event_type": e}}
+        for us, u, e, v in points
+    ]))
+    docs = [
+        {"time": us * 1000, "user_id": u, "event_type": e, "value": v}
+        for us, u, e, v in points
+    ]
+    tags = {"user_id", "event_type"}
+    eng.write_es_log("\n".join(
+        '{"index": {"_index": "ev_es"}}\n' + json.dumps(d) for d in docs
+    ), tag_keys=tags)
+    eng.write_ndjson(
+        "\n".join(json.dumps(d) for d in docs), table="ev_nd", tag_keys=tags
+    )
+    series: dict = {}
+    for us, u, e, v in points:
+        series.setdefault((u, e), {
+            "labels": {"__name__": "ev_prom", "user_id": u, "event_type": e},
+            "samples": [],
+        })["samples"].append((v, us // 1000))
+    eng.write_prometheus(snappy_compress(encode_write_request(list(series.values()))))
+
+    want = [
+        (datetime(1970, 1, 1) + timedelta(microseconds=us), u, e, v)
+        for us, u, e, v in points
+    ]
+    for table in ("ev_lp", "ev_tsdb", "ev_tsdbj", "ev_es", "ev_nd", "ev_prom"):
+        rows = eng.sql(
+            f"SELECT time, user_id, event_type, value FROM {table} ORDER BY time"
+        ).collect()
+        assert [tuple(r) for r in rows] == want, table
+        roles = {r["column_name"]: r["column_type"]
+                 for r in eng.sql(f"DESC TABLE {table}").collect()}
+        assert roles["user_id"] == roles["event_type"] == "TAG", table
+        assert roles["value"] == "FIELD", table
+    # auto-created JSON tables order their columns by name — time, tags,
+    # fields — as line protocol does, not by arrival order
+    assert [r["column_name"] for r in eng.sql("DESC TABLE ev_nd").collect()] == [
+        "time", "event_type", "user_id", "value"
+    ]
+
+
 def test_prometheus_wire_codecs():
     """Pure codec round-trips: snappy literals+copies, protobuf varint/
     fixed64/length-delimited (prometheus.rs message layout)."""
@@ -365,16 +436,27 @@ def test_prometheus_remote_read(eng):
         eng.PROM_READ_MAX_ROWS = orig
 
 
-def test_lines_to_tables_distributed_parity(spark):
-    """The bulk executor-side parse must produce the same tables the
-    driver-side helper does (same rows, tags, schema) — here on a corpus
-    without cross-shard type conflicts, where the two paths' type rules
-    coincide."""
+def _driver_and_bulk(spark, text_lines, nparts):
+    """The same lines through the driver path (one request body) and the
+    executor-side bulk path (``nparts`` shards)."""
     from cnosdb_spark.sources.line_protocol import (
         lines_to_tables,
-        lines_to_tables_distributed,
+        lines_to_tables_single_pass,
     )
 
+    lines_df = spark.createDataFrame(
+        [(ln,) for ln in text_lines], ["value"]
+    ).repartition(nparts)
+    return [
+        ("driver", lines_to_tables(spark, "\n".join(text_lines))),
+        ("single_pass", lines_to_tables_single_pass(spark, lines_df)),
+    ]
+
+
+def test_lines_to_tables_distributed_parity(spark):
+    """The bulk executor-side parse must produce the same tables the
+    driver-side helper does (same rows, tags, schema, column order) on a
+    corpus without type conflicts."""
     text_lines = [
         'weather,city=sf,station=a temp=13.5,hum=71i 1700000000000000000',
         'weather,city=la temp=21.0 1700000000500000000',
@@ -386,49 +468,37 @@ def test_lines_to_tables_distributed_parity(spark):
         '# a comment line',
         '',
     ]
-    driver = lines_to_tables(spark, "\n".join(text_lines))
-    lines_df = spark.createDataFrame(
-        [(ln,) for ln in text_lines], ["value"]
-    ).repartition(4)
-    dist = lines_to_tables_distributed(spark, lines_df)
+    (_, driver), (_, dist) = _driver_and_bulk(spark, text_lines, 4)
 
     assert set(driver) == set(dist) == {"weather", "cpu"}
     for m in driver:
         ddf, dtags = driver[m]
         xdf, xtags = dist[m]
         assert dtags == xtags
-        assert dict(ddf.dtypes) == dict(xdf.dtypes)
-        key = [c for c in ddf.columns]
+        assert ddf.dtypes == xdf.dtypes
         a = sorted(tuple(r) for r in ddf.collect())
         b = sorted(tuple(r) for r in xdf.collect())
         assert a == b
 
 
 def test_distributed_schema_widens_across_shards(spark):
-    """Cross-shard type conflict: int in one shard, float in another →
-    widest-wins (float column), values coerced — deterministic under any
-    partitioning (the driver helper is last-line-wins; divergence is
-    documented)."""
-    from cnosdb_spark.sources.line_protocol import lines_to_tables_distributed
-
-    lines_df = spark.createDataFrame(
-        [("m1 v=3i 1700000000000000000",),
-         ("m1 v=4.5 1700000001000000000",)],
-        ["value"],
-    ).repartition(2)
-    (df, tags), = lines_to_tables_distributed(spark, lines_df).values()
-    assert dict(df.dtypes)["v"] == "double"
-    assert sorted(r["v"] for r in df.collect()) == [3.0, 4.5]
+    """Type conflict between lines: int in one, float in another →
+    widest-wins (float column), values coerced — in one request body and
+    across shards alike, deterministic under any partitioning."""
+    text_lines = ["m1 v=3i 1700000000000000000", "m1 v=4.5 1700000001000000000"]
+    for label, tables in _driver_and_bulk(spark, text_lines, 2):
+        (df, tags), = tables.values()
+        assert dict(df.dtypes)["v"] == "double", label
+        assert sorted(r["v"] for r in df.collect()) == [3.0, 4.5], label
 
 
-def test_single_pass_parity_with_two_pass(spark, tmp_path):
-    """The one-parse long-format path must produce the same tables as the
-    two-pass (schema-discovery + per-measurement re-scan) path — across
-    multiple measurements, cross-shard type conflicts (int/float,
-    bool/int) and a tag/field role conflict — both in-memory and via the
-    partitioned parquet staging variant."""
+def test_single_pass_parity_with_driver(spark, tmp_path):
+    """The one-parse long-format bulk path must produce the same tables as
+    the driver path — across multiple measurements, type conflicts
+    (int/float, bool/int) and a tag/field role conflict — both in-memory
+    and via the partitioned parquet staging variant."""
     from cnosdb_spark.sources.line_protocol import (
-        lines_to_tables_distributed,
+        lines_to_tables,
         lines_to_tables_single_pass,
     )
 
@@ -446,18 +516,18 @@ def test_single_pass_parity_with_two_pass(spark, tmp_path):
     lines_df = spark.createDataFrame(
         [(ln,) for ln in text_lines], ["value"]
     ).repartition(3)
-    two = lines_to_tables_distributed(spark, lines_df)
+    driver = lines_to_tables(spark, "\n".join(text_lines))
     for staging in (None, str(tmp_path / "staging")):
         one = lines_to_tables_single_pass(
             spark, lines_df, staging_path=staging
         )
-        assert set(two) == set(one) == {"weather", "cpu", "mem"}
-        for m in two:
-            tdf, ttags = two[m]
+        assert set(driver) == set(one) == {"weather", "cpu", "mem"}
+        for m in driver:
+            ddf, dtags = driver[m]
             odf, otags = one[m]
-            assert ttags == otags
-            assert dict(tdf.dtypes) == dict(odf.dtypes)
-            a = sorted(tuple(r) for r in tdf.collect())
+            assert dtags == otags
+            assert ddf.dtypes == odf.dtypes
+            a = sorted(tuple(r) for r in ddf.collect())
             b = sorted(tuple(r) for r in odf.collect())
             assert a == b, f"measurement {m} diverged (staging={staging})"
 
@@ -490,42 +560,31 @@ def test_single_pass_staging_numeric_measurement_names(spark, tmp_path):
 
 def test_distributed_schema_bool_conflicts(spark):
     """bool<int<float widening makes bool/int and bool/float conflicts
-    reachable across shards; the bool values must coerce (Python bools
+    reachable between lines; the bool values must coerce (Python bools
     into a LongType/DoubleType column can't rely on an implicit Arrow
     cast)."""
-    from cnosdb_spark.sources.line_protocol import lines_to_tables_distributed
-
-    lines_df = spark.createDataFrame(
-        [("m1 v=true,w=false 1700000000000000000",),
-         ("m1 v=3i,w=2.5 1700000001000000000",)],
-        ["value"],
-    ).repartition(2)
-    (df, tags), = lines_to_tables_distributed(spark, lines_df).values()
-    types = dict(df.dtypes)
-    assert types["v"] == "bigint" and types["w"] == "double"
-    rows = sorted((r["v"], r["w"]) for r in df.collect())
-    assert rows == [(1, 0.0), (3, 2.5)]
+    text_lines = ["m1 v=true,w=false 1700000000000000000",
+                  "m1 v=3i,w=2.5 1700000001000000000"]
+    for label, tables in _driver_and_bulk(spark, text_lines, 2):
+        (df, tags), = tables.values()
+        types = dict(df.dtypes)
+        assert types["v"] == "bigint" and types["w"] == "double", label
+        rows = sorted((r["v"], r["w"]) for r in df.collect())
+        assert rows == [(1, 0.0), (3, 2.5)], label
 
 
 def test_distributed_schema_tag_field_conflict_tag_wins(spark):
-    """A key seen as a tag in one shard and a field in another resolves
+    """A key seen as a tag in one line and a field in another resolves
     TAG-WINS deterministically (and the type widens to str, since tags
-    are strings) — regardless of which shard's distinct rows arrive
-    first."""
-    from cnosdb_spark.sources.line_protocol import (
-        discover_line_schema,
-        lines_to_tables_distributed,
-    )
-
-    text = [("m1,role=a v=1i 1700000000000000000",),
-            ("m1 role=7i,v=2i 1700000001000000000",)]
+    are strings) — regardless of which line comes first or which shard's
+    distinct rows arrive first."""
+    text = ["m1,role=a v=1i 1700000000000000000",
+            "m1 role=7i,v=2i 1700000001000000000"]
     for perm in (text, text[::-1]):
-        lines_df = spark.createDataFrame(perm, ["value"]).repartition(2)
-        schemas = discover_line_schema(lines_df)
-        ordered, tagkeys, py = schemas["m1"]
-        assert "role" in tagkeys
-        assert py["role"] is str
-        (df, tags), = lines_to_tables_distributed(spark, lines_df).values()
-        assert "role" in tags
-        assert dict(df.dtypes)["role"] == "string"
-        assert sorted(r["role"] for r in df.collect()) == ["7", "a"]
+        for label, tables in _driver_and_bulk(spark, perm, 2):
+            (df, tags), = tables.values()
+            assert tags == {"role"}, label
+            assert df.dtypes == [
+                ("time", "timestamp"), ("role", "string"), ("v", "bigint")
+            ], label
+            assert sorted(r["role"] for r in df.collect()) == ["7", "a"], label
