@@ -36,7 +36,6 @@ from cnosdb_spark.functions import (
     topk as ts_topk,
 )
 from cnosdb_spark.functions.quality import data_quality
-from cnosdb_spark.functions.repair import value_fill
 from cnosdb_spark.operators import (
     curation,
     dedup,
@@ -3118,7 +3117,7 @@ def scoring_sampling(spark, sf_dir):
 )
 def data_quality_scores(spark, sf_dir):
     """IoTDB-style data-quality aggregates (SURVEY §2.4; reference
-    aggregate_function/data_quality/) via grouped-map applyInPandas; the
+    aggregate_function/data_quality/), computed relationally; the
     oracle replays the interval/MAD formulas in SQL (see
     functions/quality.py for the per-metric math)."""
     e = _t(spark, sf_dir, "events")
@@ -3136,10 +3135,10 @@ def _lttb_oracle_values(n_out: int = 16, corpus: str | None = None) -> str | Non
     """Expected LTTB keep-set for the round-9 lttb arm, replayed at import
     in local numpy over the same corpus (the _refine_oracle pattern):
     per-series sort by time, t at ns-scale float64 — exactly what
-    applyInPandas's datetime64[ns].astype(int64) feeds the kernel. The
+    downsample.lttb feeds the kernel (epoch µs * 1000.0). The
     kernel itself is independently loop-pinned in tests/test_downsample.py,
     so the arm differentially verifies the DISTRIBUTED half (grouping,
-    in-group sort, applyInPandas schema/plumbing) against a local
+    in-group sort, map_series schema/plumbing) against a local
     ground-truth replay. Emits (user_id, ts_us) VALUES — values join back
     to the events table in SQL, keeping the literal small.
 
@@ -3335,30 +3334,23 @@ def ts_value_fill_repair(spark, sf_dir):
       (operators/downsample.py lttb) — the oracle replays the keep-set
       locally at import (_lttb_oracle_values) and re-joins values in SQL.
     """
-    # Round-11 fusion (guide §4.1/§4.2 + §2.4): all five arms are
-    # per-series sequential kernels keyed on user_id. They used to run as
-    # FIVE separate grouped-map applyInPandas pipelines — five events
-    # scans, five hash shuffles, five Python crossings, 5×1500
-    # per-group pandas invocations at sf0.1 — unioned after the fact.
-    # One multi-series mapInArrow kernel now computes every arm for every
-    # series of a partition in one call: one scan, one hash exchange on
-    # user_id + in-partition (user_id, ts) sort, ~one Python call per
-    # TASK (manual series boundaries via numpy split — the guide §4.2
-    # batching shape), versus 7500 per-group slices before. The
-    # per-series numpy math is the IDENTICAL module-level kernel each
-    # standalone operator uses (repair.fix_value_fill / fix_value_repair
-    # / fix_timestamp_repair, downsample._lttb_numpy, pandas
-    # ewm(adjust=False)), so the floats are bit-for-bit the old
-    # pipeline's; only the plan shape changed.
+    # All five arms are per-series sequential kernels keyed on user_id,
+    # so one repair.map_series call computes every arm for every series:
+    # one events scan, one hash exchange on user_id, one (user_id, ts)
+    # sort, one streaming mapInArrow, instead of five scans and shuffles
+    # unioned after the fact. The arms are the
+    # module-level kernels repair.fix_value_fill / fix_value_repair /
+    # fix_timestamp_repair, downsample._lttb_numpy and downsample.ewma's
+    # pandas ewm(adjust=False).
     import numpy as np
     import pandas as pd
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     from cnosdb_spark.functions.repair import (
         fix_timestamp_repair,
         fix_value_fill,
         fix_value_repair,
+        map_series,
     )
     from cnosdb_spark.operators.downsample import _lttb_numpy
 
@@ -3384,83 +3376,38 @@ def ts_value_fill_repair(spark, sf_dir):
         .otherwise(F.col("value"))
         .alias("_vfill"),
     )
-    uid_type = proj.schema["user_id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("op", T.StringType()),
-            T.StructField("user_id", uid_type),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
 
-    def _all_arms(batches):
-        # the partition arrives hash-clustered on user_id and sorted by
-        # (user_id, ts): concatenate its batches (one partition is a
-        # bounded slice of series), then numpy-split on series boundaries
-        tbl = pa.Table.from_batches(list(batches))
-        if tbl.num_rows == 0:
-            return
-        uids = tbl.column("user_id").to_numpy(zero_copy_only=False)
-        all_ts = tbl.column("_ts_us").to_numpy(zero_copy_only=False).astype("int64")
-        all_v = tbl.column("value").to_numpy(zero_copy_only=False).astype("float64")
-        all_vf = tbl.column("_vfill").to_numpy(zero_copy_only=False).astype("float64")
-        bounds = np.flatnonzero(
-            np.concatenate(([True], uids[1:] != uids[:-1]))
-        ).tolist() + [len(uids)]
-        ops: list[np.ndarray] = []
-        ouid: list[np.ndarray] = []
-        otss: list[np.ndarray] = []
-        ovss: list[np.ndarray] = []
-
-        for si in range(len(bounds) - 1):
-            lo, hi = bounds[si], bounds[si + 1]
-            uid = uids[lo]
-            ts, vals, vfill = all_ts[lo:hi], all_v[lo:hi], all_vf[lo:hi]
-
-            def emit(op: str, t_arr, v_arr):
-                t_arr = np.asarray(t_arr, dtype="int64")
-                ops.append(np.full(len(t_arr), op, dtype=object))
-                ouid.append(np.full(len(t_arr), uid))
-                otss.append(t_arr)
-                ovss.append(np.asarray(v_arr, dtype="float64"))
-
-            ft, fv = fix_value_fill(ts, vfill, "linear")
-            emit("fill", ft, fv)
-            rt, rv = fix_value_repair(ts, vals)
-            emit("repair", rt, rv)
+    def _all_arms(ts, vals, vfill):
+        arms = [
+            ("fill", *fix_value_fill(ts, vfill)),
+            ("repair", *fix_value_repair(ts, vals)),
             # ewma: pandas ewm(adjust=False) — downsample.ewma's kernel
-            emit("ewma", ts, pd.Series(vals).ewm(alpha=0.3, adjust=False).mean())
-            tt, tv = fix_timestamp_repair(ts, vals)
-            emit("tsrepair", tt, tv)
-            if include_lttb:
-                # same (user_id, ts) tie collapse as the oracle replay
-                # (rows are ts-sorted: segment mins via reduceat), then
-                # the lttb kernel over ns floats exactly as
-                # downsample.lttb (datetime64[ns].astype(int64) → ns;
-                # float64(µs)*1000.0 rounds to the identical float64)
-                starts = np.flatnonzero(
-                    np.concatenate(([True], ts[1:] != ts[:-1]))
-                )
-                ut = ts[starts]
-                uv = np.minimum.reduceat(vals, starts)
-                idx = _lttb_numpy(ut.astype("float64") * 1000.0, uv, lttb_n_out)
-                emit("lttb", ut[idx], uv[idx])
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(ops), type=pa.string()),
-                pa.array(np.concatenate(ouid), type=pa.int64()),
-                pa.array(np.concatenate(otss), type=pa.int64()),
-                pa.array(np.concatenate(ovss), type=pa.float64()),
-            ],
-            names=["op", "user_id", "ts_us", "value"],
+            ("ewma", ts, pd.Series(vals).ewm(alpha=0.3, adjust=False).mean()),
+            ("tsrepair", *fix_timestamp_repair(ts, vals)),
+        ]
+        if include_lttb:
+            # same (user_id, ts) tie collapse as the oracle replay
+            # (rows are ts-sorted: segment mins via reduceat), then
+            # the lttb kernel over ns floats exactly as
+            # downsample.lttb (float64(µs)*1000.0)
+            starts = np.flatnonzero(np.concatenate(([True], ts[1:] != ts[:-1])))
+            ut = ts[starts]
+            uv = np.minimum.reduceat(vals, starts)
+            idx = _lttb_numpy(ut.astype("float64") * 1000.0, uv, lttb_n_out)
+            arms.append(("lttb", ut[idx], uv[idx]))
+        return (
+            np.concatenate([np.full(len(t), op, dtype=object) for op, t, _ in arms]),
+            np.concatenate([t for _, t, _ in arms]),
+            np.concatenate([np.asarray(v, dtype="float64") for _, _, v in arms]),
         )
 
-    fused = (
-        proj.repartition("user_id")
-        .sortWithinPartitions("user_id", "_ts_us")
-        .mapInArrow(_all_arms, out_schema)
+    fused = map_series(
+        proj, ["user_id"], "_ts_us", ["value", "_vfill"], _all_arms,
+        [
+            T.StructField("op", T.StringType()),
+            T.StructField("ts_us", T.LongType()),
+            T.StructField("value", T.DoubleType()),
+        ],
     )
     return fused.select(
         "op",

@@ -1327,7 +1327,7 @@ class Engine:
         function/data_repair.slt): ``SELECT <fn>(time, value[, 'params'])
         FROM t [WHERE ...]`` — a table transform planned like the
         reference's analyzer rule (transform_ts_gen_func.rs gathers each
-        series and applies the kernel; here: applyInPandas per series)."""
+        series and applies the kernel; here: repair.map_series)."""
         from .functions import repair as rep
 
         m = re.match(
@@ -1351,12 +1351,7 @@ class Engine:
         inner = self._select(
             f"SELECT {time_col}, {value_col} FROM {table} {where}"
         )
-        impl = {
-            "timestamp_repair": rep.timestamp_repair_exact,
-            "value_fill": rep.value_fill_exact,
-            "value_repair": rep.value_repair_exact,
-        }[fn]
-        return impl(inner, time_col, value_col, [], params)
+        return getattr(rep, fn)(inner, time_col, value_col, [], params)
 
     def _reject_cross_join(self, df: DataFrame) -> None:
         """Reference parity: the optimizer rejects any plan containing a
@@ -3272,6 +3267,13 @@ class Engine:
         """Shared schemaless write path: auto-create tables/columns, append
         through Catalog.insert (LWW merge applies on read)."""
         db = db or self.database
+        existing = set(self.catalog.list_tables(db))
+        stored = {
+            name: self.catalog.get_schema(db, name)
+            for name in tables if name in existing
+        }
+        for name, schema in stored.items():
+            _check_stored_schema(name, schema, *tables[name])
         out: dict[str, int] = {}
         for name, (df, tagkeys) in tables.items():
             tags = [f.name for f in df.schema.fields if f.name in tagkeys]
@@ -3281,14 +3283,9 @@ class Engine:
                     continue
                 if f.name == NS_RESIDUE_COL:
                     continue  # hidden sub-µs residue: storage-only column
-                fields[f.name] = {
-                    "bigint": "bigint",
-                    "double": "double",
-                    "boolean": "boolean",
-                    "string": "string",
-                }[f.dataType.simpleString()]
-            if name in self.catalog.list_tables(db):
-                schema = self.catalog.get_schema(db, name)
+                fields[f.name] = f.dataType.simpleString()
+            if name in stored:
+                schema = stored[name]
                 for t in tags:
                     if t not in schema.tags and t not in schema.fields:
                         schema.tags.append(t)
@@ -3314,6 +3311,36 @@ class Engine:
         if len(parts) == 2:
             return parts[0], parts[1]
         return parts[-2], parts[-1]  # tenant.db.table → (db, table)
+
+
+# a schemaless value's kind (bool < int < float < str, the one rule of
+# sources._resolve_discovered) by stored field type and by frame type
+_KIND_RANK = {
+    "boolean": 0, "integer": 1, "bigint": 1, "unsigned": 1,
+    "float": 2, "double": 2, "string": 3, "geometry": 3,
+}
+
+
+def _check_stored_schema(name, schema, df, tagkeys) -> None:
+    """Reject a schemaless write to an existing table whose frame has a
+    stored field as a tag, or a field of a kind wider than its stored
+    type. Narrower kinds widen on write, as within one request."""
+    for f in df.schema.fields:
+        stored = schema.fields.get(f.name)
+        if stored is None:
+            continue
+        shown = _TYPE_DISPLAY.get(stored.lower(), stored.upper())
+        if f.name in tagkeys:
+            raise ValueError(
+                f"Table {name}: column {f.name} is a {shown} field, "
+                "the write has it as a tag"
+            )
+        kind = f.dataType.simpleString()
+        if _KIND_RANK[kind] > _KIND_RANK[stored.lower()]:
+            raise ValueError(
+                f"Table {name}: column {f.name} is {shown}, "
+                f"the write has {_TYPE_DISPLAY[kind]}"
+            )
 
 
 def _apply_show_order(df: DataFrame, order: str | None, valid: tuple[str, ...]) -> DataFrame:

@@ -19,90 +19,14 @@ time-ordered (time, value) pairs):
   timeliness   = 1 - late/cnt
   validity     = 1 - invalid/cnt             (value outliers: |v-median| > 3·MAD-σ)
 
-Implemented as a grouped-map ``applyInPandas`` (numpy, Arrow-batched): the
-math is inherently per-series sequential, the classic justified use of the
-Pandas-UDF slow path. Each series must fit in one task's memory — true for
-any sane series cardinality (the reference holds the same assumption in its
-accumulator).
+Implemented relationally (one lag window plus keyed aggregations, no
+Python boundary); the per-series pandas twin it is pinned against lives in
+tests/twins.py.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
-
-
-def _series_quality(ts: np.ndarray, vals: np.ndarray) -> dict[str, float]:
-    order = np.argsort(ts, kind="stable")
-    ts = ts[order].astype("float64")
-    vals = vals[order].astype("float64")
-    cnt = len(ts)
-    special = int(np.isnan(vals).sum())
-    if cnt < 2:
-        return {
-            "completeness": 1.0 if cnt and not special else 0.0 if special else 1.0,
-            "consistency": 1.0,
-            "timeliness": 1.0,
-            "validity": 1.0 - (special / cnt if cnt else 0.0),
-        }
-    dt = np.diff(ts)
-    pos = dt[dt > 0]
-    med_dt = float(np.median(pos)) if len(pos) else 0.0
-    mean_dt = float(dt.mean())
-    std_dt = float(dt.std())
-    redundancy = int((dt == 0).sum())
-    big = dt > mean_dt + 3 * std_dt
-    missing = int(sum(max(round(d / med_dt) - 1, 0) for d in dt[big])) if med_dt > 0 else 0
-    late = int(((dt > 0) & (dt < med_dt / 2)).sum()) if med_dt > 0 else 0
-
-    finite = vals[~np.isnan(vals)]
-    if len(finite) >= 2:
-        med_v = float(np.median(finite))
-        mad = float(np.median(np.abs(finite - med_v)))
-        sigma = 1.4826 * mad
-        invalid = int((np.abs(finite - med_v) > 3 * sigma).sum()) if sigma > 0 else 0
-    else:
-        invalid = 0
-    invalid += special
-
-    return {
-        "completeness": 1.0 - missing / (cnt + missing) if cnt + missing else 1.0,
-        "consistency": 1.0 - redundancy / cnt,
-        "timeliness": 1.0 - late / cnt,
-        "validity": 1.0 - invalid / cnt,
-    }
-
-
-def data_quality_pandas(
-    df: DataFrame,
-    time_col: str,
-    value_col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """Per-group data-quality scores via grouped-map applyInPandas — the
-    original implementation, kept as the sequential reference that
-    :func:`data_quality` is differentially pinned against
-    (tests/test_functions.py). Ships every row through the Python
-    boundary; prefer :func:`data_quality` on query paths."""
-    out_fields = [
-        T.StructField(c, df.schema[c].dataType, True) for c in group_cols
-    ] + [
-        T.StructField(m, T.DoubleType(), True)
-        for m in ("completeness", "consistency", "timeliness", "validity")
-    ]
-    schema = T.StructType(out_fields)
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = pdf[time_col].astype("int64").to_numpy()  # ns since epoch
-        vals = pd.to_numeric(pdf[value_col], errors="coerce").to_numpy()
-        m = _series_quality(ts.astype("float64") / 1e9, vals)
-        row = dict(zip(group_cols, key))
-        row.update(m)
-        return pd.DataFrame([row])
-
-    proj = df.select(*group_cols, time_col, value_col)
-    return proj.groupBy(*group_cols).applyInPandas(fn, schema)
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def data_quality(
@@ -117,7 +41,8 @@ def data_quality(
     one lag window plus three keyed aggregations that all reuse the
     window's hashpartitioning — no Python boundary, no full-row
     applyInPandas shuffle (guide §4.1: built-ins over grouped-map when
-    they exist). Semantics replicate :func:`_series_quality` exactly,
+    they exist). Semantics replicate the per-series reference
+    (``_series_quality`` in tests/twins.py) exactly,
     including the edges:
 
     - ``rint`` (IEEE half-even) for the missing-point estimate — Python's
@@ -133,14 +58,15 @@ def data_quality(
       by ``med_dt > 0``, which NULL fails exactly like 0.0;
     - **NULL group keys**: the stat join-backs are inner equi-joins on
       the group keys, so a group whose key contains NULL is dropped from
-      the output, whereas :func:`data_quality_pandas` (groupBy +
+      the output, whereas ``data_quality_pandas`` (groupBy +
       applyInPandas) emits a row for it. A deliberate, pinned divergence
       (tests/test_functions.py::test_data_quality_null_key_group_drops):
       the engine's series keys (tags) are non-null by construction, and
       null-safe join conditions would trade the plain equi-join shape
       (co-partitioned, AQE-friendly) for an edge no caller hits.
 
-    Differentially pinned against :func:`data_quality_pandas` in tests.
+    Differentially pinned against ``data_quality_pandas``
+    (tests/twins.py) in tests/test_functions.py.
     """
     keys = list(group_cols) if group_cols else ["_g"]
     # cast covers TIMESTAMP_NTZ inputs (unix_micros rejects them; the UTC

@@ -1,62 +1,137 @@
 """ts_gen_func data-repair table functions: timestamp_repair, value_fill,
-value_repair.
+value_repair, and :func:`map_series`, the one per-series executor every
+sequential kernel in the library runs through.
 
 Reference: /root/reference query_server/query/src/extension/expr/ts_gen_func/
 {mod.rs:12-57, data_repair/{timestamp_repair,value_fill,value_repair}.rs} —
 table-generating functions that regularize timestamps, fill missing values,
 and repair outliers, computed per series.
 
-Spark-first: grouped-map ``applyInPandas`` per series (the reference's
+Spark-first: one hash shuffle on the series key, a sort by (key, time)
+within partitions, then one ``mapInArrow`` that walks the Arrow batches
+and calls a numpy kernel once per complete series (the reference's
 analyzer likewise gathers each series into one partition —
-extension/analyse/transform_ts_gen_func.rs). Pure numpy inside; Arrow
-batches across. The per-series-fits-in-memory assumption matches the
-reference's accumulator design.
+extension/analyse/transform_ts_gen_func.rs). A task holds one series plus
+one batch, never a whole partition; each series must fit in memory, as
+in the reference's accumulator design.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
-def _out_schema(df: DataFrame, group_cols: list[str], time_col: str, value_col: str) -> T.StructType:
-    return T.StructType(
-        [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
-        + [
-            T.StructField(time_col, T.TimestampType(), True),
-            T.StructField(value_col, T.DoubleType(), True),
-        ]
+def map_series(
+    df: DataFrame,
+    keys: list[str],
+    time_col: str,
+    value_cols: list[str],
+    fn,
+    out_fields: list[T.StructField],
+) -> DataFrame:
+    """Run ``fn(ts_us, *values)`` once per series of ``df``.
+
+    A series is one value of ``keys`` (NULLs are one series, as in
+    ``groupBy``); with no keys the whole frame is one series. ``ts_us`` is
+    ``time_col`` as int64 (epoch µs for timestamps), ``values`` are the
+    ``value_cols`` as float64 with NULL → NaN, in time order. ``fn``
+    returns one array per ``out_fields`` entry, all of one length; the
+    output is ``keys`` + ``out_fields``, each Arrow type derived from the
+    Spark type and NaN emitted as NULL.
+
+    Plan: one hash Exchange on ``keys`` (a single partition without
+    keys), a Sort on (keys, time) within partitions, one MapInArrow."""
+    out_schema = T.StructType([df.schema[k] for k in keys] + list(out_fields))
+    arrow_schema = to_arrow_schema(out_schema)
+    n_keys = len(keys)
+    proj = df.select(*keys, time_col, *value_cols)
+    proj = proj.repartition(*keys) if keys else proj.repartition(1)
+    return proj.sortWithinPartitions(*keys, time_col).mapInArrow(
+        lambda batches: _per_series(batches, n_keys, fn, arrow_schema),
+        out_schema,
     )
 
 
-def _apply_per_series(df, group_cols, time_col, value_col, fn):
-    schema = _out_schema(df, group_cols, time_col, value_col)
+def _per_series(batches, n_keys: int, fn, schema: pa.Schema):
+    """Partition body of :func:`map_series`. Batches hold (keys..., time,
+    values...) sorted by (keys, time); yields one output batch per input
+    batch that completed a series. Only the series still open at a batch
+    boundary is carried into the next batch."""
+    key = None  # 1-row key arrays of the open series
+    parts: list[list[np.ndarray]] = []  # its (time, values...) slices
+    done: list = []  # (key, fn output) of completed series
+    for b in batches:
+        n = b.num_rows
+        if not n:
+            continue
+        keys = b.columns[:n_keys]
+        cols = [b.column(n_keys).cast(pa.int64())] + [
+            c.cast(pa.float64()) for c in b.columns[n_keys + 1 :]
+        ]
+        cols = [c.to_numpy(zero_copy_only=False) for c in cols]
+        if key is None:
+            key, parts = [k.slice(0, 1) for k in keys], [[] for _ in cols]
+        lo = 0
+        for hi in [*_key_changes(key, keys), n]:
+            for p, c in zip(parts, cols):
+                p.append(c[lo:hi])
+            if hi == n:
+                break
+            done.append((key, fn(*(np.concatenate(p) for p in parts))))
+            key, parts, lo = [k.slice(hi, 1) for k in keys], [[] for _ in cols], hi
+        if done:
+            yield _series_batch(done, n_keys, schema)
+            done = []
+    if key is not None:
+        done.append((key, fn(*(np.concatenate(p) for p in parts))))
+        yield _series_batch(done, n_keys, schema)
 
-    def wrapper(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        ts = pdf[time_col].to_numpy("datetime64[us]").astype("int64")
-        vals = pd.to_numeric(pdf[value_col], errors="coerce").to_numpy("float64")
-        new_ts, new_vals = fn(ts, vals)
-        out = pd.DataFrame(
-            {
-                time_col: new_ts.astype("datetime64[us]"),
-                value_col: new_vals,
-            }
+
+def _key_changes(prev: list, keys: list) -> list[int]:
+    """Rows of a batch whose key differs from the row before; row 0 is
+    compared with ``prev``, the 1-row key of the open series. NULL equals
+    NULL."""
+    if not keys:
+        return []
+    change = np.zeros(len(keys[0]), dtype=bool)
+    for p, k in zip(prev, keys):
+        a = pa.concat_arrays([p, k])
+        x, y = a.slice(1), a.slice(0, len(k))
+        ne = pc.fill_null(pc.not_equal(x, y), False)
+        ne = pc.or_(ne, pc.not_equal(pc.is_null(x), pc.is_null(y)))
+        change |= ne.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change).tolist()
+
+
+def _series_batch(done: list, n_keys: int, schema: pa.Schema) -> pa.RecordBatch:
+    """One output batch from completed series: each key repeated over its
+    series' output rows, then the concatenated ``fn`` outputs."""
+    lens = [len(out[0]) for _, out in done]
+    rows = pa.array(np.repeat(np.arange(len(done)), lens))
+    arrays = [
+        pc.take(pa.concat_arrays([key[i] for key, _ in done]), rows)
+        for i in range(n_keys)
+    ] + [
+        pa.array(
+            np.concatenate([np.asarray(out[j]) for _, out in done]),
+            from_pandas=True,
         )
-        for c, v in zip(group_cols, key):
-            out[c] = v
-        return out[[*group_cols, time_col, value_col]]
-
-    return df.select(*group_cols, time_col, value_col).groupBy(*group_cols).applyInPandas(
-        wrapper, schema
+        for j in range(len(schema) - n_keys)
+    ]
+    return pa.RecordBatch.from_arrays(
+        [a.cast(f.type) for a, f in zip(arrays, schema)], schema=schema
     )
 
 
 def fix_timestamp_repair(ts: np.ndarray, vals: np.ndarray):
-    """Per-series numpy kernel of :func:`timestamp_repair` — module-level
-    so fused multi-arm kernels (ts_value_fill_repair) call the IDENTICAL
-    float/int math as the standalone operator."""
+    """Median-interval timestamp snap: each point moves to start +
+    k·interval, keep-first on collisions (the ts_value_fill_repair arm
+    kernel; the SQL surface is the DP-exact :func:`timestamp_repair`)."""
     if len(ts) < 3:
         return ts, vals
     dt = np.diff(ts)
@@ -75,77 +150,22 @@ def fix_timestamp_repair(ts: np.ndarray, vals: np.ndarray):
     return new_ts[first_idx], vals[first_idx]
 
 
-def timestamp_repair(
-    df: DataFrame, time_col: str, value_col: str, group_cols: list[str]
-) -> DataFrame:
-    """Regularize timestamps to the modal interval: snap each point to
-    start + k·interval, dropping duplicates (keep first). Mirrors
-    data_repair/timestamp_repair.rs (mode-interval heuristic)."""
-    return _apply_per_series(
-        df, group_cols, time_col, value_col, fix_timestamp_repair
-    )
+def fix_value_fill(ts: np.ndarray, vals: np.ndarray):
+    """Linear fill of NaN values, edges clamped (np.interp; the
+    ts_value_fill_repair arm kernel; the SQL surface is
+    :func:`value_fill`)."""
+    ok = ~np.isnan(vals)
+    if not ok.any():
+        return ts, vals
+    return ts, np.interp(ts.astype("float64"), ts[ok].astype("float64"), vals[ok])
 
 
-def value_fill(
-    df: DataFrame,
-    time_col: str,
-    value_col: str,
-    group_cols: list[str],
-    method: str = "linear",
-) -> DataFrame:
-    """Fill NaN values: method ∈ {previous, next, linear, mean, median, mode}
-    (data_repair/value_fill.rs method strings)."""
-    return _apply_per_series(
-        df,
-        group_cols,
-        time_col,
-        value_col,
-        lambda ts, vals: fix_value_fill(ts, vals, method),
-    )
-
-
-def fix_value_fill(ts: np.ndarray, vals: np.ndarray, method: str = "linear"):
-    """Per-series numpy kernel of :func:`value_fill` (module-level for the
-    fused ts_value_fill_repair kernel — identical math, one definition)."""
-    s = pd.Series(vals)
-    if method == "previous":
-        s = s.ffill()
-    elif method == "next":
-        s = s.bfill()
-    elif method == "linear":
-        s = pd.Series(
-            np.interp(
-                ts.astype("float64"),
-                ts[~np.isnan(vals)].astype("float64"),
-                vals[~np.isnan(vals)],
-            )
-            if (~np.isnan(vals)).any()
-            else vals
-        )
-    elif method == "mean":
-        s = s.fillna(s.mean())
-    elif method == "median":
-        s = s.fillna(s.median())
-    elif method == "mode":
-        nn = s.dropna()
-        s = s.fillna(nn.mode().min() if len(nn) else np.nan)
-    else:
-        raise ValueError(f"unknown fill method {method!r}")
-    return ts, s.to_numpy("float64")
-
-
-def value_repair(
-    df: DataFrame, time_col: str, value_col: str, group_cols: list[str]
-) -> DataFrame:
-    """Repair value outliers (screen method à la data_repair/value_repair.rs):
-    clamp each point's rate-of-change to the series' MAD-based speed bounds —
-    points whose implied speed exceeds the bound are moved to the bound."""
-    return _apply_per_series(df, group_cols, time_col, value_col, fix_value_repair)
-
-
-def fix_value_repair(ts: np.ndarray, vals: np.ndarray):
-    """Per-series numpy kernel of :func:`value_repair` (module-level for
-    the fused ts_value_fill_repair kernel — identical math)."""
+def fix_value_repair(ts: np.ndarray, vals: np.ndarray, smin=None, smax=None):
+    """Clamp each point's rate-of-change, sequentially against the
+    already-repaired previous point, to [smin, smax] per second — by
+    default the series' MAD-based speed bounds median ± 3·1.4826·MAD
+    (the screen method: the ts_value_fill_repair arm kernel and the clamp
+    of :func:`value_repair`). NaN points are left as they are."""
     n = len(ts)
     if n < 3:
         return ts, vals
@@ -158,15 +178,15 @@ def fix_value_repair(ts: np.ndarray, vals: np.ndarray):
     if not len(finite):
         return ts, vals
     med = float(np.median(finite))
-    mad = float(np.median(np.abs(finite - med)))
-    sigma = 1.4826 * mad
-    smin, smax = med - 3 * sigma, med + 3 * sigma
+    sigma = 1.4826 * float(np.median(np.abs(finite - med)))
+    lo_s = med - 3 * sigma if smin is None else smin
+    hi_s = med + 3 * sigma if smax is None else smax
     out = vals.copy()
     for i in range(1, n):
         d = tsec[i] - tsec[i - 1]
         if d <= 0 or np.isnan(out[i - 1]) or np.isnan(out[i]):
             continue
-        lo, hi = out[i - 1] + smin * d, out[i - 1] + smax * d
+        lo, hi = out[i - 1] + lo_s * d, out[i - 1] + hi_s * d
         if out[i] < lo:
             out[i] = lo
         elif out[i] > hi:
@@ -176,10 +196,10 @@ def fix_value_repair(ts: np.ndarray, vals: np.ndarray):
 
 # ------------------------------------------------------------------
 # Reference-exact ts_gen_func SQL surface (function/data_repair.slt).
-# The kernels above are the distributed defaults used by the driver
-# oracles; the kernels below mirror the reference's algorithms bit-for-bit
-# where row layout depends on them (timestamp_repair's DP insert/remove
-# changes the output row COUNT, so SQL parity needs the exact algorithm).
+# The fix_* kernels above are the ts_value_fill_repair row's arms; the
+# functions below mirror the reference's algorithms bit-for-bit where row
+# layout depends on them (timestamp_repair's DP insert/remove changes the
+# output row COUNT, so SQL parity needs the exact algorithm).
 # ------------------------------------------------------------------
 
 def parse_ts_gen_params(arg: str | None, allowed: tuple[str, ...]) -> dict:
@@ -319,7 +339,7 @@ def _dp_repair_ref(start: int, interval: int, ts: np.ndarray, vals: np.ndarray):
     return out_ts, out_vals
 
 
-def timestamp_repair_exact(
+def timestamp_repair(
     df: DataFrame,
     time_col: str,
     value_col: str,
@@ -367,10 +387,10 @@ def timestamp_repair_exact(
             start = _start_mode_ref(ts, interval)
         return _dp_repair_ref(start, interval, ts, vals)
 
-    return _apply_per_series(df, group_cols, time_col, value_col, fix)
+    return _ts_gen(df, group_cols, time_col, value_col, fix)
 
 
-def value_fill_exact(
+def value_fill(
     df: DataFrame,
     time_col: str,
     value_col: str,
@@ -427,10 +447,10 @@ def value_fill_exact(
             s = s.where(np.isfinite(s), ma)
         return ts, s.to_numpy("float64")
 
-    return _apply_per_series(df, group_cols, time_col, value_col, fix)
+    return _ts_gen(df, group_cols, time_col, value_col, fix)
 
 
-def value_repair_exact(
+def value_repair(
     df: DataFrame,
     time_col: str,
     value_col: str,
@@ -453,7 +473,6 @@ def value_repair_exact(
     smax = float(p["max_speed"]) if "max_speed" in p else None
 
     def fix(ts: np.ndarray, vals: np.ndarray):
-        n = len(ts)
         vals = np.where(np.isfinite(vals), vals, np.nan)
         valid = np.isfinite(vals)
         if valid.sum() < 2:
@@ -462,30 +481,13 @@ def value_repair_exact(
         vals = np.interp(
             ts.astype("float64"), ts[valid].astype("float64"), vals[valid]
         )
-        if n < 3:
-            return ts, vals
-        tsec = ts.astype("float64") / 1e6
-        dt = np.diff(tsec)
-        dv = np.diff(vals)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            speed = np.where(dt > 0, dv / dt, 0.0)
-        finite = speed[np.isfinite(speed)]
-        if not len(finite):
-            return ts, vals
-        med = float(np.median(finite))
-        mad = 1.4826 * float(np.median(np.abs(finite - med)))
-        lo = smin if smin is not None else med - 3 * mad
-        hi = smax if smax is not None else med + 3 * mad
-        out = vals.copy()
-        for i in range(1, n):
-            d = tsec[i] - tsec[i - 1]
-            if d <= 0:
-                continue
-            lo_v, hi_v = out[i - 1] + lo * d, out[i - 1] + hi * d
-            if out[i] < lo_v:
-                out[i] = lo_v
-            elif out[i] > hi_v:
-                out[i] = hi_v
-        return ts, out
+        return fix_value_repair(ts, vals, smin, smax)
 
-    return _apply_per_series(df, group_cols, time_col, value_col, fix)
+    return _ts_gen(df, group_cols, time_col, value_col, fix)
+
+
+def _ts_gen(df, group_cols, time_col, value_col, fix):
+    return map_series(
+        df, group_cols, time_col, [value_col], fix,
+        [df.schema[time_col], T.StructField(value_col, T.DoubleType())],
+    )

@@ -110,17 +110,6 @@ def last_agg(time_col: str | Column, value_col: str | Column) -> Column:
     return F.max_by(v, F.when(v.isNotNull(), t))
 
 
-def mode_agg(value_col: str | Column) -> Column:
-    """``mode(x)``: most frequent value, ties broken by smallest value so the
-    result is deterministic (aggregate_function/mode.rs picks one arbitrary
-    winner; we pin the tie-break for testability)."""
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    # max_by over (count, negated-order key): build map value->count first is
-    # heavyweight; instead use a two-level trick in callers. Provided here as
-    # an expression over a pre-grouped (value, cnt) pair set.
-    raise NotImplementedError("use mode_df / SQL rewrite; see functions.mode_df")
-
-
 def mode_df(df: DataFrame, group_cols: list[str], value_col: str, out_col: str = "mode") -> DataFrame:
     """Deterministic mode per group: value with max count, ties → min value."""
     counted = (

@@ -180,7 +180,8 @@ def minhash_signatures(
     # Arrow kernel — Catalyst interprets transform/array_min, the same
     # per-row constant the ANN family paid. A[i] < 2^20 and h < 2^40
     # keep a*h+b < 2^62, so the numpy int64 arithmetic is EXACTLY the
-    # expression arithmetic (parity-pinned; the SQL oracle holds).
+    # expression arithmetic (parity-pinned against
+    # ``minhash_signatures_expr`` in tests/twins.py; the SQL oracle holds).
     hs = F.transform(
         F.col("_sh"),
         lambda s: F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("long"),
@@ -229,37 +230,6 @@ def minhash_signatures(
             )
 
     return t.mapInArrow(_mins, out_schema)
-
-
-def minhash_signatures_expr(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Expression-form MinHash signatures (transform + array_min per
-    permutation) — the arithmetic contract for the vectorized
-    ``minhash_signatures`` kernel (integer arithmetic, exact equality,
-    parity-pinned in tests)."""
-    t = df.select(
-        F.col(id_col).alias("_id"), tokens(normalize(F.col(text_col))).alias("_toks")
-    )
-    t = t.select("_id", word_ngrams(F.col("_toks"), n).alias("_sh"))
-    hs = F.transform(
-        F.col("_sh"),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("long"),
-    )
-    t = t.select("_id", hs.alias("_hs"))
-    cols = [
-        F.array_min(
-            F.transform(
-                F.col("_hs"), lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-            )
-        ).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
-    ]
-    return t.select("_id", *cols)
 
 
 def minhash_lsh_pairs(
@@ -362,32 +332,6 @@ def _simhash_hashes(df: DataFrame, text_col: str, id_col: str, bits: int) -> Dat
     return t.select("_id", hs.alias("_hs"))
 
 
-def simhash_expr(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFrame:
-    """Expression-form SimHash — ``bits`` array-``aggregate`` folds over
-    the token-hash array, replicable in ANSI SQL (the DuckDB oracle
-    computes the identical sums). Kept as the arithmetic contract for
-    the vectorized ``simhash`` (integer arithmetic, so equality is
-    EXACT); Catalyst interprets the folds at ~per-token-per-bit cost —
-    use ``simhash`` in hot paths.
-
-    Measured (r05): the per-bit folds beat a single fold accumulating an
-    array of bit-counters (0.73 s vs 0.79-0.98 s min-of-3 at sf0.1,
-    16 bits) — the single pass allocates a counter array per TOKEN, which
-    costs more than re-walking the cached hash array per bit."""
-    t = _simhash_hashes(df, text_col, id_col, bits)
-    fp = None
-    for b in range(bits):
-        s = F.aggregate(
-            F.col("_hs"),
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(1 << b)) != 0, 1).otherwise(-1),
-        )
-        bit = F.when(s > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        fp = bit if fp is None else fp + bit
-    return t.select("_id", fp.cast("long").alias("simhash"))
-
-
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFrame:
     """SimHash fingerprint over whitespace tokens.
 
@@ -399,7 +343,8 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     Catalyst interprets array folds, and bits x tokens interpreted
     lambda steps per row is the same per-row constant the ANN family
     paid. Integer arithmetic end to end, so the result is EXACTLY equal
-    to ``simhash_expr`` (parity-pinned) and the SQL oracle.
+    to the expression-form twin ``simhash_expr`` (tests/twins.py,
+    parity-pinned) and the SQL oracle.
     Output: (_id, simhash BIGINT); 32 bits keeps every intermediate in
     int64."""
     import pyarrow as pa

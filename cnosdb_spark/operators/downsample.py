@@ -11,11 +11,10 @@ monitoring pipelines actually ask for:
 - **EWMA** exponential smoothing — the classic monitoring smoother.
 
 Both algorithms are inherently SEQUENTIAL per series (each choice/state
-depends on the previous), so they run as Arrow-batched ``applyInPandas``
-over one series per group — the engine's documented slow path (same tier
-as repair/quality/gauge, where the reference has custom Rust kernels).
-One hash shuffle on the series key; within a series, numpy/pandas do the
-sequential pass at C speed.
+depends on the previous), so they run through
+``functions.repair.map_series``: one hash shuffle on the series key, a
+sort by (key, time), and one streaming ``mapInArrow`` whose numpy/pandas
+kernel makes the sequential pass per series at C speed.
 
 At 100 TB the scale axis is the NUMBER of series (each fits one task);
 a single monster series should be pre-bucketed with time_window first.
@@ -24,8 +23,9 @@ a single monster series should be pre-bucketed with time_window first.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import DataFrame, types as T
 
-from pyspark.sql import DataFrame, functions as F
+from ..functions.repair import map_series
 
 
 def _lttb_numpy(t, v, n_out: int):
@@ -66,22 +66,20 @@ def lttb(
     series (first/last always kept; series already at or under ``n_out``
     pass through).  Output: (tags, time, value) sorted within series.
     """
-    keys = list(tags or [])
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.select(*keys, time_col, value_col).schema.fields
+    fields = df.schema
+    # timestamps enter the kernel as ns floats, numeric time columns as
+    # they are: triangle areas round differently at other scales, and the
+    # lttb arm's oracle replay (__spark_entry__) works in ns
+    scale = 1.0 if isinstance(fields[time_col].dataType, T.NumericType) else 1000.0
+
+    def _one(ts, v):
+        idx = _lttb_numpy(ts.astype("float64") * scale, v, n_out)
+        return ts[idx], v[idx]
+
+    return map_series(
+        df, list(tags or []), time_col, [value_col], _one,
+        [fields[time_col], fields[value_col]],
     )
-
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col).reset_index(drop=True)
-        t = pdf[time_col].astype("int64").to_numpy(dtype="float64")
-        v = pdf[value_col].to_numpy(dtype="float64")
-        idx = _lttb_numpy(t, v, n_out)
-        return pdf.loc[idx, keys + [time_col, value_col]]
-
-    grouped = df.groupBy(*keys) if keys else df.groupBy(F.lit(1).alias("_g"))
-    out = grouped.applyInPandas(_one, out_schema)
-    return out
 
 
 def ewma(
@@ -102,17 +100,12 @@ def ewma(
     need this: double-rounding through two engines' round() flavors
     flips last digits).
     Output: (tags, time, value, ``out_col``) sorted within series."""
-    keys = list(tags or [])
-    base = df.select(*keys, time_col, value_col)
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
-    ) + f", `{out_col}` double"
+    def _one(ts, v):
+        e = pd.Series(v).ewm(alpha=alpha, adjust=False).mean()
+        return ts, v, e if round_decimals is None else e.round(round_decimals)
 
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col).reset_index(drop=True)
-        s = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        pdf[out_col] = s if round_decimals is None else s.round(round_decimals)
-        return pdf[keys + [time_col, value_col, out_col]]
-
-    grouped = base.groupBy(*keys) if keys else base.groupBy(F.lit(1).alias("_g"))
-    return grouped.applyInPandas(_one, out_schema)
+    fields = df.schema
+    return map_series(
+        df, list(tags or []), time_col, [value_col], _one,
+        [fields[time_col], fields[value_col], T.StructField(out_col, T.DoubleType())],
+    )

@@ -13,8 +13,9 @@ literals — measured 80-95 s per arm at a 5k-vector rehearsal corpus,
 which at billions of candidates is the difference between a job and a
 non-job. The numpy kernels reproduce the expression arithmetic
 EXACTLY (same left-fold accumulation order, same first-min tie-breaks),
-so the DuckDB differential oracles stay green; the expression forms are
-kept as ``pq_encode_expr`` and parity-pinned in tests.
+so the DuckDB differential oracles stay green; the expression forms
+(``ivf_assign_expr``, ``pq_encode_expr``) live in tests/twins.py, where
+the kernels are parity-pinned against them.
 """
 
 from __future__ import annotations
@@ -461,28 +462,6 @@ def refine_centroids(
     return cents, history
 
 
-def ivf_assign_expr(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    out_col: str = "_cluster",
-) -> DataFrame:
-    """Expression-form nearest-centroid assignment (argmax cosine over
-    literal centroid arrays) — the arithmetic-contract reference for the
-    vectorized ``ivf_assign`` (parity-pinned in tests); Catalyst
-    interprets the C x (dot + norms) HOFs per row, so use ``ivf_assign``
-    in hot paths."""
-    v = F.col(vec_col).cast("array<double>")
-    sims = [
-        cosine_expr(v, F.array(*[F.lit(float(x)) for x in c])) for c in centroids
-    ]
-    best = F.array_position(
-        F.array(*sims), F.array_max(F.array(*sims))
-    ) - 1  # 0-based cluster id
-    return df.withColumn(out_col, best.cast("int"))
-
-
 def ivf_assign(
     df: DataFrame,
     vec_col: str,
@@ -492,7 +471,8 @@ def ivf_assign(
     sim_col: str | None = None,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (argmax cosine) — a
-    vectorized Arrow kernel, bit-identical to ``ivf_assign_expr`` (same
+    vectorized Arrow kernel, bit-identical to its expression-form twin
+    ``ivf_assign_expr`` (tests/twins.py; same
     sequential fold order for dot/norms, first-max tie-break).
     ``sim_col`` additionally emits the winning cosine (the spherical
     k-means inertia input — saves refine_centroids a second pass)."""
@@ -721,42 +701,6 @@ def _train_codebooks(vecs, m: int, k: int) -> list[list[list[float]]]:
     return books
 
 
-def _codebook_lit(book: list[list[float]]) -> Column:
-    return F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
-
-
-def pq_encode_expr(
-    df: DataFrame,
-    vec_col: str,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Expression-form PQ encode (nearest codebook entry per subspace,
-    squared-L2) — pure column expressions with the codebooks as literals.
-    Kept as the arithmetic-contract reference for ``pq_encode``'s
-    vectorized kernel (parity-pinned in tests): Catalyst interprets the
-    nested HOFs, so this form costs ~m*k interpreted folds PER ROW —
-    use ``pq_encode`` in any hot path."""
-    m, sub = len(codebooks), len(codebooks[0][0])
-    raw = F.col(vec_col).cast("array<double>")
-    nrm = F.greatest(norm_expr(raw), F.lit(1e-12))
-    v = F.transform(raw, lambda x: x / nrm)
-    codes = []
-    for i, book in enumerate(codebooks):
-        s = F.slice(v, i * sub + 1, sub)
-        d2 = F.transform(
-            _codebook_lit(book),
-            lambda c: F.aggregate(
-                F.zip_with(s, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        codes.append((F.array_position(d2, F.array_min(d2)) - 1).cast("int"))
-    return df.withColumn(out_col, F.array(*codes))
-
-
 def pq_encode(
     df: DataFrame,
     vec_col: str,
@@ -767,8 +711,9 @@ def pq_encode(
     """Encode each vector as ``m`` small ints (nearest codebook entry per
     subspace, squared-L2) — a vectorized Arrow kernel (narrow map, no
     shuffle; codebooks ride the closure). Bit-identical to
-    ``pq_encode_expr``: same sequential normalize/accumulate order, same
-    first-min tie-break (np.argmin == array_position(array_min)).
+    ``pq_encode_expr`` (tests/twins.py): same sequential
+    normalize/accumulate order, same first-min tie-break (np.argmin ==
+    array_position(array_min)).
     Output: input columns + ``out_col`` array<int> of length m."""
     import pyarrow as pa
     from pyspark.sql import types as T

@@ -12,12 +12,19 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 from datetime import datetime, date
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the repo root, on this process's path and (through the environment the
+# JVM and its Python workers inherit) on every worker's, whatever the cwd
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -311,6 +311,188 @@ def test_write_lines_type_conflicts_in_one_request(eng):
     assert [r["t"] for r in rows] == ["a", "7"]
 
 
+def test_write_lines_conflicts_with_stored_schema(eng):
+    """A schemaless write is checked against the stored schema before any
+    work: a field arriving as a tag, or with a kind wider than its stored
+    type (bool < int < float < str), is a ValueError naming the table,
+    the column and both types, and the request writes nothing and changes
+    no schema. Narrower kinds are widened on write."""
+    assert eng.write_lines("m v=4.5 1000") == {"m": 1}
+    assert eng.write_lines("mi c=1i 1000\nmb f=true 1000") == {"mi": 1, "mb": 1}
+    for lines, pattern in [
+        ('m v="x" 4000', "m.*v.*DOUBLE.*STRING"),
+        ("m,v=a w=1 5000", "m.*v.*DOUBLE.*tag"),
+        ("mi c=1.5 2000", "mi.*c.*BIGINT.*DOUBLE"),
+        ("mb f=1i 2000", "mb.*f.*BOOLEAN.*BIGINT"),
+        # a conflict in one table rejects the whole request
+        ('n x=1 2000\nm v="x" 2000', "m.*v.*DOUBLE.*STRING"),
+    ]:
+        with pytest.raises(ValueError, match=pattern):
+            eng.write_lines(lines)
+    assert "n" not in eng.catalog.list_tables("public")
+    schema = eng.catalog.get_schema("public", "m")
+    assert schema.tags == [] and schema.fields == {"v": "double"}
+
+    assert eng.write_lines("m v=7i 2000\nm v=true 3000") == {"m": 2}
+    rows = eng.sql("SELECT v FROM m ORDER BY time").collect()
+    assert [r["v"] for r in rows] == [4.5, 7.0, 1.0]
+    assert [r["c"] for r in eng.sql("SELECT c FROM mi").collect()] == [1]
+
+
+def _ts_gen_rows(eng, sql):
+    """(dtypes, [(µs after 2024-01-01, value rounded to 9 places)]) of a
+    ts_gen_func statement, in the order Engine.sql returns them."""
+    import datetime as dt
+
+    base, us = dt.datetime(2024, 1, 1), dt.timedelta(microseconds=1)
+    df = eng.sql(sql)
+    rows = [
+        ((t - base) // us, None if v is None else round(v, 9))
+        for t, v in df.collect()
+    ]
+    return df.dtypes, rows
+
+
+def _ts_gen_tables(eng):
+    # r: 10 points, two with no v (NULL), a spike at 00:01:00, irregular
+    # gaps; iv is a BIGINT field. tr: intervals whose mode (10 s) and
+    # median (15 s) differ.
+    eng.sql("CREATE TABLE r(v DOUBLE, iv BIGINT, TAGS(t0))")
+    eng.sql(
+        """INSERT INTO r(time, t0, v, iv) VALUES
+        ('2024-01-01 00:00:00', 'a', 1.0, 10), ('2024-01-01 00:00:10', 'a', 2.0, 20),
+        ('2024-01-01 00:00:21', 'a', 4.0, 30), ('2024-01-01 00:00:30', 'a', 3.0, 40),
+        ('2024-01-01 00:00:50', 'a', 5.0, 50), ('2024-01-01 00:01:00', 'a', 100.0, 60),
+        ('2024-01-01 00:01:09', 'a', 7.0, 70), ('2024-01-01 00:01:20', 'a', 6.0, 80)"""
+    )
+    eng.sql(
+        """INSERT INTO r(time, t0, iv) VALUES
+        ('2024-01-01 00:00:40', 'a', 45), ('2024-01-01 00:01:30', 'a', 90)"""
+    )
+    eng.sql("CREATE TABLE tr(v DOUBLE, TAGS(t0))")
+    secs = [0, 10, 20, 30, 45, 60, 75, 90, 100]
+    eng.sql(
+        "INSERT INTO tr(time, t0, v) VALUES "
+        + ", ".join(
+            f"('2024-01-01 00:{s // 60:02d}:{s % 60:02d}', 'a', {i + 1}.0)"
+            for i, s in enumerate(secs)
+        )
+    )
+
+
+def test_ts_gen_func_sql_surface(eng):
+    """SELECT timestamp_repair|value_fill|value_repair(time, value[, params])
+    (function/data_repair.slt shapes): rows, order and schema pinned for
+    every method and parameter the surface accepts."""
+    _ts_gen_tables(eng)
+    S = 1_000_000
+    dbl = [("time", "timestamp"), ("v", "double")]
+    obs = [0, 10, 21, 30, 40, 50, 60, 69, 80, 90]
+
+    def filled(mid, last):
+        return list(zip([s * S for s in obs], [1.0, 2.0, 4.0, 3.0, mid, 5.0, 100.0, 7.0, 6.0, last]))
+
+    linear = filled(4.0, 6.0)
+    assert _ts_gen_rows(eng, "SELECT value_fill(time, v) FROM r") == (dbl, linear)
+    for method, rows in [
+        ("linear", linear),
+        ("mean", filled(16.0, 16.0)),
+        ("previous", filled(3.0, 6.0)),
+        ("ar", filled(23.351428961, 22.813550533)),
+        ("ma", filled(23.0, 6.333333333)),
+    ]:
+        got = _ts_gen_rows(eng, f"SELECT value_fill(time, v, 'method={method}') FROM r")
+        assert got == (dbl, rows), method
+
+    # BIGINT value column → DOUBLE output
+    assert _ts_gen_rows(
+        eng, "SELECT value_fill(time, iv) FROM r WHERE time > '2024-01-01 00:00:05'"
+    ) == (
+        [("time", "timestamp"), ("iv", "double")],
+        list(zip([s * S for s in obs[1:]], [20.0, 30.0, 40.0, 45.0, 50.0, 60.0, 70.0, 80.0, 90.0])),
+    )
+    assert _ts_gen_rows(eng, "SELECT value_repair(time, iv) FROM r") == (
+        [("time", "timestamp"), ("iv", "double")],
+        list(zip(
+            [s * S for s in obs],
+            [10.0, 20.0, 30.0, 40.0, 45.956545455, 51.913090909, 60.0, 70.0, 80.0, 90.0],
+        )),
+    )
+
+    screened = list(zip(
+        [s * S for s in obs],
+        [1.0, 2.0, 4.0, 3.0, 4.0, 5.0, 10.4478, 7.34478, 6.0, 6.0],
+    ))
+    assert _ts_gen_rows(eng, "SELECT value_repair(time, v) FROM r") == (dbl, screened)
+    assert _ts_gen_rows(
+        eng, "SELECT value_repair(time, v, 'method=screen') FROM r"
+    ) == (dbl, screened)
+    assert _ts_gen_rows(
+        eng, "SELECT value_repair(time, v, 'min_speed=-0.2&max_speed=0.2') FROM r"
+    ) == (dbl, list(zip(
+        [s * S for s in obs], [1.0, 2.0, 4.0, 3.0, 4.0, 5.0, 7.0, 7.0, 6.0, 6.0]
+    )))
+
+    # r: every interval method finds 10 s; the NULL-valued points stay
+    # NULL and 00:00:21 / 00:01:09 snap onto the grid
+    snapped = list(zip(
+        [s * 10 * S for s in range(10)],
+        [1.0, 2.0, 4.0, 3.0, None, 5.0, 100.0, 7.0, 6.0, None],
+    ))
+    assert _ts_gen_rows(eng, "SELECT timestamp_repair(time, v) FROM r") == (dbl, snapped)
+
+    ten = list(zip(
+        [s * 10 * S for s in range(11)],
+        [1.0, 2.0, 3.0, 4.0, 5.0, None, 6.0, 7.0, None, 8.0, 9.0],
+    ))
+    fifteen = list(zip(
+        [s * 15 * S for s in range(8)], [1.0, 2.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0]
+    ))
+    twenty = list(zip(
+        [s * 20 * S for s in range(6)], [1.0, 3.0, 5.0, 6.0, 7.0, 9.0]
+    ))
+    for params, rows in [
+        (None, fifteen),
+        ("method=median", fifteen),
+        ("method=mode", ten),
+        ("method=cluster", ten),
+        ("interval=20000", twenty),
+        ("interval=20000&start_mode=mode", twenty),
+        ("method=mode&start_mode=linear", list(zip(
+            [7_777_777 + s * 10 * S for s in range(11)],
+            [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, None, 7.0, 8.0, 9.0, None],
+        ))),
+        ("interval=20000&start_mode=linear", list(zip(
+            [-32_222_223 + s * 20 * S for s in range(8)],
+            [1.0, 2.0, 3.0, 4.0, 5.0, 7.0, 8.0, 9.0],
+        ))),
+    ]:
+        arg = "" if params is None else f", '{params}'"
+        got = _ts_gen_rows(eng, f"SELECT timestamp_repair(time, v{arg}) FROM tr")
+        assert got == (dbl, rows), params
+
+
+def test_ts_gen_func_sql_errors(eng):
+    """Argument and data errors of the ts_gen_func surface carry the
+    reference's messages (ts_gen_func/utils.rs, data_repair/*.rs)."""
+    _ts_gen_tables(eng)
+    with pytest.raises(ValueError, match="unknown field `foo`, expected one of `method`"):
+        eng.sql("SELECT value_fill(time, v, 'foo=1') FROM r")
+    with pytest.raises(ValueError, match="duplicate field `method`"):
+        eng.sql("SELECT value_fill(time, v, 'method=mean&method=ar') FROM r")
+    with pytest.raises(ValueError, match="Invalid fill method: bogus"):
+        eng.sql("SELECT value_fill(time, v, 'method=bogus') FROM r")
+    # the NULL-valued points only: raised while the statement runs
+    with pytest.raises(Exception, match="All values are Invalid"):
+        eng.sql(
+            "SELECT value_fill(time, v) FROM r WHERE time = '2024-01-01 00:00:40'"
+        ).collect()
+    with pytest.raises(Exception, match="At least two non-NaN values are needed"):
+        eng.sql(
+            "SELECT value_repair(time, v) FROM r WHERE time >= '2024-01-01 00:01:20'"
+        ).collect()
+
+
 def test_gapfill_sql_locf_interpolate(eng):
     """time_window_gapfill + locf/interpolate SQL surface
     (cases/function/gapfill-style queries)."""

@@ -126,7 +126,10 @@ def test_mode_tie_break(spark):
 def test_timestamp_repair_snaps(spark):
     t = _ts(0, 10, 21, 30)  # 21 should snap to 20
     df = spark.createDataFrame(list(zip(["k"] * 4, t, [1.0, 2.0, 3.0, 4.0])), ["k", "ts", "v"])
-    out = sorted(r["ts"].second for r in timestamp_repair(df, "ts", "v", ["k"]).collect())
+    out = sorted(
+        r["ts"].second
+        for r in timestamp_repair(df, "ts", "v", ["k"], "interval=10000").collect()
+    )
     assert out == [0, 10, 20, 30]
 
 
@@ -135,9 +138,9 @@ def test_value_fill_methods(spark):
     df = spark.createDataFrame(
         [("k", t[0], 1.0), ("k", t[1], None), ("k", t[2], 3.0)], ["k", "ts", "v"]
     )
-    lin = sorted(r["v"] for r in value_fill(df, "ts", "v", ["k"], "linear").collect())
+    lin = sorted(r["v"] for r in value_fill(df, "ts", "v", ["k"], "method=linear").collect())
     assert lin == [1.0, 2.0, 3.0]
-    prev = sorted(r["v"] for r in value_fill(df, "ts", "v", ["k"], "previous").collect())
+    prev = sorted(r["v"] for r in value_fill(df, "ts", "v", ["k"], "method=previous").collect())
     assert prev == [1.0, 1.0, 3.0]
 
 
@@ -159,7 +162,8 @@ def test_data_quality_sql_matches_pandas_reference(spark):
     outliers exercising the rint half-even missing estimate."""
     import datetime as _dt
 
-    from cnosdb_spark.functions.quality import data_quality, data_quality_pandas
+    from cnosdb_spark.functions.quality import data_quality
+    from .twins import data_quality_pandas
     from cnosdb_spark.session import read_table
     from .conftest import SF_DIR
 
@@ -204,7 +208,8 @@ def test_data_quality_null_key_group_drops(spark):
     must flip with it."""
     import datetime as _dt
 
-    from cnosdb_spark.functions.quality import data_quality, data_quality_pandas
+    from cnosdb_spark.functions.quality import data_quality
+    from .twins import data_quality_pandas
 
     t0 = _dt.datetime(2024, 1, 1)
     s = lambda sec: t0 + _dt.timedelta(seconds=sec)

@@ -712,6 +712,12 @@ def test_pq_roundtrip_and_recall(spark):
     embeddings; PQ is approximate — the bar is usefulness, not equality)."""
     from cnosdb_spark.session import read_table
     from .conftest import SF_DIR
+    from .twins import (
+        ivf_assign_expr,
+        minhash_signatures_expr,
+        pq_encode_expr,
+        simhash_expr,
+    )
 
     emb = read_table(spark, SF_DIR, "embeddings")
     books = similarity.pq_codebooks(emb, "embedding", m=8, k=16)
@@ -756,6 +762,12 @@ def test_pq_topk_plan_one_scan_broadcast(spark):
     themselves ride the kernel closure, never a join)."""
     from cnosdb_spark.session import read_table
     from .conftest import SF_DIR
+    from .twins import (
+        ivf_assign_expr,
+        minhash_signatures_expr,
+        pq_encode_expr,
+        simhash_expr,
+    )
 
     emb = read_table(spark, SF_DIR, "embeddings")
     books = similarity.pq_codebooks(emb, "embedding", m=8, k=16)
@@ -802,6 +814,12 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     expression arithmetic."""
     from cnosdb_spark.session import read_table
     from .conftest import SF_DIR
+    from .twins import (
+        ivf_assign_expr,
+        minhash_signatures_expr,
+        pq_encode_expr,
+        simhash_expr,
+    )
 
     emb = read_table(spark, SF_DIR, "embeddings")
     books = similarity.pq_codebooks(emb, "embedding", m=8, k=16)
@@ -811,7 +829,7 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     }
     expr_codes = {
         r["vec_id"]: r["pq_code"]
-        for r in similarity.pq_encode_expr(emb, "embedding", books).collect()
+        for r in pq_encode_expr(emb, "embedding", books).collect()
     }
     assert arrow_codes == expr_codes
 
@@ -823,7 +841,7 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     }
     expr_asg = {
         r["vec_id"]: r["_cluster"]
-        for r in similarity.ivf_assign_expr(src, "_v", cents).collect()
+        for r in ivf_assign_expr(src, "_v", cents).collect()
     }
     assert arrow_asg == expr_asg
 
@@ -834,7 +852,7 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     }
     expr_sh = {
         r["_id"]: r["simhash"]
-        for r in dedup.simhash_expr(docs, "text", "doc_id").collect()
+        for r in simhash_expr(docs, "text", "doc_id").collect()
     }
     assert arrow_sh == expr_sh
     # empty-token rows fold to fingerprint 0 on both paths
@@ -844,7 +862,7 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     arrow_mh = {r["_id"]: tuple(r)[1:]
                 for r in dedup.minhash_signatures(docs, "text", "doc_id").collect()}
     expr_mh = {r["_id"]: tuple(r)[1:]
-               for r in dedup.minhash_signatures_expr(docs, "text", "doc_id").collect()}
+               for r in minhash_signatures_expr(docs, "text", "doc_id").collect()}
     assert arrow_mh == expr_mh
     # degenerate docs (empty / whitespace-only) agree too — word_ngrams
     # collapses short token lists to one joined shingle, so the arrays
@@ -853,7 +871,7 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     me = {r["_id"]: tuple(r)[1:]
           for r in dedup.minhash_signatures(empty, "text", "doc_id").collect()}
     mee = {r["_id"]: tuple(r)[1:]
-           for r in dedup.minhash_signatures_expr(empty, "text", "doc_id").collect()}
+           for r in minhash_signatures_expr(empty, "text", "doc_id").collect()}
     assert me == mee
 
     # NULL text rows: the kernels must match the expression forms
@@ -865,12 +883,12 @@ def test_arrow_kernels_bit_identical_to_expression_forms(spark):
     sh_n = {r["_id"]: r["simhash"]
             for r in dedup.simhash(withnull, "text", "doc_id").collect()}
     sh_ne = {r["_id"]: r["simhash"]
-             for r in dedup.simhash_expr(withnull, "text", "doc_id").collect()}
+             for r in simhash_expr(withnull, "text", "doc_id").collect()}
     assert sh_n == sh_ne and sh_n[2] == 0
     mh_n = {r["_id"]: tuple(r)[1:]
             for r in dedup.minhash_signatures(withnull, "text", "doc_id").collect()}
     mh_ne = {r["_id"]: tuple(r)[1:]
-             for r in dedup.minhash_signatures_expr(withnull, "text", "doc_id").collect()}
+             for r in minhash_signatures_expr(withnull, "text", "doc_id").collect()}
     assert mh_n == mh_ne  # normalize() coalesces NULL text upstream
 
     # NULL vectors fail loudly in the fixed-width ANN kernels (a silent
