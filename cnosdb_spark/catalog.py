@@ -34,7 +34,6 @@ materializes the merge so steady-state reads skip it entirely.
 from __future__ import annotations
 
 import contextlib
-import hashlib
 import json
 import os
 import re
@@ -202,19 +201,6 @@ class Catalog:
             for root, _dirs, fs in os.walk(self._db_path(db))
             for f in fs
         )
-
-    def metadata_digest(self) -> str:
-        """Digest of every database's options and every table's schema —
-        the catalog state the information_schema views are built from."""
-        meta = {
-            db: [self.database_options(db), {
-                t: self.get_schema(db, t).to_json() for t in self.list_tables(db)
-            }]
-            for db in self.list_databases()
-        }
-        return hashlib.md5(
-            json.dumps([self.root, meta], sort_keys=True).encode()
-        ).hexdigest()
 
     def list_databases(self) -> list[str]:
         if not os.path.isdir(self.root):
@@ -600,16 +586,21 @@ class Catalog:
                 ).distinct().write.parquet(os.path.join(stage, _SERIES_DIR))
         return n
 
-    def series(self, db: str, name: str) -> DataFrame:
+    def series(self, db: str, name: str, where: str | None = None) -> DataFrame:
         """Distinct series (tag tuples). Served from the write-maintained
         series index when present — a tag-only query then never touches
         data files (the point of RewriteTagScan, rewrite_tag_scan.rs:16-60);
-        falls back to a distinct over the raw table otherwise."""
+        falls back to a distinct over the raw table otherwise. With a
+        ``where`` predicate: the series of the merged rows it keeps."""
         schema = self.get_schema(db, name)
         sp = self._series_path(db, name)
-        if os.path.isdir(sp):
+        if where:
+            src = self.read(db, name).filter(F.expr(where))
+        elif os.path.isdir(sp):
             return self.spark.read.parquet(sp).distinct()
-        return self.read_raw(db, name).select(*schema.tags).distinct()
+        else:
+            src = self.read_raw(db, name)
+        return src.select(*schema.tags).distinct()
 
     # ---------- reads ----------
     def read_raw(self, db: str, name: str) -> DataFrame:
@@ -785,12 +776,12 @@ class Catalog:
             shutil.rmtree(stage, ignore_errors=True)
 
     # ---------- time-series metadata queries ----------
-    def show_series(self, db: str, name: str) -> DataFrame:
-        """SHOW SERIES: distinct tag tuples formatted
+    def show_series(self, db: str, name: str, where: str | None = None) -> DataFrame:
+        """SHOW SERIES [WHERE]: distinct tag tuples formatted
         ``measurement,tag=val,...`` (sql/planner.rs:1400-1406). Tag-only
         projection is DISTINCT series by definition (rewrite_tag_scan.rs)."""
         schema = self.get_schema(db, name)
-        df = self.series(db, name)
+        df = self.series(db, name, where)
         parts = [F.lit(name)]
         for t in sorted(schema.tags):  # lexical tag-key order in series keys
             parts.append(
@@ -798,16 +789,18 @@ class Catalog:
             )
         return df.select(F.concat(*parts).alias("key")).orderBy("key")
 
-    def show_tag_values(self, db: str, name: str, keys: list[str]) -> DataFrame:
-        """SHOW TAG VALUES WITH KEY IN (...): distinct (key, value) pairs
-        (sql/planner.rs:1408-1421)."""
+    def show_tag_values(
+        self, db: str, name: str, keys: list[str], where: str | None = None
+    ) -> DataFrame:
+        """SHOW TAG VALUES WITH KEY IN (...) [WHERE]: distinct (key, value)
+        pairs (sql/planner.rs:1408-1421)."""
         schema = self.get_schema(db, name)
         bad = [k for k in keys if k not in schema.tags]
         if bad:
             raise ValueError(f"not tag columns: {bad}")
         if not keys:  # e.g. WITH KEY NOT IN (<all tags>) → empty result
             return self.spark.createDataFrame([], "key string, value string")
-        df = self.series(db, name)
+        df = self.series(db, name, where)
         out = None
         for k in keys:
             part = (

@@ -17,7 +17,6 @@ Statement surface (parser.rs):
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -72,9 +71,11 @@ _CODEC_COMPAT = {
 
 # Temp views belong to the SparkSession, not to an Engine, so their cache
 # does too: per session, view name -> the stamp the view was built from
-# (see Engine._register_views), plus the information-schema digest.
+# (see Engine._register_views).
 _SESSION_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-_SYS_DIGEST = "__information_schema__"  # map key; never a view name
+# ``db.`` of a dotted name; the lookahead leaves the next name unconsumed
+_DB_DOT = re.compile(r"\b(\w+)\.(?=(\w+))")
+_SYS_SCHEMAS = ("information_schema", "cluster_schema", "usage_schema")
 
 
 def _check_codec(codec: str | None, ftype: str) -> None:
@@ -467,9 +468,12 @@ class Engine:
         raise ValueError(f"unsupported statement: {stmt[:80]!r}")
 
     # ---------------------------------------------------------------- DQL
-    def _register_views(self) -> str | None:
+    def _register_views(self) -> set[tuple[str, str]]:
         """Register catalog tables as temp views: bare names for the
-        current database, ``__db__table`` (see ``_qualify``) for others.
+        current database, ``__db__table`` (see ``_qualify``) for others;
+        external and stream tables under their own names. Returns the
+        (db, table) pairs listed, for ``_qualify``. System tables are not
+        registered here: ``_qualify`` builds those a statement names.
 
         Per SparkSession, ``_SESSION_VIEWS`` maps each view to the stamp it
         was built from: catalog root, db, db options, the clock offset if
@@ -479,6 +483,7 @@ class Engine:
         A mapped view that no current listing produces is dropped."""
         views = _SESSION_VIEWS.setdefault(self.spark, {})
         want: dict[str, tuple] = {}  # view -> (stamp, builds its DataFrame)
+        tables: set[tuple[str, str]] = set()
 
         def db_stamp(cat: Catalog, db: str) -> tuple:
             opts = cat.database_options(db)
@@ -489,6 +494,7 @@ class Engine:
         def add_tables(cat: Catalog, db: str, prefix: str) -> None:
             stamp = db_stamp(cat, db)
             for name in cat.list_tables(db):
+                tables.add((db, name))
                 want[prefix + name] = (
                     (*stamp, name, cat.version(db, name)),
                     partial(cat.read, db, name),
@@ -522,137 +528,116 @@ class Engine:
                      tuple(st.columns or ())),
                     partial(_stream_view, self.catalog, src_db, st),
                 )
-        for view in [v for v in views if v != _SYS_DIGEST and v not in want]:
+        for view in [v for v in views if v not in want]:
             del views[view]
             self.spark.catalog.dropTempView(view)
         for view, (stamp, build) in want.items():
             if views.get(view) != stamp:
                 build().createOrReplaceTempView(view)
                 views[view] = stamp
+        return tables
+
+    def _build_sys_views(self, named: set[tuple[str, str]]) -> None:
+        """Build the ``information_schema`` / ``cluster_schema`` views a
+        statement names, from the session state as it is now (the
+        reference resolves them through metadata providers when the
+        planner meets the name: information_schema_provider,
+        cluster_schema_provider). cluster_schema exists only under the
+        home tenant (users.slt:80-96 / tenants.slt:188-196 expect "Table
+        not found" under other tenants): there a leftover view is dropped
+        instead, unless it is a user table of a db named cluster_schema."""
         from . import sys_schema
 
-        # information_schema.queries is self-referential (it must show the
-        # statement being executed) — rebuilt every call; one 1-row frame
+        admin, owner = self._is_admin(), self._sys_role() == "owner"
+        members = self.tenants.get(self.current_tenant, {}).get("members", {})
         cur = getattr(self, "_current_stmt", None)
-        qrows = [
-            (
-                "1", "batch", cur, self.user, self.current_tenant,
-                self.database, "OPTIMIZING", 0.0,
-            )
-        ] if cur else []
-        self.spark.createDataFrame(
-            qrows,
-            "query_id string, query_type string, query_text string, "
-            "user_name string, tenant_name string, database_name string, "
-            "state string, duration double",
-        ).createOrReplaceTempView("__information_schema__queries")
-
-        res_rows = self.resource_status_rows() or []
-        if not self._is_admin():
-            # non-admins see only the current tenant's resources
-            # (resource_status.slt:59-68: u001 under cnosdb sees neither
-            # 't001' nor 't001-db001', but saw them under tenant t001)
-            res_rows = [
-                r for r in res_rows
-                if r[0] == self.current_tenant
-                or r[0].startswith(f"{self.current_tenant}-")
-            ]
-        # The remaining ~10 information/cluster-schema views are pure
-        # functions of driver-side state (catalog schema files, session
-        # dicts) — re-deriving them was ~2/3 of warm engine-statement
-        # latency. Skip the whole block when that state's digest equals
-        # the one the session's views were last built from.
-        digest = self._sys_views_digest(res_rows)
-        if views.get(_SYS_DIGEST) == digest:
-            return None
-        sys_schema.databases_df(
-            self.spark, self.catalog, hidden=self._hidden_dbs
-        ).createOrReplaceTempView("__information_schema__databases")
-        sys_schema.tables_df(
-            self.spark, self.catalog, self.external, self.streams,
-            self.external_dbs,
-        ).createOrReplaceTempView("__information_schema__tables")
-        sys_schema.columns_df(self.spark, self.catalog).createOrReplaceTempView(
-            "__information_schema__columns"
-        )
-        self.spark.createDataFrame(
-            res_rows,
-            "name string, action string, try_count string, status string",
-        ).createOrReplaceTempView("__information_schema__resource_status")
-        # cluster_schema exists only under the system default tenant
-        # (users.slt:80-96 / tenants.slt:188-196 expect "Table not found"
-        # under other tenants), and its contents are admin-only
-        # (users.slt:57-70: a plain member sees no rows)
-        if self.current_tenant == self._home_tenant:
-            visible_tenants = {
-                k: v for k, v in self.tenants.items()
-                if k not in self._hidden_tenants  # scheduled drops hide
-            }  # (dcl_tenant.slt:337 after `drop tenant … after '1m'`)
-            sys_schema.tenants_df(
-                self.spark, visible_tenants if self._is_admin() else {}
-            ).createOrReplaceTempView("__cluster_schema__tenants")
-            sys_schema.users_df(
-                self.spark, self.users if self._is_admin() else {}
-            ).createOrReplaceTempView("__cluster_schema__users")
-        else:
-            for v in ("__cluster_schema__tenants", "__cluster_schema__users"):
-                try:
-                    self.spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
-        sys_schema.roles_df(
-            self.spark,
+        builders = {
+            "information_schema.databases": lambda: sys_schema.databases_df(
+                self.spark, self.catalog, hidden=self._hidden_dbs
+            ),
+            "information_schema.tables": lambda: sys_schema.tables_df(
+                self.spark, self.catalog, self.external, self.streams,
+                self.external_dbs,
+            ),
+            "information_schema.columns": lambda: sys_schema.columns_df(
+                self.spark, self.catalog
+            ),
+            # self-referential: it shows the statement being executed
+            "information_schema.queries": lambda: self.spark.createDataFrame(
+                [(
+                    "1", "batch", cur, self.user, self.current_tenant,
+                    self.database, "OPTIMIZING", 0.0,
+                )] if cur else [],
+                "query_id string, query_type string, query_text string, "
+                "user_name string, tenant_name string, database_name string, "
+                "state string, duration double",
+            ),
+            "information_schema.resource_status": lambda: self.spark.createDataFrame(
+                [
+                    (name, r["action"], str(r["try_count"]), r["status"])
+                    for name, r in sorted(self._resources.items())
+                    # non-admins see only the current tenant's resources
+                    # (resource_status.slt:59-68: u001 under cnosdb sees
+                    # neither 't001' nor 't001-db001', but saw them under
+                    # tenant t001)
+                    if admin or name == self.current_tenant
+                    or name.startswith(f"{self.current_tenant}-")
+                ],
+                "name string, action string, try_count string, status string",
+            ),
             # roles are visible only to tenant owners (dcl_role.slt: a
             # plain member's SELECT on information_schema.roles is empty)
-            self.roles if self._sys_role() == "owner" else None,
-        ).createOrReplaceTempView("__information_schema__roles")
-        members = self.tenants.get(self.current_tenant, {}).get("members", {})
-        sys_schema.enabled_roles_df(
+            "information_schema.roles": lambda: sys_schema.roles_df(
+                self.spark, self.roles if owner else None
+            ),
             # admins are not tenant members — empty view for them
             # (enabled_roles.slt: root sees no enabled role anywhere)
-            self.spark, None if self._is_admin() else members.get(self.user)
-        ).createOrReplaceTempView("__information_schema__enabled_roles")
-        sys_schema.members_df(self.spark, members).createOrReplaceTempView(
-            "__information_schema__members"
-        )
-        member_role = members.get(self.user)
-        sys_schema.database_privileges_df(
-            self.spark,
-            self.current_tenant,
-            self.grants,
-            self.roles,
+            "information_schema.enabled_roles": lambda: sys_schema.enabled_roles_df(
+                self.spark, None if admin else members.get(self.user)
+            ),
+            "information_schema.members": lambda: sys_schema.members_df(
+                self.spark, members
+            ),
             # owners/admins see every grant; a plain member only their role's
-            only_role=None if self._sys_role() == "owner" else member_role,
-        ).createOrReplaceTempView("__information_schema__database_privileges")
-        # set only after every view registered, so a mid-build failure
-        # retries the whole block next statement
-        views[_SYS_DIGEST] = digest
+            "information_schema.database_privileges": lambda: (
+                sys_schema.database_privileges_df(
+                    self.spark, self.current_tenant, self.grants, self.roles,
+                    only_role=None if owner else members.get(self.user),
+                )
+            ),
+            # contents are admin-only (users.slt:57-70: a plain member sees
+            # no rows); a scheduled drop hides a tenant (dcl_tenant.slt:337)
+            "cluster_schema.tenants": lambda: sys_schema.tenants_df(
+                self.spark, {
+                    k: v for k, v in self.tenants.items()
+                    if k not in self._hidden_tenants
+                } if admin else {},
+            ),
+            "cluster_schema.users": lambda: sys_schema.users_df(
+                self.spark, self.users if admin else {}
+            ),
+        }
+        for schema, name in named:
+            build = builders.get(f"{schema}.{name}")
+            view = f"__{schema}__{name}"
+            if build is None:
+                continue
+            if schema == "cluster_schema" and self.current_tenant != self._home_tenant:
+                if view not in _SESSION_VIEWS.get(self.spark, {}):
+                    self.spark.catalog.dropTempView(view)
+            else:
+                build().createOrReplaceTempView(view)
 
-    def _sys_views_digest(self, res_rows: list) -> str:
-        """Digest of the state the information/cluster-schema views are
-        derived from, as canonical JSON of plain data: the catalog's
-        metadata by content (any DDL or schemaless schema evolution, even
-        one that bypasses the Engine, changes it) and this Engine's session
-        state by value. Content, not table versions: a data write must not
-        rebuild these views."""
-        state = [
-            self.catalog.metadata_digest(), self._home_tenant,
-            self.current_tenant, self.user, self.database, self.external,
-            self.external_dbs, self.tenants, self.users, self.roles,
-            self.grants, sorted(self._hidden_dbs), sorted(self._hidden_tenants),
-            res_rows, {
-                s: [st.src_db, st.src_table, st.columns,
-                    getattr(st, "home_db", "public")]
-                for s, st in self.streams.items()
-            },
-        ]
-        return hashlib.md5(json.dumps(state, sort_keys=True).encode()).hexdigest()
-
-    def _qualify(self, sql: str) -> str:
-        """Rewrite known ``db.table`` references to their mangled temp-view
-        names (Spark temp views live in a flat namespace). Substitutions are
-        applied only OUTSIDE quoted regions so a string literal like
-        ``'db2.t1'`` (or a quoted identifier) is never mangled."""
+    def _qualify(self, sql: str, tables: set[tuple[str, str]]) -> str:
+        """Rewrite ``db.table`` references to their temp-view names (Spark
+        temp views live in a flat namespace), in one pass: a table of
+        ``tables`` (``_register_views``' listing) becomes its bare view in
+        the current database and ``__db__table`` in others;
+        ``information_schema.x``, ``cluster_schema.x`` and
+        ``usage_schema.x`` (any case) become ``__<schema>__x``, and the
+        system views so named are built for this statement. Only OUTSIDE
+        quoted regions, so a string literal like ``'db2.t1'`` (or a quoted
+        identifier) is never mangled."""
         # external tables with non-identifier names ("ba sic") are
         # addressed as quoted tokens — map those to their sanitized views
         # before the quote-aware pass (which skips quoted regions)
@@ -660,30 +645,17 @@ class Engine:
             if not re.fullmatch(r"\w+", ext):
                 view = _ext_view_name(ext)
                 sql = sql.replace(f'"{ext}"', view).replace(f"'{ext}'", view)
+        named: set[tuple[str, str]] = set()
 
-        def subst(segment: str) -> str:
-            segment = re.sub(
-                r"\binformation_schema\.(\w+)", r"__information_schema__\1",
-                segment, flags=re.I,
-            )
-            segment = re.sub(
-                r"\busage_schema\.(\w+)", r"__usage_schema__\1",
-                segment, flags=re.I,
-            )
-            segment = re.sub(
-                r"\bcluster_schema\.(\w+)", r"__cluster_schema__\1",
-                segment, flags=re.I,
-            )
-            for db in self.catalog.list_databases():
-                for name in self.catalog.list_tables(db):
-                    # current database: qualified db.tbl → the bare view;
-                    # other databases: → the __db__tbl mangled view
-                    target = name if db == self.database else f"__{db}__{name}"
-                    segment = re.sub(
-                        rf"\b{re.escape(db)}\.{re.escape(name)}\b",
-                        target, segment,
-                    )
-            return segment
+        def prefix(m: re.Match) -> str:
+            # only the ``db.`` is consumed: in a.b.c, b.c is tried next
+            db, name = m.groups()
+            if db.lower() in _SYS_SCHEMAS:
+                named.add((db.lower(), name.lower()))
+                return f"__{db.lower()}__"
+            if (db, name) in tables:
+                return "" if db == self.database else f"__{db}__"
+            return m.group(0)
 
         out: list[str] = []
         plain: list[str] = []
@@ -694,35 +666,40 @@ class Engine:
                 if ch == in_str:
                     in_str = None
             elif ch in ("'", '"'):
-                out.append(subst("".join(plain)))
+                out.append(_DB_DOT.sub(prefix, "".join(plain)))
                 plain = []
                 out.append(ch)
                 in_str = ch
             else:
                 plain.append(ch)
-        out.append(subst("".join(plain)))
+        out.append(_DB_DOT.sub(prefix, "".join(plain)))
+        if named:
+            self._build_sys_views(named)
         return "".join(out)
 
-    def _written_count(self, fmt: str, url: str, header: bool = False) -> int:
-        """Affected-rows count for a COPY export, taken from the WRITTEN
-        files instead of re-executing the exported query: the write is
-        the single evaluation (a re-run could disagree with what was
-        written under concurrent writes — the sql_arrow TOCTOU shape),
-        and for parquet the read-back count is footer metadata, no scan."""
-        reader = self.spark.read
-        if fmt == "csv":
-            # multiLine: the writer legally emits quoted embedded newlines;
-            # without it the read-back splits those into extra records and
-            # the affected-rows count over-reports. escape matches the
-            # RFC 4180 convention the export writer uses.
-            return (
-                reader.option("header", str(header).lower())
-                .option("multiLine", "true")
-                .option("escape", '"')
-                .csv(url)
-                .count()
-            )
-        return getattr(reader, fmt)(url).count()
+    def _export(self, df: DataFrame, url: str, fmt: str | None) -> DataFrame:
+        """COPY INTO '<url>': write ``df`` (parquet by default) and return
+        the affected-rows frame. A CSV export is headered, so it
+        round-trips through CREATE EXTERNAL TABLE ... WITH HEADER ROW
+        (copy_into_location__WINDOWS.slt), and writes RFC 4180 doubled
+        quotes (escape='"'), the external CSV reader's convention.
+
+        The count comes from the WRITTEN files instead of re-executing the
+        query: the write is the single evaluation (a re-run could disagree
+        with what was written under concurrent writes — the sql_arrow
+        TOCTOU shape), and for parquet the read-back count is footer
+        metadata, no scan. A CSV read-back needs multiLine: the writer
+        legally emits quoted embedded newlines, which would otherwise
+        split into extra records and over-report the count."""
+        url, fmt = self._winpath(url), (fmt or "parquet").lower()
+        csv = {"header": "true", "escape": '"'} if fmt == "csv" else {}
+        getattr(df.write.mode("overwrite").options(**csv), fmt)(url)
+        reader = self.spark.read.options(**csv)
+        if csv:
+            reader = reader.option("multiLine", "true")
+        return self.spark.createDataFrame(
+            [(getattr(reader, fmt)(url).count(),)], ["rows"]
+        )
 
     def _read_external(self, fmt: str, path: str, opts: dict) -> DataFrame:
         path = self._winpath(path)
@@ -816,10 +793,10 @@ class Engine:
         return sql
 
     def _select(self, stmt: str) -> DataFrame:
-        self._register_views()
+        tables = self._register_views()
         stmt = self._session_fns(stmt)
         if re.search(r"\btime_window_gapfill\s*\(", stmt, re.I):
-            return self._gapfill_select(stmt)
+            return self._gapfill_select(stmt, tables)
         m = re.match(
             r"SELECT\s+(timestamp_repair|value_fill|value_repair)\s*\(",
             stmt.strip(), re.I,
@@ -845,12 +822,13 @@ class Engine:
                 "Stream table can only be used as source table in insert "
                 "select statements."
             )
-        self._check_string_fn_args(stmt)
-        raw_count = self._raw_count_select(stmt)
+        src = self._from_table(stmt)
+        self._check_string_fn_args(stmt, src)
+        raw_count = self._raw_count_select(stmt, src)
         if raw_count is not None:
             return raw_count
-        stmt = self._coerce_schema_typed_args(stmt)
-        qualified = self._qualify(stmt)
+        stmt = self._coerce_schema_typed_args(stmt, src)
+        qualified = self._qualify(stmt, tables)
         rewritten = rewrite_dql(qualified)
         try:
             with self._ansi_lock:
@@ -872,26 +850,22 @@ class Engine:
         self._reject_cross_join(df)
         return df
 
-    def _raw_count_select(self, stmt: str):
+    def _raw_count_select(self, stmt: str, src: tuple | None):
         """``SELECT count(*|field) FROM t`` on a tskv table counts PRE-MERGE
         physical rows in the reference — the AggregateFilterTskvExec count
         pushdown skips the LWW merge (count.slt:117 expects 11 over 6 merged
         rows; exact_count(*) is the post-merge one). Only the bare
         single-aggregate shape takes this path; anything with WHERE / GROUP
-        BY / joins aggregates over merged rows as usual."""
+        BY / joins aggregates over merged rows as usual. ``src`` is
+        ``_from_table(stmt)``, here the only FROM."""
         m = re.match(
             r"\s*SELECT\s+(?<!exact_)count\s*\(\s*(\*|\w+)\s*\)\s+"
-            r"FROM\s+([\w.]+)\s*;?\s*$",
+            r"FROM\s+[\w.]+\s*;?\s*$",
             stmt, re.I,
         )
-        if not m:
-            return None
-        arg, tbl = m.groups()
-        try:
-            db, name = self._split_table_name(tbl)
-            sch = self._cat_for(db).get_schema(db, name)
-        except Exception:
+        if not m or src[3] is None:
             return None  # external/stream/system tables: normal path
+        arg, (_, db, name, sch) = m.group(1), src
         if arg != "*" and arg.lower() not in {
             TIME_COL, *(t.lower() for t in sch.tags),
             *(f.lower() for f in sch.fields),
@@ -903,20 +877,27 @@ class Engine:
         label = f"COUNT({'*' if arg == '*' else arg})"
         return raw.agg(F.count(col).alias(label))
 
-    def _coerce_schema_typed_args(self, stmt: str) -> str:
+    def _from_table(self, stmt: str) -> tuple | None:
+        """The statement's first ``FROM <name>`` as (match, db, table,
+        schema); schema is None when the name is no tskv table (external,
+        stream, system table, subquery alias). None without a FROM."""
+        fm = re.search(r"\bFROM\s+([\w.]+)", stmt, re.I)
+        if not fm:
+            return None
+        db, name = self._split_table_name(fm.group(1))
+        try:
+            return fm, db, name, self._cat_for(db).get_schema(db, name)
+        except ValueError:
+            return fm, db, name, None
+
+    def _coerce_schema_typed_args(self, stmt: str, src: tuple | None) -> str:
         """Schema-aware dialect coercions Spark renders differently:
         boolean fields inside concat()/ascii() render '0'/'1' (ascii.slt:87,
         concat.slt:93), the time column inside concat() renders ISO-'T'
         (concat.slt:139), and string FIELDS inside corr() coerce safely to
-        NULL (corr.slt:55 — while string TAGS are planning errors)."""
-        fm = re.search(r"\bFROM\s+([\w.]+)", stmt, re.I)
-        sch = None
-        if fm:
-            try:
-                db, name = self._split_table_name(fm.group(1))
-                sch = self._cat_for(db).get_schema(db, name)
-            except Exception:
-                sch = None
+        NULL (corr.slt:55 — while string TAGS are planning errors).
+        ``src`` is ``_from_table(stmt)``."""
+        sch = src and src[3]
         # f32 log/atan2 parity applies to literal-only statements too
         # (log.slt `select log(1)`), so it runs before the schema gate
         from .sql.rewriter import rewrite_f32_math
@@ -1151,15 +1132,13 @@ class Engine:
     # are signature errors (right.slt:72-100, string_repeat.slt:69)
     _INT_ARG2_FNS = ("left", "right", "repeat", "lpad", "rpad")
 
-    def _check_string_fn_args(self, stmt: str) -> None:
-        fm = re.search(r"\bFROM\s+([\w.]+)", stmt, re.I)
-        if not fm:
-            return
-        try:
-            db, name = self._split_table_name(fm.group(1))
-            self._cat_for(db).get_schema(db, name)
-        except Exception:
+    def _check_string_fn_args(self, stmt: str, src: tuple | None) -> None:
+        """Reject the argument types DataFusion's signatures reject, by the
+        FROM table's column types; ``src`` is ``_from_table(stmt)``."""
+        if src is None or src[3] is None:
             return  # external/stream/subquery sources: no tskv signature map
+        fm, db, name, sch = src
+        schemas = {name: sch}  # by qualifier; None: not a table of db
 
         # multi-table FROM (joins / comma lists): an unqualified column can
         # belong to ANY of the tables, possibly with different types — only
@@ -1176,9 +1155,14 @@ class Engine:
             DIFFERENT types) or the first FROM table when unqualified."""
             if qualifier is None and multi_table:
                 return None
-            try:
-                sch = self._cat_for(db).get_schema(db, qualifier or name)
-            except Exception:
+            qualifier = qualifier or name
+            if qualifier not in schemas:
+                try:
+                    schemas[qualifier] = self._cat_for(db).get_schema(db, qualifier)
+                except ValueError:
+                    schemas[qualifier] = None
+            sch = schemas[qualifier]
+            if sch is None:
                 return None
             if col.lower() == "time":
                 return "time"
@@ -1196,7 +1180,6 @@ class Engine:
 
             items = [i.strip() for i in _split_args(sm.group(1))]
             if "*" in items:
-                sch = self._cat_for(db).get_schema(db, name)
                 cols = {TIME_COL, *sch.tags, *sch.fields}
                 if any(i.strip('"') in cols for i in items if i != "*"):
                     raise ValueError(
@@ -1378,7 +1361,7 @@ class Engine:
             ):
                 raise ValueError("This feature is not implemented: cross join")
 
-    def _gapfill_select(self, stmt: str) -> DataFrame:
+    def _gapfill_select(self, stmt: str, tables: set) -> DataFrame:
         """``SELECT time_window_gapfill(t, interval 'X') AS w, g...,
         locf(agg) AS a / interpolate(agg) AS b FROM tbl [WHERE ...]
         GROUP BY ...`` → the DataFrame gapfill rewrite
@@ -1404,7 +1387,7 @@ class Engine:
                 "[WHERE ...] GROUP BY <gapfill>, <tags...>"
             )
         select_list, table, where, _group_by, order_by = m.groups()
-        df = self.spark.table(self._qualify(table))
+        df = self.spark.table(self._qualify(table, tables))
         if where:
             df = df.filter(F.expr(where))
 
@@ -1924,12 +1907,30 @@ class Engine:
                                 f"type across values list at row {r} column {c}"
                             )
             from .sql.rewriter import (
+                _CAST_INT_TS,
                 escape_literal_backslashes,
                 rewrite_cast_int_timestamp,
                 rewrite_overflow_decimal_literals,
             )
 
-            vsql = rewrite_cast_int_timestamp(src.rstrip(";"))
+            # CAST(<int> AS TIMESTAMP) is epoch ns, cast to µs: its sub-µs
+            # residue goes to the _ns_res storage column, so the point gets
+            # the (time, _ns_res) key line-protocol ingest gives it
+            ti = next((i for i, c in enumerate(cols) if c.lower() == TIME_COL), None)
+            ns = [
+                _CAST_INT_TS.fullmatch(row[ti].strip())
+                if ti is not None and ti < len(row) else None
+                for row in rows_args
+            ]
+            values = src.rstrip(";")
+            if any(ns):
+                rows_args = [
+                    [*row, str(int(m.group(1)) % 1000) if m else "0"]
+                    for row, m in zip(rows_args, ns)
+                ]
+                cols = [*cols, NS_RESIDUE_COL]
+                values = "VALUES " + ", ".join(f"({', '.join(r)})" for r in rows_args)
+            vsql = rewrite_cast_int_timestamp(values)
             vsql = rewrite_overflow_decimal_literals(vsql)
             vsql = escape_literal_backslashes(vsql)
             try:
@@ -2230,27 +2231,11 @@ class Engine:
 
             open_p = stmt.index("(", m.end() - 1)
             end = _find_call_end(stmt, open_p)
-            url = self._winpath(m.group(1))
-            query = stmt[open_p + 1 : end - 1]
             fm = re.search(
                 r"FILE_FORMAT\s*=\s*\(\s*TYPE\s*=\s*'(\w+)'\s*\)", stmt[end:], re.I
             )
-            fmt = fm.group(1) if fm else None
-            df = self._select(query)
-            fmt = (fmt or "parquet").lower()
-            writer = df.write.mode("overwrite")
-            hdr = fmt == "csv"
-            if hdr:
-                # a headered export round-trips through CREATE EXTERNAL
-                # TABLE ... WITH HEADER ROW (copy_into_location__WINDOWS.slt);
-                # escape='"' writes RFC 4180 doubled quotes so the external
-                # CSV reader (same convention) round-trips embedded
-                # quotes/newlines byte-exactly
-                writer = writer.option("header", "true").option("escape", '"')
-            getattr(writer, fmt)(url)
-            return self.spark.createDataFrame(
-                [(self._written_count(fmt, url, header=hdr),)], ["rows"]
-            )
+            df = self._select(stmt[open_p + 1 : end - 1])
+            return self._export(df, m.group(1), fm.group(1) if fm else None)
         m = re.match(
             r"COPY\s+INTO\s+'([^']+)'\s+FROM\s+\"?([\w.]+)\"?\s*"
             r"(?:FILE_FORMAT\s*=\s*\(\s*TYPE\s*(?:=\s*)?'(\w+)'\s*\))?\s*;?\s*$",
@@ -2259,17 +2244,7 @@ class Engine:
         )
         if m:  # export of a whole table (dcl/assignment.slt space-form TYPE)
             url, tbl, fmt = m.groups()
-            url = self._winpath(url)
-            df = self._select(f"SELECT * FROM {tbl}")
-            fmt = (fmt or "parquet").lower()
-            writer = df.write.mode("overwrite")
-            hdr = fmt == "csv"
-            if hdr:
-                writer = writer.option("header", "true").option("escape", '"')
-            getattr(writer, fmt)(url)
-            return self.spark.createDataFrame(
-                [(self._written_count(fmt, url, header=hdr),)], ["rows"]
-            )
+            return self._export(self._select(f"SELECT * FROM {tbl}"), url, fmt)
         m = re.match(
             r"COPY\s+INTO\s+\"?([\w.]+)\"?\s*(?:\(([^)]*)\))?\s+FROM\s+'([^']+)'\s*"
             r"(?:FILE_FORMAT\s*=\s*\(\s*TYPE\s*(?:=\s*)?'(\w+)'(.*?)\))?\s*;?\s*$",
@@ -2506,13 +2481,6 @@ class Engine:
             target
         )
         return None
-
-    def resource_status_rows(self) -> list[tuple[str, str, str, str]]:
-        self._process_resources()
-        return [
-            (name, r["action"], str(r["try_count"]), r["status"])
-            for name, r in sorted(self._resources.items())
-        ]
 
     def _require_db_full(self, db: str) -> None:
         """Member-role DDL needs a Full (ALL) grant on the database
@@ -2902,34 +2870,10 @@ class Engine:
                 # the reference grammar takes a bare identifier after FROM
                 # (show_series.slt:32 "Expected end of statement, found: .")
                 raise ValueError("sql parser error: Expected end of statement, found: .")
-            db, tbl = (db or self.database), tbl
+            db = db or self.database
             if where:
-                schema = self.catalog.get_schema(db, tbl)
-                fields_in_where = [
-                    f for f in schema.fields if re.search(rf"\b{re.escape(f)}\b", where)
-                ]
-                if fields_in_where:
-                    # show_series.slt:107 — WHERE may touch tags/time only
-                    raise ValueError(
-                        "Semantic error: SHOW SERIES does not support where "
-                        f"clause contains field {fields_in_where[0]}"
-                    )
-                keys = (
-                    self.catalog.read(db, tbl)
-                    .filter(F.expr(where))
-                    .select(*schema.tags)
-                    .distinct()
-                )
-                parts = [F.lit(tbl)]
-                for t in sorted(schema.tags):  # lexical key order, as catalog.show_series
-                    parts.append(
-                        F.when(
-                            F.col(t).isNotNull(), F.concat(F.lit(f",{t}="), F.col(t))
-                        ).otherwise(F.lit(""))
-                    )
-                out = keys.select(F.concat(*parts).alias("key")).orderBy("key")
-            else:
-                out = self.catalog.show_series(db, tbl)
+                _reject_fields_in_where(self.catalog.get_schema(db, tbl), where)
+            out = self.catalog.show_series(db, tbl, where)
             out = _apply_show_order(out, order, valid=("key",))
             if offset:
                 out = out.offset(int(offset))
@@ -2958,31 +2902,8 @@ class Engine:
                 [t for t in schema.tags if t not in listed] if negate else listed
             )
             if where:
-                fields_in_where = [
-                    f for f in schema.fields if re.search(rf"\b{re.escape(f)}\b", where)
-                ]
-                if fields_in_where:
-                    # show_tag_values.slt:131 (same checker as SHOW SERIES)
-                    raise ValueError(
-                        "Semantic error: SHOW SERIES does not support where "
-                        f"clause contains field {fields_in_where[0]}"
-                    )
-                base = self.catalog.read(db, tbl).filter(F.expr(where))
-                parts = []
-                for k in keys:
-                    if k not in schema.tags:
-                        raise ValueError(f"not tag columns: [{k!r}]")
-                    parts.append(
-                        base.select(F.lit(k).alias("key"), F.col(k).alias("value"))
-                        .filter(F.col("value").isNotNull())
-                        .distinct()
-                    )
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionAll(p)
-                out = out.distinct().orderBy("key", "value")
-            else:
-                out = self.catalog.show_tag_values(db, tbl, keys)
+                _reject_fields_in_where(schema, where)
+            out = self.catalog.show_tag_values(db, tbl, keys, where)
             out = _apply_show_order(out, order, valid=("key", "value"))
             if offset:
                 out = out.offset(int(offset))
@@ -3340,6 +3261,17 @@ def _check_stored_schema(name, schema, df, tagkeys) -> None:
             raise ValueError(
                 f"Table {name}: column {f.name} is {shown}, "
                 f"the write has {_TYPE_DISPLAY[kind]}"
+            )
+
+
+def _reject_fields_in_where(schema: TskvTableSchema, where: str) -> None:
+    """SHOW SERIES / SHOW TAG VALUES may filter on tags and time only
+    (show_series.slt:107; show_tag_values.slt:131 has the same checker)."""
+    for f in schema.fields:
+        if re.search(rf"\b{re.escape(f)}\b", where):
+            raise ValueError(
+                "Semantic error: SHOW SERIES does not support where "
+                f"clause contains field {f}"
             )
 
 

@@ -4,11 +4,15 @@ Reference: /root/reference query_server/query/src/metadata/
 {information_schema_provider, cluster_schema_provider}/ — DATABASES,
 TABLES, COLUMNS, QUERIES system tables (tests: cases/sys_table/*.slt).
 
-Spark-first: plain DataFrames derived from catalog metadata, registered
-as ``__information_schema__<name>`` temp views; the engine's qualifier
-rewrites ``information_schema.<name>`` references onto them. QUERIES /
-KILL QUERY map onto tracked StreamingQuery handles + the Spark job group
-of the session (the analogue of QueryTracker, dispatcher/query_tracker.rs).
+Spark-first: plain DataFrames derived from catalog metadata and session
+state. ``Engine._qualify`` rewrites ``information_schema.<name>`` /
+``cluster_schema.<name>`` references to ``__<schema>__<name>`` temp views
+and builds only the views a statement names, from the state at that
+statement (``Engine._build_sys_views`` holds the one name→builder table:
+these functions plus the inline QUERIES and RESOURCE_STATUS rows).
+SHOW QUERIES / KILL QUERY map onto tracked StreamingQuery handles + the
+Spark job group of the session (the analogue of QueryTracker,
+dispatcher/query_tracker.rs).
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ semantics, repeat_write LWW, DDL/DML round trips, COPY, SHOW."""
 from __future__ import annotations
 
 import os
+from datetime import datetime
 
 import pytest
 
@@ -1072,3 +1073,94 @@ def test_series_index_multi_bucket_insert_not_inflated(eng):
     assert {r["t0"] for r in eng.catalog.series("public", "sev").collect()} == {
         "a", "b"
     }
+
+
+def test_show_where_filters_merged_view(eng):
+    """SHOW SERIES / SHOW TAG VALUES with WHERE filter the merge-on-read
+    view (not the series index) and keep the unfiltered statements' key
+    format and row order; a field in the WHERE is a semantic error."""
+    eng.sql("CREATE DATABASE db2")
+    eng.sql("CREATE TABLE db2.m(f0 DOUBLE, TAGS(host, region))")
+    eng.sql(
+        """INSERT INTO db2.m(time, host, region, f0) VALUES
+        ('2024-01-01 00:00:01', 'h2', 'eu', 1.0),
+        ('2024-01-01 00:00:02', 'h1', 'eu', 2.0),
+        ('2024-01-01 00:00:03', 'h3', 'us', 3.0),
+        ('2024-01-01 00:00:04', 'h4', NULL, 4.0)"""
+    )
+    tv = [
+        (r["key"], r["value"])
+        for r in eng.sql(
+            'SHOW TAG VALUES ON db2 FROM m WITH KEY IN ("region", "host") '
+            "WHERE region = 'eu' OR host = 'h4'"
+        ).collect()
+    ]
+    assert tv == [("host", "h1"), ("host", "h2"), ("host", "h4"), ("region", "eu")]
+    series = [
+        r["key"]
+        for r in eng.sql(
+            "SHOW SERIES ON db2 FROM m WHERE region = 'eu' OR host = 'h4'"
+        ).collect()
+    ]
+    assert series == ["m,host=h1,region=eu", "m,host=h2,region=eu", "m,host=h4"]
+    for stmt in (
+        "SHOW SERIES ON db2 FROM m WHERE f0 > 1",
+        'SHOW TAG VALUES ON db2 FROM m WITH KEY = "host" WHERE f0 > 1',
+    ):
+        with pytest.raises(
+            ValueError, match="does not support where clause contains field f0"
+        ):
+            eng.sql(stmt)
+
+
+def test_copy_table_export_csv_reads_back(eng, spark, tmp_path):
+    """COPY INTO '<dir>' FROM <table> writes the merged table as headered
+    RFC 4180 CSV and reports the rows it wrote."""
+    eng.sql("CREATE TABLE ex(f0 DOUBLE, TAGS(t0))")
+    eng.sql(
+        """INSERT INTO ex(time, t0, f0) VALUES
+        ('2024-01-01 00:00:01', 'a', 1.5),
+        ('2024-01-01 00:00:02', 'b "q", c', 2.5),
+        ('2024-01-01 00:00:02', 'b "q", c', 3.5)"""
+    )
+    out = str(tmp_path / "ex_csv")
+    n = eng.sql(
+        f"COPY INTO '{out}' FROM ex FILE_FORMAT = (TYPE = 'CSV')"
+    ).collect()[0]["rows"]
+    assert n == 2
+    back = (
+        spark.read.option("header", "true").option("escape", '"')
+        .schema("time timestamp, t0 string, f0 double").csv(out)
+    )
+    assert sorted(tuple(r) for r in back.collect()) == [
+        (datetime(2024, 1, 1, 0, 0, 1), "a", 1.5),
+        (datetime(2024, 1, 1, 0, 0, 2), 'b "q", c', 3.5),
+    ]
+
+
+def test_insert_values_keeps_ns_residue_like_line_protocol(eng):
+    """``CAST(<int> AS TIMESTAMP)`` in INSERT VALUES is epoch nanoseconds:
+    points a few ns apart in one µs stay distinct rows, stored under the
+    same (time, _ns_res) key the line-protocol path gives them, before
+    the epoch too."""
+    ns = [1704067200, 1704067210, -1704067195, -1704067190]
+    eng.sql("CREATE TABLE c(v DOUBLE, TAGS(t0))")
+    eng.sql(
+        "INSERT INTO c(time, t0, v) VALUES "
+        + ", ".join(
+            f"(CAST({n} AS TIMESTAMP), 'a', {float(i)})" for i, n in enumerate(ns)
+        )
+    )
+    eng.write_lines("\n".join(f"d,t0=a v={float(i)} {n}" for i, n in enumerate(ns)))
+
+    def stored(name):
+        return sorted(
+            tuple(r)
+            for r in eng.catalog.read("public", name, keep_residue=True)
+            .select("time", "_ns_res", "v").collect()
+        )
+
+    assert stored("c") == stored("d")
+    assert [(r[1], r[2]) for r in stored("c")] == [
+        (805, 2.0), (810, 3.0), (200, 0.0), (210, 1.0)
+    ]

@@ -63,3 +63,77 @@ def test_show_and_kill_queries(eng, spark, tmp_path):
     finally:
         if q.isActive:
             q.stop()
+
+
+def _sys_views(spark) -> list[str]:
+    return sorted(
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith(("__information_schema__", "__cluster_schema__"))
+    )
+
+
+def test_warm_select_builds_no_system_view(eng, spark, monkeypatch):
+    """A statement that names no system table builds none: no driver-side
+    frame, no ``__information_schema__*`` / ``__cluster_schema__*`` view."""
+    eng.sql("INSERT INTO db1.m(time, host, f0, f1) VALUES ('2024-01-01 00:00:01', 'h1', 1.5, 2)")
+    q = "SELECT host, f0 FROM db1.m"
+    eng.sql(q).collect()  # warm: the table's view is built
+    for v in _sys_views(spark):
+        spark.catalog.dropTempView(v)
+    calls = []
+    orig = type(spark).createDataFrame
+
+    def spy(self, *a, **k):
+        calls.append(a[:1])
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(type(spark), "createDataFrame", spy)
+    assert [tuple(r) for r in eng.sql(q).collect()] == [("h1", 1.5)]
+    assert calls == []
+    assert _sys_views(spark) == []
+
+
+def test_information_schema_queries_shows_running_statement(eng):
+    q = (
+        "SELECT query_type, query_text, user_name, tenant_name, "
+        "database_name, state FROM information_schema.queries"
+    )
+    assert [tuple(r) for r in eng.sql(q).collect()] == [
+        ("batch", q, "root", "cnosdb", "public", "OPTIMIZING")
+    ]
+
+
+def test_cluster_schema_only_under_home_tenant(eng):
+    q = "SELECT tenant_name FROM cluster_schema.tenants"
+    eng.sql("CREATE TENANT t1")
+    assert {r[0] for r in eng.sql(q).collect()} == {"cnosdb", "t1"}
+    eng.set_tenant("t1")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        eng.sql(q).collect()
+
+
+def _qualify(eng, sql: str) -> str:
+    return eng._qualify(sql, eng._register_views())
+
+
+def test_qualify_rewrites_known_tables_only(eng):
+    eng.sql("CREATE TABLE t(f0 DOUBLE, TAGS(k))")
+    cases = {
+        # current database → the bare view; another database → __db__table
+        "SELECT * FROM public.t": "SELECT * FROM t",
+        "SELECT db1.m.f0 FROM db1.m": "SELECT __db1__m.f0 FROM __db1__m",
+        # quoted regions are never rewritten
+        "SELECT 'db1.m', \"db1.m\" FROM db1.m": "SELECT 'db1.m', \"db1.m\" FROM __db1__m",
+        # struct fields, aliases and unknown tables stay
+        "SELECT w.start, x.f0 FROM db1.m x": "SELECT w.start, x.f0 FROM __db1__m x",
+        "SELECT * FROM db1.nope, nope.m, db1.m1": "SELECT * FROM db1.nope, nope.m, db1.m1",
+        # in a.b.c only b.c is a table: a.b must not hide it
+        "SELECT a.db1.m, a.public.t": "SELECT a.__db1__m, a.t",
+        "SELECT 1 FROM INFORMATION_SCHEMA.Tables, cluster_schema.users": (
+            "SELECT 1 FROM __information_schema__Tables, __cluster_schema__users"
+        ),
+        "SELECT 1 FROM usage_schema.coord_queries": (
+            "SELECT 1 FROM __usage_schema__coord_queries"
+        ),
+    }
+    assert {sql: _qualify(eng, sql) for sql in cases} == cases
