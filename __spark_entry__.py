@@ -23,15 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from cnosdb_spark.functions import (
     bottom as ts_bottom,
-    first_agg,
+    first,
+    gauge_accessor,
     gauge_agg,
-    increase,
-    last_agg,
-    mode_df,
+    last,
     sample_deterministic,
+    state_agg,
     state_at,
-    state_durations,
-    duration_in,
+    time_window,
     time_window_gapfill,
     topk as ts_topk,
 )
@@ -857,13 +856,11 @@ def subquery_decorrelation(spark, sf_dir):
     """,
 )
 def time_window_tumbling(spark, sf_dir):
-    """time_window(time, 1h) tumbling → F.window (SURVEY §2.6;
-    reference transform_time_window.rs:42-92)."""
-    from cnosdb_spark.functions import time_window
-
+    """time_window(time, 1h) tumbling: the expression Engine.sql runs,
+    Spark's window() (SURVEY §2.6; reference transform_time_window.rs:42-92)."""
     e = _t(spark, sf_dir, "events")
     return (
-        e.groupBy(time_window("ts", "1 hour").alias("w"), "event_type")
+        e.groupBy(F.expr(time_window("ts", "'1 hour'")).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -897,15 +894,13 @@ def time_window_tumbling(spark, sf_dir):
     """,
 )
 def time_window_sliding(spark, sf_dir):
-    """time_window(time, 1h, 30m) sliding → Expand-based F.window
-    (reference emits one projection per overlapping window,
-    transform_time_window.rs:303-393 — Spark's implementation is the same
-    design)."""
-    from cnosdb_spark.functions import time_window
-
+    """time_window(time, 1h, 30m) sliding: the expression Engine.sql runs,
+    Spark's Expand-based window() as the slide divides the window (the
+    reference emits one projection per overlapping window,
+    transform_time_window.rs:303-393 — the same design)."""
     e = _t(spark, sf_dir, "events")
     return (
-        e.groupBy(time_window("ts", "1 hour", "30 minutes").alias("w"))
+        e.groupBy(F.expr(time_window("ts", "'1 hour'", "'30 minutes'")).alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
             F.unix_micros(F.col("w.start")).alias("window_start_us"), "n", "sum_value"
@@ -1018,21 +1013,20 @@ def gapfill_locf_interpolate(spark, sf_dir):
 )
 def series_selector_aggs(spark, sf_dir):
     """Per-series selector-aggregate battery (SURVEY §2.4): first(time,v)/
-    last(time,v) (reference aggregate_function/{first,last}.rs → F.min_by/
-    max_by), mode with deterministic tie-break (mode.rs), and
-    increase(time,value) with counter-reset handling (increase.rs).
+    last(time,v) (reference aggregate_function/{first,last}.rs), mode with
+    deterministic tie-break (mode.rs) and increase(time,value) with
+    counter-reset handling (increase.rs).
 
-    Round-10 restructure (same outputs, oracle-pinned): the battery used
-    to scan+shuffle events THREE times (fl groupBy, mode_df, increase) and
-    join the results. The selector aggregates and the increase sum both
-    key on user_id, so one lag-window pass establishes
-    hashpartitioning(user_id) once and a single groupBy on the window
-    output computes both families (guide §2.4: operations keyed the same
-    way share one exchange) — 3 events scans/shuffles → 2, one join
-    instead of two. mode_df deliberately stays a separate branch over the
-    raw scan: folding it under the window subtree serializes the whole
-    query behind the sort (measured +30% at sf0.1) while as a sibling
-    branch its scan+count runs concurrently with the window stage."""
+    first/last are the expressions Engine.sql runs
+    (functions.timeseries.first/last) and mode is Spark's ``mode(x, true)``
+    (ties → lowest value). The glue states the oracle's edge rules: its
+    first/last skip NULL values (FILTER), and its inner joins drop NULL
+    user_ids and users without a non-NULL event_type. The increase arm
+    keeps its own lag window: it encodes the oracle's lag rule, which
+    differs from increase() on NULL values. One lag-window pass
+    establishes hashpartitioning(user_id) and a single groupBy on its
+    output computes every column (guide §2.4: operations keyed the same
+    way share one exchange)."""
     e = _t(spark, sf_dir, "events")
     wlag = W.partitionBy("user_id").orderBy("ts")
     delta = F.col("value") - F.lag("value").over(wlag)
@@ -1041,20 +1035,24 @@ def series_selector_aggs(spark, sf_dir):
         .when(delta >= 0, delta)
         .otherwise(F.col("value"))  # reset: counter restarted at value
     )
+
+    def non_null(expr, col):
+        return F.expr(f"{expr} FILTER (WHERE {col} IS NOT NULL)")
+
     e2 = e.select("user_id", "ts", "value", "event_type", contrib.alias("_d"))
-    flinc = e2.groupBy("user_id").agg(
-        first_agg("ts", "value").alias("first_value"),
-        last_agg("ts", "value").alias("last_value"),
-        first_agg("ts", "event_type").alias("first_type"),
-        F.unix_micros(F.min("ts")).alias("min_ts_us"),
-        F.unix_micros(F.max("ts")).alias("max_ts_us"),
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.coalesce(F.sum("_d"), F.lit(0.0)), 4).alias("increase"),
-    )
-    md = mode_df(e, ["user_id"], "event_type")
-    return flinc.join(md, "user_id").select(
-        "user_id", "first_value", "last_value", "first_type",
-        "min_ts_us", "max_ts_us", "n", "mode", "increase",
+    return (
+        e2.groupBy("user_id")
+        .agg(
+            non_null(first("ts", "value"), "value").alias("first_value"),
+            non_null(last("ts", "value"), "value").alias("last_value"),
+            non_null(first("ts", "event_type"), "event_type").alias("first_type"),
+            F.unix_micros(F.min("ts")).alias("min_ts_us"),
+            F.unix_micros(F.max("ts")).alias("max_ts_us"),
+            F.count(F.lit(1)).alias("n"),
+            F.expr("mode(event_type, true)").alias("mode"),
+            F.round(F.coalesce(F.sum("_d"), F.lit(0.0)), 4).alias("increase"),
+        )
+        .filter(F.col("user_id").isNotNull() & F.col("mode").isNotNull())
     )
 
 
@@ -1130,9 +1128,12 @@ def mode_increase_per_series(spark, sf_dir):
     # so the whole family runs as ONE events scan + ONE hash exchange with
     # stacked per-series window passes — replacing five keyed sub-scans
     # (mode groupBy+window, increase lag+groupBy, zscore window, median
-    # agg, MAD agg) and two joins. Per-arm semantics are replayed
-    # expression-for-expression from mode_df / increase /
-    # zscore_anomalies / mad_anomalies (which remain the library surface):
+    # agg, MAD agg) and two joins. The zscore and MAD arms are replayed
+    # expression-for-expression from zscore_anomalies / mad_anomalies
+    # (which remain the library surface). The mode and increase arms keep
+    # their own windows: they encode the oracle's rules (mode ties → the
+    # lowest value; increase's lag rule, which differs from the SQL
+    # increase() on NULL values):
     #
     # - increase: sum of the lag-delta contribs as an unbounded window
     #   aggregate (rows arrive ts-sorted from the zscore pass, so the
@@ -1324,31 +1325,73 @@ def topk_bottom_values(spark, sf_dir):
 def state_agg_durations(spark, sf_dir):
     """state_agg family (SURVEY §2.4; reference aggregate_function/
     state_agg/) — three arms (state_accessors folded in here to free a
-    registry slot; same machinery):
+    registry slot; same machinery), from the expressions Engine.sql runs
+    (functions.state), in one groupBy per series:
 
     - state_agg: state_agg(time, state) → per-(series, state) duration;
     - duration_in: duration_in(state_agg(...), 'error') per series
       (duration_in.rs; 0.0 for series never in the state);
     - state_at: state_at(state_agg(...), ts) as-of lookup (state_at.rs;
       NULL when the as-of row is the series' final zero-length period).
-    """
+
+    The glue states the oracle's edge rules. Per state, the oracle sums
+    per-row durations as double seconds, so the glue sums the state_agg
+    periods of each state the same way, in time order (the exact µs
+    totals of state_agg/duration_in round differently at x.xxx5: 1 of
+    1,500 duration_in rows at sf0.1). A state seen only at the last point
+    is listed with duration 0 (state_agg has no zero-length period), and
+    duration_in is the 'error' entry of those sums. state_at skips NULL
+    states (DuckDB's arg_max ignores NULL values), so it reads the last
+    non-NULL state carried forward."""
     e = _t(spark, sf_dir, "events")
-    dur = state_durations(e, "ts", "event_type", ["user_id"]).select(
+    known = F.last("event_type", ignorenulls=True).over(
+        W.partitionBy("user_id").orderBy("ts")
+    )
+    per = (
+        e.select("user_id", "ts", "event_type", known.alias("_known"))
+        .groupBy("user_id")
+        .agg(
+            # only the periods: the extraction inside the aggregate lets the
+            # optimizer drop state_agg's per-state durations
+            F.expr(state_agg("ts", "event_type"))["state_periods"].alias("_periods"),
+            F.max_by("event_type", "ts").alias("_last"),
+            F.expr(
+                state_at("ts", "_known", "TIMESTAMP '2024-01-15 00:00:00'")
+            ).alias("_at"),
+        )
+    )
+    periods = "coalesce(_periods, array())"
+    per = per.withColumn(
+        "_states",
+        F.expr(
+            f"transform(array_distinct(concat(transform({periods}, p -> p.state), "
+            f"array(_last))), st -> named_struct('s', st, 'val', aggregate("
+            f"filter({periods}, p -> p.state <=> st), 0D, (acc, p) -> acc + "
+            f"(unix_micros(p.end_time) - unix_micros(p.start_time)) / 1e6)))"
+        ),
+    )
+    dur = per.select("user_id", F.inline("_states")).select(
         F.lit("state_agg").alias("op"),
         "user_id",
-        F.col("event_type").alias("s"),
-        F.round("duration_s", 3).alias("val"),
+        "s",
+        F.round("val", 3).alias("val"),
     )
-    din = duration_in(e, "ts", "event_type", ["user_id"], "error").select(
+    din = per.select(
         F.lit("duration_in").alias("op"),
         "user_id",
         F.lit(None).cast("string").alias("s"),
-        F.round("duration_s", 3).alias("val"),
+        F.round(
+            F.expr(
+                "coalesce(try_element_at("
+                "filter(_states, x -> x.s = 'error'), 1).val, 0D)"
+            ),
+            3,
+        ).alias("val"),
     )
-    at_ts = state_at(e, "ts", "event_type", ["user_id"], "2024-01-15 00:00:00").select(
+    at_ts = per.select(
         F.lit("state_at").alias("op"),
         "user_id",
-        F.col("state").alias("s"),
+        F.col("_at").alias("s"),
         F.lit(None).cast("double").alias("val"),
     )
     return dur.unionAll(din).unionAll(at_ts)
@@ -1381,32 +1424,31 @@ def state_agg_durations(spark, sf_dir):
 )
 def gauge_metrics(spark, sf_dir):
     """gauge_agg + delta/rate/time_delta/first_val/last_val/idelta accessors
-    (SURVEY §2.4; reference gauge_agg.rs:22-67 + scalar_function/gauge/)."""
-    from cnosdb_spark.functions.gauge import (
-        gauge_delta,
-        gauge_first_val,
-        gauge_idelta_left,
-        gauge_idelta_right,
-        gauge_last_val,
-        gauge_rate,
-        gauge_time_delta,
-    )
+    (SURVEY §2.4; reference gauge_agg.rs:22-67 + scalar_function/gauge/),
+    each the expression Engine.sql runs (functions.gauge), over the
+    non-NULL values the oracle reads."""
+    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
 
-    e = _t(spark, sf_dir, "events")
-    g = gauge_agg(e, ["user_id"], "ts", "value")
-    gc = F.col("gauge")
-    return g.select(
-        "user_id",
-        F.round(gauge_first_val(gc), 6).alias("first_val"),
-        F.round(gauge_last_val(gc), 6).alias("last_val"),
-        F.round(gauge_delta(gc), 6).alias("delta"),
-        F.round(gauge_time_delta(gc), 3).alias("time_delta_s"),
-        # gauge_rate is per-ns (reference units); ×1e9 → per-second for a
+    def acc(fn):
+        return F.expr(gauge_accessor(fn, "ts", "value"))
+
+    return e.groupBy("user_id").agg(
+        F.round(acc("first_val"), 6).alias("first_val"),
+        F.round(acc("last_val"), 6).alias("last_val"),
+        F.round(acc("delta"), 6).alias("delta"),
+        F.round(
+            F.expr(
+                "unix_micros(timestamp_micros(0) + "
+                f"{gauge_accessor('time_delta', 'ts', 'value')}) / 1e6"
+            ),
+            3,
+        ).alias("time_delta_s"),
+        # rate is per-ns (reference units); ×1e9 → per-second for a
         # numerically well-conditioned oracle comparison
-        F.round(gauge_rate(gc) * 1e9, 9).alias("rate"),
-        F.round(gauge_idelta_left(gc), 6).alias("idelta_left"),
-        F.round(gauge_idelta_right(gc), 6).alias("idelta_right"),
-        gc["num_elements"].alias("num_elements"),
+        F.round(acc("rate") * 1e9, 9).alias("rate"),
+        F.round(acc("idelta_left"), 6).alias("idelta_left"),
+        F.round(acc("idelta_right"), 6).alias("idelta_right"),
+        F.expr(gauge_agg("ts", "value"))["num_elements"].alias("num_elements"),
     )
 
 

@@ -1957,12 +1957,17 @@ class Engine:
                 # (math_function/random.slt:9 inserts VALUES (random()))
                 src_df = src_df.withColumn(TIME_COL, F.current_timestamp())
         else:
-            self._register_views()
             is_stream_src = any(
                 re.search(rf"\b{re.escape(sn)}\b", src, re.I)
                 for sn in self.streams
             )
-            src_df = self.spark.sql(rewrite_dql(src))
+            # the source is planned as a SELECT; a stream table is a valid
+            # source here, as under EXPLAIN
+            self._allow_stream_select = True
+            try:
+                src_df = self._select(src)
+            finally:
+                self._allow_stream_select = False
             if is_stream_src:
                 # reference stream_checker.rs restrictions (stream/
                 # unsupport_op.slt): at most one aggregation, no join/
@@ -2097,7 +2102,7 @@ class Engine:
         # must match on the old f0, and a second assignment must not see the
         # first one's new value (reference plans UPDATE against one snapshot,
         # query/src/execution/ddl -> transform_update semantics).
-        upd = (F.expr(where) if where else F.lit(True)).alias("_upd")
+        upd = (F.expr(rewrite_dql(where)) if where else F.lit(True)).alias("_upd")
         df = df.withColumn("_upd", upd).persist()
         try:
             # ONE pass: matched-row count + the set of affected time-bucket
@@ -2189,7 +2194,7 @@ class Engine:
         df = self.catalog.read(db, name, keep_residue=True).persist()
         try:
             if where:
-                cond = F.expr(where)
+                cond = F.expr(rewrite_dql(where))
                 # ONE pass for deleted-row count + affected partitions
                 n, affected = df.filter(cond).agg(
                     F.count(F.lit(1)),

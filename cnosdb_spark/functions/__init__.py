@@ -3,11 +3,10 @@ from .timeseries import (  # noqa: F401
     time_window_gapfill,
     topk,
     bottom,
-    first_agg,
-    last_agg,
-    mode_df,
+    first,
+    last,
     increase,
     sample_deterministic,
 )
-from .gauge import gauge_agg  # noqa: F401
-from .state import state_durations, compact_state_agg, duration_in, state_at  # noqa: F401
+from .gauge import gauge_agg, gauge_accessor  # noqa: F401
+from .state import state_agg, duration_in, state_at  # noqa: F401

@@ -1,101 +1,98 @@
-"""gauge_agg + accessor functions.
+"""gauge_agg and its accessors as Spark SQL aggregate expressions.
 
-Reference: /root/reference query_server/query/src/extension/expr/
-aggregate_function/gauge/gauge_agg.rs:22-67 (GaugeData = first, second,
-penultimate, last TSPoints + num_elements) and the scalar accessors in
+Reference: query_server/query/src/extension/expr/aggregate_function/
+gauge/gauge_agg.rs:22-67 (GaugeData = first, second, penultimate, last
+TSPoints + num_elements) and the scalar accessors in
 extension/expr/scalar_function/gauge/*.rs (delta, rate, time_delta,
 first_time, first_val, last_time, last_val, idelta_left, idelta_right).
 
-Spark-first: GaugeData is a plain struct column built from min_by/max_by
-aggregates — no UDAF, no per-group collect. Every accessor is a column
-expression over the struct, so the whole family stays inside whole-stage
-codegen and aggregates with one shuffle on the series key.
-
-second/penultimate need the 2nd smallest/largest time: expressed with
-min_by/max_by over a null-guarded key pair — still built-in aggregates.
+Each builder takes SQL text for the time and value columns and returns
+the SQL text of one aggregate expression. ``sql/rewriter.rewrite_gauge``
+splices them in for ``accessor(gauge_agg(t, v))`` and a bare
+``gauge_agg(t, v)``; DataFrame code uses them through ``F.expr``. Every
+form is built from built-in aggregates (min/max, min_by/max_by,
+collect_list plus array functions), so the family plans as one
+partial→final hash aggregate, with no UDAF and no Python. The
+collect_list members (idelta, the bare struct) hold one entry per point
+of one series group, the working set the reference's accumulator keeps.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+
+# gauge_agg's signature is (timestamp, float64) only (gauge_agg.rs
+# registration) — `v + 0.0d` rejects boolean/timestamp values at analysis
+# time (a plain cast would coerce them), and `cast(t as timestamp)` rejects
+# non-time first arguments, mirroring DataFusion's planner errors.
+def _g_num(v: str) -> str:
+    return f"({v} + 0.0d)"
 
 
-def gauge_agg(df: DataFrame, group_cols: list[str], time_col: str, value_col: str) -> DataFrame:
-    """groupBy(series).gauge_agg(time, value) → struct gauge column.
+def _g_first_t(t: str, v: str) -> str:
+    return f"min(cast({t} as timestamp)) FILTER (WHERE {_g_num(v)} IS NOT NULL)"
 
-    Output schema: gauge struct<first:struct<ts,val>, second:...,
-    penultimate:..., last:..., num_elements:long>.
 
-    Implementation: rank rows per series by time (window sort — spills, no
-    per-group memory blowup) then pick ranks 1/2/n-1/n with min_by. One
-    shuffle on the series key, everything JVM-side.
-    """
-    t, v = F.col(time_col), F.col(value_col)
-    pt = F.struct(t.alias("ts"), v.alias("val"))
+def _g_last_t(t: str, v: str) -> str:
+    return f"max(cast({t} as timestamp)) FILTER (WHERE {_g_num(v)} IS NOT NULL)"
 
-    w_asc = Window.partitionBy(*group_cols).orderBy(t.asc())
-    w_desc = Window.partitionBy(*group_cols).orderBy(t.desc())
-    ranked = (
-        df.filter(v.isNotNull())
-        .withColumn("_ra", F.row_number().over(w_asc))
-        .withColumn("_rd", F.row_number().over(w_desc))
+
+def _g_first_v(t: str, v: str) -> str:
+    return f"min_by({_g_num(v)}, {t}) FILTER (WHERE {v} IS NOT NULL)"
+
+
+def _g_last_v(t: str, v: str) -> str:
+    return f"max_by({_g_num(v)}, {t}) FILTER (WHERE {v} IS NOT NULL)"
+
+
+def _g_td_us(t: str, v: str) -> str:
+    return (
+        f"(unix_micros({_g_last_t(t, v)}) - unix_micros({_g_first_t(t, v)}))"
     )
-    agg = ranked.groupBy(*group_cols).agg(
-        F.min_by(pt, F.col("_ra")).alias("_first"),
-        F.min_by(pt, F.when(F.col("_ra") == 2, F.col("_ra"))).alias("_second"),
-        F.min_by(pt, F.when(F.col("_rd") == 2, F.col("_rd"))).alias("_penultimate"),
-        F.min_by(pt, F.col("_rd")).alias("_last"),
-        F.count(F.lit(1)).alias("_n"),
+
+
+def _g_arr(t: str, v: str) -> str:
+    return (
+        f"array_sort(collect_list(CASE WHEN {v} IS NOT NULL THEN "
+        f"named_struct('ts', cast({t} as timestamp), 'val', {_g_num(v)}) END))"
     )
-    gauge = F.struct(
-        F.col("_first").alias("first"),
-        F.col("_second").alias("second"),
-        F.col("_penultimate").alias("penultimate"),
-        F.col("_last").alias("last"),
-        F.col("_n").alias("num_elements"),
+
+
+def gauge_accessor(fn: str, t: str, v: str) -> str:
+    """``fn(gauge_agg(t, v))`` for one of the nine accessors."""
+    delta = f"({_g_last_v(t, v)} - {_g_first_v(t, v)})"
+    if fn == "delta":
+        return delta
+    if fn == "rate":
+        # the reference's rate is delta per NANOSECOND
+        # (scalar_function/gauge/rate.rs; rate.slt: -111 / 0.010 s
+        # = -1.11e-5) — null on a single-point gauge
+        return f"({delta} / nullif(cast({_g_td_us(t, v)} as double) * 1000.0, 0.0D))"
+    if fn == "time_delta":
+        return f"make_dt_interval(0, 0, 0, {_g_td_us(t, v)} / 1e6)"
+    if fn == "first_time":
+        return _g_first_t(t, v)
+    if fn == "first_val":
+        return _g_first_v(t, v)
+    if fn == "last_time":
+        return _g_last_t(t, v)
+    if fn == "last_val":
+        return _g_last_v(t, v)
+    arr = _g_arr(t, v)
+    if fn == "idelta_left":
+        return f"(try_element_at({arr}, 2).val - try_element_at({arr}, 1).val)"
+    if fn == "idelta_right":
+        return f"(try_element_at({arr}, -1).val - try_element_at({arr}, -2).val)"
+    raise ValueError(f"unknown gauge accessor {fn!r}")
+
+
+def gauge_agg(t: str, v: str) -> str:
+    """Bare ``gauge_agg(t, v)``: the GaugeData struct, NULL values skipped
+    (first/second/penultimate/last {ts, val} points + num_elements)."""
+    arr = _g_arr(t, v)
+    return (
+        f"named_struct('first', try_element_at({arr}, 1), "
+        f"'second', try_element_at({arr}, 2), "
+        f"'penultimate', try_element_at({arr}, -2), "
+        f"'last', try_element_at({arr}, -1), "
+        f"'num_elements', cast(size({arr}) as bigint))"
     )
-    return agg.select(*group_cols, gauge.alias("gauge"))
-
-
-# --------------------------------------------------------------- accessors
-def gauge_delta(g: Column) -> Column:
-    """delta(gauge) = last.val - first.val."""
-    return g["last"]["val"] - g["first"]["val"]
-
-
-def gauge_time_delta(g: Column) -> Column:
-    """time_delta(gauge) in seconds between first and last points."""
-    return (F.unix_micros(g["last"]["ts"]) - F.unix_micros(g["first"]["ts"])) / 1e6
-
-
-def gauge_rate(g: Column) -> Column:
-    """rate(gauge) = delta per NANOSECOND (scalar_function/gauge/rate.rs —
-    rate.slt shows -111 over 0.010 s = -1.11e-5); null when single point."""
-    td_ns = (F.unix_micros(g["last"]["ts"]) - F.unix_micros(g["first"]["ts"])) * 1000
-    return F.when(td_ns > 0, gauge_delta(g) / td_ns)
-
-
-def gauge_first_time(g: Column) -> Column:
-    return g["first"]["ts"]
-
-
-def gauge_first_val(g: Column) -> Column:
-    return g["first"]["val"]
-
-
-def gauge_last_time(g: Column) -> Column:
-    return g["last"]["ts"]
-
-
-def gauge_last_val(g: Column) -> Column:
-    return g["last"]["val"]
-
-
-def gauge_idelta_left(g: Column) -> Column:
-    """idelta_left = second.val - first.val (instant delta at window start)."""
-    return g["second"]["val"] - g["first"]["val"]
-
-
-def gauge_idelta_right(g: Column) -> Column:
-    """idelta_right = last.val - penultimate.val (instant delta at end)."""
-    return g["last"]["val"] - g["penultimate"]["val"]

@@ -1,112 +1,109 @@
-"""state_agg / compact_state_agg + duration_in / state_at.
+"""state_agg / compact_state_agg with duration_in / state_at as Spark SQL
+aggregate expressions.
 
-Reference: /root/reference query_server/query/src/extension/expr/
-aggregate_function/state_agg/{mod,state_agg_accumulator,state_agg_data}.rs
-(time spent in each discrete state) and scalar_function/{duration_in.rs,
-state_at.rs}.
+Reference: query_server/query/src/extension/expr/aggregate_function/
+state_agg/{mod,state_agg_accumulator,state_agg_data}.rs (time spent in
+each discrete state) and scalar_function/{duration_in.rs, state_at.rs}.
 
-Spark-first: the duration a series spends in a state is
-``lead(time) - time`` per row (window over time order), then a plain
-groupBy sum — two JVM-side operators, one shuffle on the series key.
-The last observed state has no following edge; its duration is 0 (matching
-the reference, which only counts closed intervals unless an explicit
-interval end is supplied).
+Each builder takes SQL text for the time and state columns and returns
+the SQL text of one aggregate expression; ``sql/rewriter.rewrite_state``
+splices them in after its own argument checks, and DataFrame code uses
+them through ``F.expr``. The series' points are collected, sorted by time
+and cut into periods [tᵢ, tᵢ₊₁) that are closed on the left. The final
+observed state is a zero-length period: it has no duration, so it is
+absent from ``state_agg``'s durations, and ``state_at`` at or after the
+last point is NULL (state_at.slt).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+_I64_MIN = "-9223372036854775807L"
+_I64_MAX = "9223372036854775807L"
 
 
-def state_durations(
-    df: DataFrame,
-    time_col: str,
-    state_col: str,
-    group_cols: list[str],
-    out_col: str = "duration_s",
-) -> DataFrame:
-    """Per (group, state): total seconds spent in the state.
-
-    This is ``state_agg(time, state)`` materialized relationally (one row
-    per state instead of a map column) — the natural Spark shape; callers
-    needing the map can ``map_from_entries(collect_list(...))`` on top.
-    """
-    w = Window.partitionBy(*group_cols).orderBy(time_col)
-    dur = (F.unix_micros(F.lead(time_col).over(w)) - F.unix_micros(F.col(time_col))) / 1e6
+def _s_arr(t: str, s: str, compact: bool) -> str:
+    """Sorted (t, s) point array; compact keeps only run starts
+    (state_agg_data.rs compact variant merges consecutive equal states)."""
+    arr = (
+        f"array_sort(collect_list(named_struct("
+        f"'t', cast({t} as timestamp), 's', {s})))"
+    )
+    if not compact:
+        return arr
     return (
-        df.withColumn("_dur", F.coalesce(dur, F.lit(0.0)))
-        .groupBy(*group_cols, state_col)
-        .agg(F.sum("_dur").alias(out_col))
+        f"filter(transform(sequence(1, size({arr})), _i -> "
+        f"CASE WHEN _i = 1 OR NOT (try_element_at({arr}, _i).s <=> "
+        f"try_element_at({arr}, _i - 1).s) THEN try_element_at({arr}, _i) "
+        f"END), _x -> _x IS NOT NULL)"
     )
 
 
-def compact_state_agg(
-    df: DataFrame,
-    time_col: str,
-    state_col: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """``compact_state_agg``: like state_agg but merges consecutive runs of
-    the same state before measuring (the reference's compact variant drops
-    interior points). Result is identical durations; exposed for parity and
-    for callers that want the run-length view (one row per state *run*).
-    """
-    w = Window.partitionBy(*group_cols).orderBy(time_col)
-    changed = (
-        F.lag(state_col).over(w).isNull()
-        | (F.lag(state_col).over(w) != F.col(state_col))
-    ).cast("int")
-    runs = df.withColumn("_new_run", changed).withColumn(
-        "_run_id", F.sum("_new_run").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    run_edges = runs.groupBy(*group_cols, "_run_id", state_col).agg(
-        F.min(time_col).alias("_run_start")
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy("_run_start")
-    dur = (
-        F.unix_micros(F.lead("_run_start").over(w2)) - F.unix_micros(F.col("_run_start"))
-    ) / 1e6
+def _s_duration_fold(arr: str, state: str, start_us: str, end_us: str) -> str:
+    """Σ over closed periods [pᵢ.t, pᵢ₊₁.t) with state = ``state``, clipped
+    to [start_us, end_us] — the last (open) state contributes nothing,
+    matching duration_in.rs."""
     return (
-        run_edges.withColumn("_dur", F.coalesce(dur, F.lit(0.0)))
-        .groupBy(*group_cols, state_col)
-        .agg(F.sum("_dur").alias("duration_s"))
+        f"CASE WHEN size({arr}) >= 2 THEN aggregate("
+        f"sequence(1, size({arr}) - 1), 0L, (_acc, _i) -> _acc + "
+        f"(CASE WHEN try_element_at({arr}, _i).s <=> {state} THEN "
+        f"greatest(0L, least(unix_micros(try_element_at({arr}, _i + 1).t), {end_us}) - "
+        f"greatest(unix_micros(try_element_at({arr}, _i).t), {start_us})) "
+        f"ELSE 0L END)) ELSE 0L END"
+    )
+
+
+def state_at(t: str, s: str, ts: str) -> str:
+    """``state_at(state_agg(t, s), ts)``: the state of the period that
+    contains ``ts``; NULL before the first point and at/after the last."""
+    ts = f"cast({ts} as timestamp)"
+    return (
+        f"(CASE WHEN max(cast({t} as timestamp)) > {ts} THEN "
+        f"max_by({s}, {t}) FILTER (WHERE cast({t} as timestamp) <= {ts}) END)"
     )
 
 
 def duration_in(
-    df: DataFrame,
-    time_col: str,
-    state_col: str,
-    group_cols: list[str],
+    t: str,
+    s: str,
     state: str,
-) -> DataFrame:
-    """``duration_in(state_agg(...), state)`` — scalar lookup
-    (scalar_function/duration_in.rs). Groups that never enter the state get
-    duration 0 (left join against the group universe)."""
-    durs = state_durations(df, time_col, state_col, group_cols)
-    universe = df.select(*group_cols).distinct()
-    hit = durs.filter(F.col(state_col) == state).drop(state_col)
-    return universe.join(hit, on=group_cols, how="left").fillna(
-        {"duration_s": 0.0}
-    )
+    start: str | None = None,
+    interval: str | None = None,
+    compact: bool = False,
+) -> str:
+    """``duration_in([compact_]state_agg(t, s), state[, start[, interval]])``
+    as an interval: time spent in ``state``, clipped to [start,
+    start + interval] when given."""
+    start_us, end_us = _I64_MIN, _I64_MAX
+    if start is not None:
+        start_us = f"unix_micros(cast({start} as timestamp))"
+    if interval is not None:
+        end_us = f"unix_micros(cast({start} as timestamp) + {interval})"
+    fold = _s_duration_fold(_s_arr(t, s, compact), state, start_us, end_us)
+    return f"make_dt_interval(0, 0, 0, ({fold}) / 1e6)"
 
 
-def state_at(
-    df: DataFrame,
-    time_col: str,
-    state_col: str,
-    group_cols: list[str],
-    ts: str,
-) -> DataFrame:
-    """``state_at(state_agg(...), ts)``: the state in effect at ``ts`` —
-    an as-of lookup over CLOSED periods [tᵢ, tᵢ₊₁). The final observed
-    state is a zero-length period, so ``ts`` at/after the series' last
-    point yields NULL (scalar_function/state_at.rs; state_at.slt's
-    '2020-01-05 12:00:00' → NULL record)."""
-    lit_ts = F.lit(ts).cast("timestamp")
-    as_of = F.max_by(
-        state_col, F.when(F.col(time_col) <= lit_ts, F.col(time_col))
+def state_agg(t: str, s: str, compact: bool = False) -> str:
+    """Bare ``[compact_]state_agg(t, s)``: struct of ``state_duration``
+    (one {state, duration} per state with a closed period) and
+    ``state_periods`` ({state, start_time, end_time} per closed period)."""
+    arr = _s_arr(t, s, compact)
+    periods = (
+        f"CASE WHEN size({arr}) >= 2 THEN filter(transform("
+        f"sequence(1, size({arr})), _i -> named_struct("
+        f"'state', try_element_at({arr}, _i).s, "
+        f"'start_time', try_element_at({arr}, _i).t, "
+        f"'end_time', try_element_at({arr}, _i + 1).t)), "
+        f"_p -> _p.end_time IS NOT NULL) END"
     )
-    return df.groupBy(*group_cols).agg(
-        F.when(F.max(time_col) > lit_ts, as_of).alias("state")
+    durations = (
+        f"transform(array_distinct(transform({periods}, _p -> _p.state)), "
+        f"_st -> named_struct('state', _st, 'duration', "
+        f"make_dt_interval(0, 0, 0, aggregate({periods}, 0L, "
+        f"(_acc, _p) -> _acc + (CASE WHEN _p.state <=> _st THEN "
+        f"unix_micros(_p.end_time) - unix_micros(_p.start_time) "
+        f"ELSE 0L END)) / 1e6)))"
+    )
+    return (
+        f"named_struct('state_duration', {durations}, "
+        f"'state_periods', {periods})"
     )

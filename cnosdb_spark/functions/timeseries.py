@@ -1,15 +1,20 @@
-"""Time-series query operators: time_window, gapfill, selector functions.
+"""Time-series query operators: time_window, first/last, increase,
+selectors, sample and gapfill.
 
-Spark-first re-expression of the reference's signature operators
-(/root/reference query_server/query/src/extension/...). Where Spark has a
-native equivalent we use it directly and only add the reference's argument
-validation for parity.
+Re-expression of the reference's signature operators
+(query_server/query/src/extension/...). ``time_window``, ``first``,
+``last`` and ``increase`` are SQL-expression builders: they take SQL text
+and return SQL text, ``sql/rewriter`` splices them into the statements
+``Engine.sql`` runs, and DataFrame code uses them through ``F.expr``.
+``topk``/``bottom``/``sample_deterministic`` are row-level selectors over
+a DataFrame, and ``time_window_gapfill`` is the DataFrame plan behind the
+Engine's gapfill path. ``mode`` is Spark's own ``mode()``.
 """
 
 from __future__ import annotations
 
 import re
-from datetime import timedelta
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -33,35 +38,95 @@ def _parse_duration(s: str) -> timedelta:
 
 MAX_WINDOW = timedelta(days=365)
 MAX_OVERLAPS = 100
+_TS_RE = re.compile(r"^\s*timestamp\s+('?[^']+'?)\s*$", re.I)
+
+
+def _literal_us(q: str) -> int | None:
+    """µs of a quoted duration literal, None if it is not one."""
+    try:
+        return int(_parse_duration(q.strip("'\"")).total_seconds() * 1e6)
+    except ValueError:
+        return None
 
 
 def time_window(
-    time_col: str | Column,
-    window_duration: str,
-    slide_duration: str | None = None,
-    start_time: str | None = None,
-) -> Column:
-    """``time_window(time, window[, slide[, start]])`` → struct{start,end}.
+    time: str, window: str, slide: str | None = None, start: str | None = None
+) -> str:
+    """``time_window(time, window[, slide[, start]])`` → a struct{start,
+    end} SQL expression. ``window``/``slide`` are SQL duration literals
+    (``'1 hour'``); ``start`` is the reference's absolute start timestamp.
 
-    Spark's ``F.window`` IS the reference's design — the analyzer rule
-    transform_time_window.rs:42-92 expands sliding windows exactly like
-    Spark's Expand-based TimeWindow. We add the reference's validation:
-    duration ∈ (0, 365d] (transform_time_window.rs:143-151) and at most
-    100 overlapping windows (:346).
-    """
-    wd = _parse_duration(window_duration)
-    if not (timedelta(0) < wd <= MAX_WINDOW):
-        raise ValueError(f"window duration must be in (0s, 365d], got {window_duration!r}")
-    if slide_duration is not None:
-        sd = _parse_duration(slide_duration)
-        if sd <= timedelta(0):
-            raise ValueError("slide duration must be positive")
-        if wd.total_seconds() / sd.total_seconds() > MAX_OVERLAPS:
-            raise ValueError(
-                f"window/slide produces more than {MAX_OVERLAPS} overlapping windows"
-            )
-        return F.window(time_col, window_duration, slide_duration, start_time)
-    return F.window(time_col, window_duration, startTime=start_time)
+    Spark's ``window()`` is the same Expand-based operator the reference's
+    analyzer builds (transform_time_window.rs:42-92) EXCEPT when
+    window % slide != 0: there the reference emits all ceil(window/slide)
+    windows per row unconditionally (its Expand filter only checks
+    membership in the newest window, transform_time_window.rs:358-374), so
+    a point can land in a window whose end == t. Spark's window() drops
+    those; for parity that case is an explicit explode over the
+    reference's window arithmetic (make_window_expr,
+    transform_time_window.rs:251-296). Checks: both durations in
+    (0, 365d] (transform_time_window.rs:143-151) and at most 100
+    overlapping windows (:346)."""
+    durs = [_literal_us(q) for q in (window, slide) if q is not None]
+    for d in durs:
+        if d is not None and not (0 < d <= MAX_WINDOW.total_seconds() * 1e6):
+            raise ValueError("time_window durations must be in (0s, 365d]")
+    if len(durs) == 2 and durs[0] and durs[1]:
+        w_us, s_us = durs
+        if (w_us + s_us - 1) // s_us > MAX_OVERLAPS:
+            raise ValueError("Too many overlapping windows")
+        if w_us % s_us:
+            start_mod = 0
+            if start is not None:
+                off = _start_to_offset(start, window)  # modulus = window
+                start_mod = int(
+                    _parse_duration(off.strip("'\"")).total_seconds() * 1e6
+                )
+            return _sliding_expand_expr(time, w_us, s_us, start_mod)
+    args = [time, window] + ([slide] if slide is not None else [])
+    if start is not None:
+        args.append(_start_to_offset(start, args[-1]))
+    return f"window({', '.join(args)})"
+
+
+def _sliding_expand_expr(time_arg: str, w_us: int, s_us: int, start_mod_us: int) -> str:
+    """Reference-exact sliding expansion: windows i = 0..ceil(w/s)-1 at
+    last_start - i*slide where last_start = t - ((t - start%w + s) mod s)
+    (make_window_expr, transform_time_window.rs:251-296), emitted for every
+    row — INCLUDING windows whose end == t (right-boundary divergence from
+    Spark's window())."""
+    n = (w_us + s_us - 1) // s_us
+    t = f"unix_micros(cast({time_arg} as timestamp))"
+    ls = f"({t} - pmod({t} - {start_mod_us} + {s_us}, {s_us}))"
+    return (
+        f"explode(transform(sequence(0, {n - 1}), i -> named_struct("
+        f"'start', timestamp_micros({ls} - i * {s_us}), "
+        f"'end', timestamp_micros({ls} - i * {s_us} + {w_us}))))"
+    )
+
+
+def _start_to_offset(start_arg: str, slide_quoted: str) -> str:
+    """The reference's 4th time_window argument is an ABSOLUTE start
+    timestamp (transform_time_window.rs); Spark's ``window`` takes a
+    startTime OFFSET past epoch-aligned boundaries. Convert:
+    offset = start_ts mod <modulus> (µs) — the caller passes the slide for
+    Spark's window(), or the WINDOW duration for the explode-based sliding
+    expansion (the reference's i64_start_time = start % window,
+    transform_time_window.rs:270-273)."""
+    s = start_arg.strip()
+    tm = _TS_RE.match(s)
+    if tm:
+        s = tm.group(1)
+    s = s.strip("'\"")
+    try:
+        ts = datetime.fromisoformat(s.replace("Z", "+00:00"))
+    except ValueError:
+        return start_arg  # already an offset duration string
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    epoch_us = int((ts - datetime(1970, 1, 1)).total_seconds() * 1_000_000)
+    slide_us = int(_parse_duration(slide_quoted.strip("'\"")).total_seconds() * 1_000_000)
+    return f"'{epoch_us % slide_us} microseconds'"
 
 
 # ---------------------------------------------------------------- selectors
@@ -92,65 +157,40 @@ def bottom(df: DataFrame, col: str, k: int, *tiebreak: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- aggregates
-def first_agg(time_col: str | Column, value_col: str | Column) -> Column:
-    """``first(time, value)``: value at minimum time, null values skipped
-    (aggregate_function/first.rs). Spark: min_by with null-guarded key."""
-    v, t = F.col(value_col) if isinstance(value_col, str) else value_col, (
-        F.col(time_col) if isinstance(time_col, str) else time_col
-    )
-    return F.min_by(v, F.when(v.isNotNull(), t))
+def first(t: str, v: str) -> str:
+    """``first(time, value)``: value at the minimum time
+    (aggregate_function/first.rs)."""
+    return f"min_by({v}, {t})"
 
 
-def last_agg(time_col: str | Column, value_col: str | Column) -> Column:
-    """``last(time, value)``: value at maximum time, null values skipped
+def last(t: str, v: str) -> str:
+    """``last(time, value)``: value at the maximum time
     (aggregate_function/last.rs)."""
-    v, t = F.col(value_col) if isinstance(value_col, str) else value_col, (
-        F.col(time_col) if isinstance(time_col, str) else time_col
-    )
-    return F.max_by(v, F.when(v.isNotNull(), t))
+    return f"max_by({v}, {t})"
 
 
-def mode_df(df: DataFrame, group_cols: list[str], value_col: str, out_col: str = "mode") -> DataFrame:
-    """Deterministic mode per group: value with max count, ties → min value."""
-    counted = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(*group_cols, value_col)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+def increase(t: str, v: str) -> str:
+    """``increase(time, v ORDER BY time)`` (aggregate_function/
+    increase.rs:42-45; function/common/increase.slt): collect (t, v)
+    pairs, sort by t, then fold positive deltas — a counter reset
+    (decrease) contributes the new value. Pure higher-order-function SQL:
+    map-side combinable array_agg + driver-free fold, value type preserved
+    (bigint counters stay bigint)."""
+    arr = (
+        f"transform(array_sort(array_agg(struct(({t}) AS _t, ({v}) AS _v)))"
+        f", s -> s._v)"
     )
-    w = Window.partitionBy(*group_cols).orderBy(F.col("_cnt").desc(), F.col(value_col).asc())
+    deltas = (
+        f"zip_with(slice({arr}, 2, greatest(size({arr}) - 1, 0)), "
+        f"slice({arr}, 1, greatest(size({arr}) - 1, 0)), "
+        f"(c, p) -> CASE WHEN c >= p THEN c - p ELSE c END)"
+    )
+    # try_element_at: all-NULL groups array_agg to an empty array, and
+    # element_at(arr, 1) on it is INVALID_ARRAY_INDEX under ANSI mode —
+    # the typed-zero seed must degrade to NULL instead of erroring
     return (
-        counted.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*group_cols, F.col(value_col).alias(out_col))
-    )
-
-
-def increase(
-    df: DataFrame,
-    time_col: str,
-    value_col: str,
-    group_cols: list[str],
-    out_col: str = "increase",
-) -> DataFrame:
-    """Counter increase with reset handling (aggregate_function/increase.rs):
-    sum of positive deltas over time order; a decrease is a counter reset and
-    contributes the new value.
-
-    Window lag + conditional sum — stays in whole-stage codegen; the shuffle
-    is one hash exchange on the group key (the series), which is exactly how
-    the data is clustered at scale.
-    """
-    w = Window.partitionBy(*group_cols).orderBy(time_col)
-    delta = F.col(value_col) - F.lag(value_col).over(w)
-    contrib = (
-        F.when(delta.isNull(), F.lit(None))
-        .when(delta >= 0, delta)
-        .otherwise(F.col(value_col))  # reset: counter restarted at value
-    )
-    return (
-        df.withColumn("_d", contrib)
-        .groupBy(*group_cols)
-        .agg(F.coalesce(F.sum("_d"), F.lit(0.0)).alias(out_col))
+        f"aggregate({deltas}, try_element_at({arr}, 1) - try_element_at({arr}, 1), "
+        f"(acc, x) -> acc + x)"
     )
 
 

@@ -7,14 +7,19 @@ already covers almost everything; this module textually rewrites the
 remaining forms:
 
   time_window(t, interval 'X' [, interval 'Y' [, TIMESTAMP 'Z']])
-      → window(t, 'X' [, 'Y' [, 'Z']])          (transform_time_window.rs)
-  first(t, v) / last(t, v) → min_by(v, t) / max_by(v, t)
-      ({first,last}.rs; null-skipping matches Spark min_by/max_by)
+      → window(t, 'X' [, 'Y' [, offset]]) or an explicit explode
+      (transform_time_window.rs)
+  first(t, v) / last(t, v) → min_by(v, t) / max_by(v, t)  ({first,last}.rs)
+  increase(t, v ORDER BY t), gauge_agg and its accessors, state_agg /
+      compact_state_agg / duration_in / state_at → built-in aggregates
   topk(col, k) / bottom(col, k) in the projection
       → col ... ORDER BY col DESC/ASC LIMIT k
       (transform_topk_func_to_topk_node.rs: single selector, k ∈ [1,255])
   exact_count(x) → count(x)                     (transform_exact_count...)
 
+The time-series function expressions are built in ``cnosdb_spark.functions``
+(timeseries.py, gauge.py, state.py); this module parses each call, raises
+the reference's signature errors and splices the built expression in.
 Rewrites are token-aware enough for real queries (they respect quoted
 strings) without a full SQL parser.
 """
@@ -23,14 +28,14 @@ from __future__ import annotations
 
 import re
 
+from ..functions import gauge, state, timeseries
+from ..functions.timeseries import MAX_K
+
 _TOPK_RE = re.compile(r"\b(topk|bottom)\s*\(", re.I)
 _TW_RE = re.compile(r"\btime_window\s*\(", re.I)
 _FIRST_LAST_RE = re.compile(r"\b(first|last)\s*\(", re.I)
 _EXACT_COUNT_RE = re.compile(r"\bexact_count\s*\(", re.I)
 _INTERVAL_RE = re.compile(r"^\s*interval\s+'([^']+)'\s*$", re.I)
-_TS_RE = re.compile(r"^\s*timestamp\s+('?[^']+'?)\s*$", re.I)
-
-MAX_K = 255
 
 
 def _find_call_end(sql: str, open_paren: int) -> int:
@@ -125,18 +130,10 @@ def _select_scope_at(sql: str, pos: int) -> int:
 
 
 def rewrite_time_window(sql: str) -> str:
-    """time_window(t, interval '10 milliseconds'[, interval '5 ms']) →
-    window(t, '10 milliseconds'[, '5 ms']). Spark's window() is the same
-    Expand-based operator the reference's analyzer builds — EXCEPT when
-    window %% slide != 0: there the reference emits all
-    ceil(window/slide) windows per row unconditionally (its Expand filter
-    only checks membership in the newest window,
-    transform_time_window.rs:358-374), so a point can land in a window
-    whose end == t. Spark's window() drops those; for parity that case is
-    rewritten to an explicit explode over the reference's window
-    arithmetic (make_window_expr, transform_time_window.rs:251-296)."""
-    from ..functions.timeseries import _parse_duration
-
+    """time_window(t, interval '10 milliseconds'[, interval '5 ms'[,
+    TIMESTAMP 'start']]) → ``functions.timeseries.time_window``'s
+    expression: Spark's window(), or an explicit explode where the slide
+    does not divide the window."""
     # the reference plans exactly one window per SELECT — the SAME call
     # repeated (SELECT + GROUP BY) is one window, and a subquery may carry
     # its own (tsbench/avg_daily_driving_duration.slt:103 nests a 10-minute
@@ -161,60 +158,15 @@ def rewrite_time_window(sql: str) -> str:
         args = _split_args(sql[open_p + 1 : end - 1])
         if not 2 <= len(args) <= 4:
             raise ValueError("time_window expects 2-4 arguments")
-        out = [args[0]]
+        # interval 'X' / CAST('X' AS INTERVAL) → the duration literal 'X'
+        lits = []
         for a in args[1:3]:
             im = _INTERVAL_RE.match(a)
             cm = _CAST_INTERVAL_RE.fullmatch(a.strip())
-            out.append(f"'{im.group(1)}'" if im else (f"'{cm.group(1)}'" if cm else a))
-        durs = []
-        for q in out[1:3]:
-            try:
-                durs.append(int(_parse_duration(q.strip("'\"")).total_seconds() * 1e6))
-            except (ValueError, AttributeError):
-                durs.append(None)
-        max_us = 365 * 86_400_000_000
-        for d in durs:
-            if d is not None and not (0 < d <= max_us):
-                # duration ∈ (0, 365d] (transform_time_window.rs:143-151,
-                # applied to both window and slide)
-                raise ValueError("time_window durations must be in (0s, 365d]")
-        if (
-            len(durs) == 2
-            and durs[0] and durs[1]
-            and durs[0] % durs[1] != 0
-        ):
-            if (durs[0] + durs[1] - 1) // durs[1] > 100:
-                raise ValueError("Too many overlapping windows")
-            start_mod = 0
-            if len(args) == 4:
-                off = _start_to_offset(args[3], out[1])  # modulus = window
-                start_mod = int(
-                    _parse_duration(off.strip("'\"")).total_seconds() * 1e6
-                )
-            repl = _sliding_expand_expr(out[0], durs[0], durs[1], start_mod)
-        else:
-            if len(args) == 4:
-                out.append(
-                    _start_to_offset(args[3], out[2] if len(out) > 2 else out[1])
-                )
-            repl = f"window({', '.join(out)})"
+            lits.append(f"'{im.group(1)}'" if im else (f"'{cm.group(1)}'" if cm else a))
+        start = args[3] if len(args) == 4 else None
+        repl = timeseries.time_window(args[0], *lits, start=start)
         sql = sql[: m.start()] + repl + sql[end:]
-
-
-def _sliding_expand_expr(time_arg: str, w_us: int, s_us: int, start_mod_us: int) -> str:
-    """Reference-exact sliding expansion: windows i = 0..ceil(w/s)-1 at
-    last_start - i*slide where last_start = t - ((t - start%w + s) mod s)
-    (make_window_expr, transform_time_window.rs:251-296), emitted for every
-    row — INCLUDING windows whose end == t (right-boundary divergence from
-    Spark's window())."""
-    n = (w_us + s_us - 1) // s_us
-    t = f"unix_micros(cast({time_arg} as timestamp))"
-    ls = f"({t} - pmod({t} - {start_mod_us} + {s_us}, {s_us}))"
-    return (
-        f"explode(transform(sequence(0, {n - 1}), i -> named_struct("
-        f"'start', timestamp_micros({ls} - i * {s_us}), "
-        f"'end', timestamp_micros({ls} - i * {s_us} + {w_us}))))"
-    )
 
 
 def rewrite_exploded_groupby(sql: str) -> str:
@@ -255,34 +207,6 @@ def rewrite_exploded_groupby(sql: str) -> str:
     return new_sql
 
 
-def _start_to_offset(start_arg: str, slide_quoted: str) -> str:
-    """The reference's 4th time_window argument is an ABSOLUTE start
-    timestamp (transform_time_window.rs); Spark's ``window`` takes a
-    startTime OFFSET past epoch-aligned boundaries. Convert:
-    offset = start_ts mod <modulus> (µs) — the caller passes the slide for
-    Spark's window(), or the WINDOW duration for the explode-based sliding
-    expansion (the reference's i64_start_time = start %% window,
-    transform_time_window.rs:270-273)."""
-    from datetime import datetime, timezone
-
-    from ..functions.timeseries import _parse_duration
-
-    s = start_arg.strip()
-    tm = _TS_RE.match(s)
-    if tm:
-        s = tm.group(1)
-    s = s.strip("'\"")
-    try:
-        ts = datetime.fromisoformat(s.replace("Z", "+00:00"))
-    except ValueError:
-        return start_arg  # already an offset duration string
-    if ts.tzinfo is not None:
-        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
-    epoch_us = int((ts - datetime(1970, 1, 1)).total_seconds() * 1_000_000)
-    slide_us = int(_parse_duration(slide_quoted.strip("'\"")).total_seconds() * 1_000_000)
-    return f"'{epoch_us % slide_us} microseconds'"
-
-
 _APPROX_DISTINCT_RE = re.compile(r"\bapprox_distinct\s*\(", re.I)
 
 
@@ -293,9 +217,9 @@ def rewrite_approx_distinct(sql: str) -> str:
 
 
 def rewrite_first_last(sql: str) -> str:
-    """first(t, v) → min_by(v, t); last(t, v) → max_by(v, t). Only rewrites
-    two-argument calls — Spark's own one-argument first()/last() window
-    aggregates pass through untouched."""
+    """first(t, v) / last(t, v) → ``functions.timeseries.first``/``last``.
+    Only rewrites two-argument calls — Spark's own one-argument
+    first()/last() window aggregates pass through untouched."""
     pos = 0
     while True:
         m = _FIRST_LAST_RE.search(sql, pos)
@@ -313,8 +237,8 @@ def rewrite_first_last(sql: str) -> str:
                 f"Error during planning: No function matches the given name "
                 f"and argument types '{fn}({', '.join(a.strip() for a in args)})'"
             )
-        target = "min_by" if fn == "first" else "max_by"
-        repl = f"{target}({args[1]}, {args[0]})"
+        build = timeseries.first if fn == "first" else timeseries.last
+        repl = build(args[0], args[1])
         sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start() + len(repl)
 
@@ -323,12 +247,7 @@ _INCREASE_RE = re.compile(r"\bincrease\s*\(", re.I)
 
 
 def rewrite_increase(sql: str) -> str:
-    """``increase(time, v ORDER BY time)`` as a SQL aggregate expression
-    (aggregate_function/increase.rs:42-45; function/common/increase.slt):
-    collect (t, v) pairs, sort by t, then fold positive deltas — a counter
-    reset (decrease) contributes the new value. Pure higher-order-function
-    SQL: map-side combinable array_agg + driver-free fold, value type
-    preserved (bigint counters stay bigint)."""
+    """``increase(time, v ORDER BY time)`` → ``functions.timeseries.increase``."""
     while True:
         m = _INCREASE_RE.search(sql)
         if not m:
@@ -347,23 +266,7 @@ def rewrite_increase(sql: str) -> str:
                 "and argument types for increase — expected "
                 "(time, value ORDER BY time), aggregate_function/increase.rs"
             )
-        t, v = om.group(1).strip(), om.group(2).strip()
-        arr = (
-            f"transform(array_sort(array_agg(struct(({t}) AS _t, ({v}) AS _v)))"
-            f", s -> s._v)"
-        )
-        deltas = (
-            f"zip_with(slice({arr}, 2, greatest(size({arr}) - 1, 0)), "
-            f"slice({arr}, 1, greatest(size({arr}) - 1, 0)), "
-            f"(c, p) -> CASE WHEN c >= p THEN c - p ELSE c END)"
-        )
-        # try_element_at: all-NULL groups array_agg to an empty array, and
-        # element_at(arr, 1) on it is INVALID_ARRAY_INDEX under ANSI mode —
-        # the typed-zero seed must degrade to NULL instead of erroring
-        repl = (
-            f"aggregate({deltas}, try_element_at({arr}, 1) - try_element_at({arr}, 1), "
-            f"(acc, x) -> acc + x)"
-        )
+        repl = timeseries.increase(om.group(1).strip(), om.group(2).strip())
         sql = sql[: m.start()] + repl + sql[end:]
 
 
@@ -450,13 +353,11 @@ def rewrite_selector(sql: str) -> str:
 #
 # Reference: query_server/query/src/extension/expr/aggregate_function/
 # {gauge/gauge_agg.rs, state_agg/*.rs, sample.rs} and the scalar accessors
-# under extension/expr/scalar_function/. Each composite form
-# ``accessor(gauge_agg(t, v))`` is rewritten to a pure built-in-aggregate
-# expression (min_by/max_by/collect_list + array folds) so the whole family
-# plans as one partial→final hash aggregate — no UDAF, no Python. The
-# collect_list-backed members (idelta, state periods) hold one entry per
-# point of ONE series group in memory — the same working set the reference's
-# accumulator keeps (gauge_agg.rs GaugeData building walks every point).
+# under extension/expr/scalar_function/. The rewrites below parse the
+# composite forms ``accessor(gauge_agg(t, v))``, ``duration_in(state_agg(t,
+# s), ...)`` and the bare aggregates, raise the reference's signature
+# errors, and splice in the expressions built by functions/gauge.py and
+# functions/state.py.
 # ---------------------------------------------------------------------------
 
 _GAUGE_ACC_RE = re.compile(
@@ -469,9 +370,6 @@ _STATE_ACC_RE = re.compile(r"\b(duration_in|state_at)\s*\(", re.I)
 _STATE_AGG_RE = re.compile(r"\b(compact_state_agg|state_agg)\s*\(", re.I)
 _SAMPLE_RE = re.compile(r"\bsample\s*\(", re.I)
 _ORDER_BY_TAIL = re.compile(r"\s+order\s+by\s+.+$", re.I | re.S)
-
-_I64_MIN = "-9223372036854775807L"
-_I64_MAX = "9223372036854775807L"
 
 
 def _gauge_inner(arg: str) -> tuple[str, str] | None:
@@ -513,69 +411,6 @@ def _state_inner(arg: str) -> tuple[bool, str, str] | None:
     )
 
 
-# gauge_agg's signature is (timestamp, float64) only (gauge_agg.rs
-# registration) — `v + 0.0d` rejects boolean/timestamp values at analysis
-# time (a plain cast would coerce them), and `cast(t as timestamp)` rejects
-# non-time first arguments, mirroring DataFusion's planner errors.
-def _g_num(v: str) -> str:
-    return f"({v} + 0.0d)"
-
-
-def _g_first_t(t: str, v: str) -> str:
-    return f"min(cast({t} as timestamp)) FILTER (WHERE {_g_num(v)} IS NOT NULL)"
-
-
-def _g_last_t(t: str, v: str) -> str:
-    return f"max(cast({t} as timestamp)) FILTER (WHERE {_g_num(v)} IS NOT NULL)"
-
-
-def _g_first_v(t: str, v: str) -> str:
-    return f"min_by({_g_num(v)}, {t}) FILTER (WHERE {v} IS NOT NULL)"
-
-
-def _g_last_v(t: str, v: str) -> str:
-    return f"max_by({_g_num(v)}, {t}) FILTER (WHERE {v} IS NOT NULL)"
-
-
-def _g_td_us(t: str, v: str) -> str:
-    return (
-        f"(unix_micros({_g_last_t(t, v)}) - unix_micros({_g_first_t(t, v)}))"
-    )
-
-
-def _g_arr(t: str, v: str) -> str:
-    return (
-        f"array_sort(collect_list(CASE WHEN {v} IS NOT NULL THEN "
-        f"named_struct('ts', cast({t} as timestamp), 'val', {_g_num(v)}) END))"
-    )
-
-
-def _gauge_accessor_expr(fn: str, t: str, v: str) -> str:
-    delta = f"({_g_last_v(t, v)} - {_g_first_v(t, v)})"
-    if fn == "delta":
-        return delta
-    if fn == "rate":
-        # the reference's rate is delta per NANOSECOND
-        # (scalar_function/gauge/rate.rs; rate.slt: -111 / 0.010 s
-        # = -1.11e-5) — null on a single-point gauge
-        return f"({delta} / nullif(cast({_g_td_us(t, v)} as double) * 1000.0, 0.0D))"
-    if fn == "time_delta":
-        return f"make_dt_interval(0, 0, 0, {_g_td_us(t, v)} / 1e6)"
-    if fn == "first_time":
-        return _g_first_t(t, v)
-    if fn == "first_val":
-        return _g_first_v(t, v)
-    if fn == "last_time":
-        return _g_last_t(t, v)
-    if fn == "last_val":
-        return _g_last_v(t, v)
-    arr = _g_arr(t, v)
-    if fn == "idelta_left":
-        return f"(try_element_at({arr}, 2).val - try_element_at({arr}, 1).val)"
-    # idelta_right
-    return f"(try_element_at({arr}, -1).val - try_element_at({arr}, -2).val)"
-
-
 def rewrite_gauge(sql: str) -> str:
     """``accessor(gauge_agg(t, v))`` → built-in aggregate expressions;
     a bare ``gauge_agg(t, v)`` → the GaugeData struct
@@ -594,7 +429,7 @@ def rewrite_gauge(sql: str) -> str:
         if inner is None:
             pos = end
             continue
-        repl = _gauge_accessor_expr(m.group(1).lower(), *inner)
+        repl = gauge.gauge_accessor(m.group(1).lower(), *inner)
         sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start() + len(repl)
     pos = 0
@@ -608,48 +443,9 @@ def rewrite_gauge(sql: str) -> str:
         if inner is None:
             pos = end
             continue
-        t, v = inner
-        arr = _g_arr(t, v)
-        repl = (
-            f"named_struct('first', try_element_at({arr}, 1), "
-            f"'second', try_element_at({arr}, 2), "
-            f"'penultimate', try_element_at({arr}, -2), "
-            f"'last', try_element_at({arr}, -1), "
-            f"'num_elements', cast(size({arr}) as bigint))"
-        )
+        repl = gauge.gauge_agg(*inner)
         sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start() + len(repl)
-
-
-def _s_arr(t: str, s: str, compact: bool) -> str:
-    """Sorted (t, s) point array; compact keeps only run starts
-    (state_agg_data.rs compact variant merges consecutive equal states)."""
-    arr = (
-        f"array_sort(collect_list(named_struct("
-        f"'t', cast({t} as timestamp), 's', {s})))"
-    )
-    if not compact:
-        return arr
-    return (
-        f"filter(transform(sequence(1, size({arr})), _i -> "
-        f"CASE WHEN _i = 1 OR NOT (try_element_at({arr}, _i).s <=> "
-        f"try_element_at({arr}, _i - 1).s) THEN try_element_at({arr}, _i) "
-        f"END), _x -> _x IS NOT NULL)"
-    )
-
-
-def _s_duration_fold(arr: str, state: str, start_us: str, end_us: str) -> str:
-    """Σ over closed periods [pᵢ.t, pᵢ₊₁.t) with state = ``state``, clipped
-    to [start_us, end_us] — the last (open) state contributes nothing,
-    matching duration_in.rs."""
-    return (
-        f"CASE WHEN size({arr}) >= 2 THEN aggregate("
-        f"sequence(1, size({arr}) - 1), 0L, (_acc, _i) -> _acc + "
-        f"(CASE WHEN try_element_at({arr}, _i).s <=> {state} THEN "
-        f"greatest(0L, least(unix_micros(try_element_at({arr}, _i + 1).t), {end_us}) - "
-        f"greatest(unix_micros(try_element_at({arr}, _i).t), {start_us})) "
-        f"ELSE 0L END)) ELSE 0L END"
-    )
 
 
 def rewrite_state(sql: str) -> str:
@@ -679,11 +475,7 @@ def rewrite_state(sql: str) -> str:
                 )
             if len(args) != 2:
                 raise ValueError("state_at expects 2 arguments")
-            ts = f"cast({args[1]} as timestamp)"
-            repl = (
-                f"(CASE WHEN max(cast({t} as timestamp)) > {ts} THEN "
-                f"max_by({s}, {t}) FILTER (WHERE cast({t} as timestamp) <= {ts}) END)"
-            )
+            repl = state.state_at(t, s, args[1])
         else:  # duration_in
             if len(args) > 4:
                 raise ValueError("duration_in expects 2-4 arguments")
@@ -692,17 +484,7 @@ def rewrite_state(sql: str) -> str:
                     "duration_in(state_agg, state, start_time) doesn't "
                     "support compact_agg"
                 )
-            start_us, end_us = _I64_MIN, _I64_MAX
-            if len(args) >= 3:
-                start_us = f"unix_micros(cast({args[2]} as timestamp))"
-            if len(args) == 4:
-                end_us = (
-                    f"unix_micros(cast({args[2]} as timestamp) + {args[3]})"
-                )
-            fold = _s_duration_fold(
-                _s_arr(t, s, compact), args[1], start_us, end_us
-            )
-            repl = f"make_dt_interval(0, 0, 0, ({fold}) / 1e6)"
+            repl = state.duration_in(t, s, *args[1:], compact=compact)
         sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start() + len(repl)
     pos = 0
@@ -717,27 +499,7 @@ def rewrite_state(sql: str) -> str:
             pos = end
             continue
         compact, t, s = inner
-        arr = _s_arr(t, s, compact)
-        periods = (
-            f"CASE WHEN size({arr}) >= 2 THEN filter(transform("
-            f"sequence(1, size({arr})), _i -> named_struct("
-            f"'state', try_element_at({arr}, _i).s, "
-            f"'start_time', try_element_at({arr}, _i).t, "
-            f"'end_time', try_element_at({arr}, _i + 1).t)), "
-            f"_p -> _p.end_time IS NOT NULL) END"
-        )
-        durations = (
-            f"transform(array_distinct(transform({periods}, _p -> _p.state)), "
-            f"_st -> named_struct('state', _st, 'duration', "
-            f"make_dt_interval(0, 0, 0, aggregate({periods}, 0L, "
-            f"(_acc, _p) -> _acc + (CASE WHEN _p.state <=> _st THEN "
-            f"unix_micros(_p.end_time) - unix_micros(_p.start_time) "
-            f"ELSE 0L END)) / 1e6)))"
-        )
-        repl = (
-            f"named_struct('state_duration', {durations}, "
-            f"'state_periods', {periods})"
-        )
+        repl = state.state_agg(t, s, compact)
         sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start() + len(repl)
 
@@ -947,8 +709,6 @@ def rewrite_date_bin(sql: str) -> str:
     tsbench/avg_daily_driving_duration.slt:26) → epoch-µs floor arithmetic:
     ts - pmod(ts - origin, stride). pmod keeps the floor correct for
     pre-origin timestamps."""
-    from ..functions.timeseries import _parse_duration
-
     while True:
         m = _DATE_BIN_RE.search(sql)
         if not m:
@@ -960,7 +720,7 @@ def rewrite_date_bin(sql: str) -> str:
         im = _INTERVAL_RE.match(args[0].strip())
         if not im:
             raise ValueError("date_bin stride must be an interval literal")
-        stride_us = int(_parse_duration(im.group(1)).total_seconds() * 1_000_000)
+        stride_us = int(timeseries._parse_duration(im.group(1)).total_seconds() * 1_000_000)
         ts = args[1]
         origin_us = (
             f"unix_micros(CAST({args[2]} AS TIMESTAMP))" if len(args) == 3 else "0"

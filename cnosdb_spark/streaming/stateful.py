@@ -7,8 +7,9 @@ built-in streaming aggregations cover the reference's own surface
 (time_window counts/sums — stream/basic.slt); this module adds the
 operator that surface CANNOT express with built-ins: a *time-ordered,
 non-commutative* per-series fold — counter ``increase`` with reset
-handling (aggregate_function/increase.rs semantics, batch analogue in
-functions/timeseries.py:increase) computed incrementally across batches.
+handling (aggregate_function/increase.rs semantics; the batch form is
+the SQL expression functions.timeseries.increase) computed incrementally
+across batches.
 
 Scale shape: state is one (last_ts, last_val, running_total, n) tuple
 per series, partitioned by the group key in Spark's state store — the

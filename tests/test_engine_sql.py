@@ -1164,3 +1164,41 @@ def test_insert_values_keeps_ns_residue_like_line_protocol(eng):
     assert [(r[1], r[2]) for r in stored("c")] == [
         (805, 2.0), (810, 3.0), (200, 0.0), (210, 1.0)
     ]
+
+
+def test_insert_select_qualified_and_stream_sources(eng):
+    """INSERT … SELECT plans its source like a SELECT: ``db.table`` and
+    ``public.table`` resolve to their views, and a stream table is a valid
+    source (registered as a stream job) though a bare SELECT on it is not."""
+    eng.sql("CREATE TABLE m(v DOUBLE, TAGS(k))")
+    eng.sql("CREATE DATABASE db1")
+    eng.sql("CREATE TABLE db1.m(v DOUBLE, TAGS(k))")
+    eng.sql("INSERT INTO db1.m(time, k, v) VALUES (5, 'z', 5.0)")
+    eng.sql("INSERT INTO m(time, k, v) SELECT time, k, v FROM db1.m")
+    eng.sql("INSERT INTO m(time, k, v) SELECT time, 'y', v + 1 FROM public.m")
+    rows = eng.sql("SELECT k, v FROM m ORDER BY k").collect()
+    assert [(r["k"], r["v"]) for r in rows] == [("y", 6.0), ("z", 5.0)]
+
+    eng.sql(
+        "CREATE STREAM TABLE st WITH (db='db1', table='m', "
+        "event_time_column='time') engine=tskv"
+    )
+    with pytest.raises(ValueError, match="Stream table can only be used"):
+        eng.sql("SELECT * FROM st")
+    eng.sql("CREATE TABLE sink(v DOUBLE, TAGS(k))")
+    eng.sql("INSERT INTO sink(time, k, v) SELECT time, k, v FROM st")
+    assert [("sink" in key) for key in eng.stream_jobs] == [True]
+    assert eng.sql("SELECT count(*) AS n FROM sink").collect()[0]["n"] == 1
+
+
+def test_update_delete_where_integer_time(eng):
+    """UPDATE/DELETE WHERE gets SELECT's dialect rewrite: an integer
+    compared with ``time`` is an epoch timestamp there too."""
+    eng.sql("CREATE TABLE m(v DOUBLE, TAGS(k))")
+    eng.sql("INSERT INTO m(time, k, v) VALUES (1, 'a', 1.0), (2, 'a', 2.0), (3, 'b', 3.0)")
+    assert eng.sql("SELECT count(*) AS n FROM m WHERE time < 2").collect()[0]["n"] == 1
+    assert eng.sql("UPDATE m SET v = 9 WHERE time = 1").collect()[0]["rows"] == 1
+    assert eng.sql("SELECT v FROM m WHERE time = 1").collect()[0]["v"] == 9.0
+    assert eng.sql("DELETE FROM m WHERE time < 2").collect()[0]["rows"] == 1
+    rows = eng.sql("SELECT k, v FROM m ORDER BY time").collect()
+    assert [(r["k"], r["v"]) for r in rows] == [("a", 2.0), ("b", 3.0)]

@@ -1,6 +1,6 @@
 """Unit tests for the time-series function library: argument validation
-parity with the reference, gauge/state correctness on hand-computed
-fixtures, repair algorithms."""
+parity with the reference, the gauge/state/increase SQL builders on
+hand-computed fixtures, repair algorithms."""
 
 from __future__ import annotations
 
@@ -11,36 +11,43 @@ from pyspark.sql import functions as F
 
 from cnosdb_spark.functions import (
     bottom,
+    duration_in,
     gauge_agg,
     increase,
-    mode_df,
-    state_durations,
+    state_agg,
+    state_at,
     time_window,
     topk,
 )
 from cnosdb_spark.functions.repair import timestamp_repair, value_fill, value_repair
-from cnosdb_spark.functions.state import compact_state_agg, state_at
 
 
 def _ts(*seconds):
     return [datetime(2024, 1, 1) + timedelta(seconds=s) for s in seconds]
 
 
+def _agg(df, expr):
+    """One aggregate SQL expression over the whole of ``df``."""
+    return df.agg(F.expr(expr).alias("x")).collect()[0]["x"]
+
+
 # ---- validation parity (reference transform_time_window.rs:143-151, 346;
 # ---- topk k ∈ [1,255] transform_topk_func_to_topk_node.rs) ----
 
-def test_time_window_duration_bounds(spark):
+def test_time_window_duration_bounds():
     with pytest.raises(ValueError):
-        time_window("ts", "0 s")
+        time_window("ts", "'0 s'")
     with pytest.raises(ValueError):
-        time_window("ts", "366 d")
-    time_window("ts", "365 d")  # ok
+        time_window("ts", "'366 d'")
+    assert time_window("ts", "'365 d'") == "window(ts, '365 d')"
 
 
-def test_time_window_overlap_limit(spark):
-    with pytest.raises(ValueError):
-        time_window("ts", "101 s", "1 s")
-    time_window("ts", "100 s", "1 s")  # ok
+def test_time_window_overlap_limit():
+    with pytest.raises(ValueError, match="overlapping"):
+        time_window("ts", "'101 s'", "'1 s'")
+    with pytest.raises(ValueError, match="overlapping"):
+        time_window("ts", "'201 s'", "'2 s'")
+    assert time_window("ts", "'100 s'", "'1 s'") == "window(ts, '100 s', '1 s')"
 
 
 def test_topk_k_bounds(spark):
@@ -59,7 +66,7 @@ def test_gauge_second_penultimate(spark):
     t = _ts(0, 10, 20, 30)
     rows = list(zip(["s"] * 4, t, [1.0, 5.0, 3.0, 9.0]))
     df = spark.createDataFrame(rows, ["k", "ts", "v"])
-    g = gauge_agg(df, ["k"], "ts", "v").collect()[0]["gauge"]
+    g = _agg(df, gauge_agg("ts", "v"))
     assert g["first"]["val"] == 1.0
     assert g["second"]["val"] == 5.0
     assert g["penultimate"]["val"] == 3.0
@@ -69,7 +76,7 @@ def test_gauge_second_penultimate(spark):
 
 def test_gauge_single_point(spark):
     df = spark.createDataFrame([("s", datetime(2024, 1, 1), 2.0)], ["k", "ts", "v"])
-    g = gauge_agg(df, ["k"], "ts", "v").collect()[0]["gauge"]
+    g = _agg(df, gauge_agg("ts", "v"))
     assert g["first"]["val"] == 2.0 and g["last"]["val"] == 2.0
     assert g["second"] is None and g["penultimate"] is None
 
@@ -81,18 +88,19 @@ def test_state_durations_and_compact(spark):
     t = _ts(0, 10, 30, 35)
     states = ["starting", "running", "running", "error"]
     df = spark.createDataFrame(list(zip(["k"] * 4, t, states)), ["k", "ts", "state"])
-    out = {
-        (r["k"], r["state"]): r["duration_s"]
-        for r in state_durations(df, "ts", "state", ["k"]).collect()
-    }
-    assert out[("k", "starting")] == 10.0
-    assert out[("k", "running")] == 25.0
-    assert out[("k", "error")] == 0.0
-    cmp = {
-        (r["k"], r["state"]): r["duration_s"]
-        for r in compact_state_agg(df, "ts", "state", ["k"]).collect()
-    }
-    assert cmp == out  # durations identical after run-merging
+    expect = {"starting": 10.0, "running": 25.0, "error": 0.0}
+    for compact in (False, True):
+        got = {
+            s: _agg(df, duration_in("ts", "state", f"'{s}'", compact=compact))
+            for s in expect
+        }
+        assert got == {s: timedelta(seconds=v) for s, v in expect.items()}
+        listed = {
+            d["state"]: d["duration"]
+            for d in _agg(df, state_agg("ts", "state", compact))["state_duration"]
+        }
+        assert listed["starting"] == timedelta(seconds=10)
+        assert listed["running"] == timedelta(seconds=25)
 
 
 def test_state_at(spark):
@@ -100,8 +108,7 @@ def test_state_at(spark):
     df = spark.createDataFrame(
         list(zip(["k"] * 3, t, ["a", "b", "c"])), ["k", "ts", "state"]
     )
-    r = state_at(df, "ts", "state", ["k"], "2024-01-01 00:00:15").collect()
-    assert r[0]["state"] == "b"
+    assert _agg(df, state_at("ts", "state", "TIMESTAMP '2024-01-01 00:00:15'")) == "b"
 
 
 # ---- increase with counter reset ----
@@ -110,15 +117,14 @@ def test_increase_reset(spark):
     t = _ts(0, 1, 2, 3)
     vals = [10.0, 15.0, 3.0, 7.0]  # +5, reset→+3, +4 = 12
     df = spark.createDataFrame(list(zip(["k"] * 4, t, vals)), ["k", "ts", "v"])
-    out = increase(df, "ts", "v", ["k"]).collect()
-    assert out[0]["increase"] == 12.0
+    assert _agg(df, increase("ts", "v")) == 12.0
 
 
 def test_mode_tie_break(spark):
     df = spark.createDataFrame(
         [("k", "b"), ("k", "b"), ("k", "a"), ("k", "a"), ("k", "c")], ["k", "v"]
     )
-    assert mode_df(df, ["k"], "v").collect()[0]["mode"] == "a"  # tie a/b → min
+    assert _agg(df, "mode(v, true)") == "a"  # tie a/b → min
 
 
 # ---- ts_gen_func repairs ----

@@ -195,8 +195,8 @@ def test_interval_trigger_update_mode_incremental(spark, tmp_path):
 def test_stateful_streaming_increase_matches_batch(spark, tmp_path):
     """applyInPandasWithState counter-increase: per-series state folds
     across ≥2 micro-batches; the final emission per key must equal the
-    batch increase() over the whole table (functions/timeseries.py),
-    including a counter reset inside the second batch."""
+    SQL increase() the Engine runs (functions.timeseries.increase) over
+    the whole table, including a counter reset inside the second batch."""
     import glob
     import shutil
 
@@ -271,7 +271,9 @@ def test_stateful_streaming_increase_matches_batch(spark, tmp_path):
            for r in latest.collect()}
     expect = {
         r["series"]: r["increase"]
-        for r in increase(df, "time", "value", ["series"]).collect()
+        for r in df.groupBy("series")
+        .agg(F.expr(increase("time", "value")).alias("increase"))
+        .collect()
     }
     assert set(got) == {"s0", "s1"}
     for k in got:
