@@ -31,8 +31,36 @@ from .schema import (
     TIME_COL,
     TskvTableSchema,
 )
-from .sql.rewriter import rewrite_dql
+from .sql.rewriter import (
+    _LAG_LEAD_RE,
+    _PAREN_RE,
+    _call_re,
+    _split_args,
+    iter_calls,
+    rewrite_calls,
+    rewrite_dql,
+    rewrite_f32_math,
+)
 from .streaming.stream_table import StreamTable
+
+_SESSION_FN_RE = _call_re(
+    "current_user", "current_role", "current_tenant", "current_database"
+)
+_COALESCE_RE = _call_re("coalesce")
+_LEFT_RIGHT_RE = _call_re("left", "right")
+_NUMERIC_AGG_RE = _call_re(
+    "avg", "sum", "stddev", "variance", "var_samp", "covar_samp", "corr"
+)
+_INT64_ARG_RE = _call_re("chr", "to_hex")
+_APPROX_DISTINCT_RE = _call_re("approx_distinct")
+_TO_TIMESTAMP_RE = _call_re(
+    "to_timestamp", "to_timestamp_seconds", "to_timestamp_millis",
+    "to_timestamp_micros", "from_unixtime",
+)
+_GAPFILL_RE = _call_re("time_window_gapfill")
+_FILL_RE = _call_re("locf", "interpolate")
+# a bare, optionally qualified, column reference
+_COLUMN_REF = re.compile(r"(?:(\w+)\.)?(\w+)")
 
 _TYPE_MAP = {
     "bigint unsigned": "unsigned",
@@ -329,7 +357,7 @@ class Engine:
     # ------------------------------------------------------------- dispatch
     def sql(self, text: str) -> DataFrame | None:
         text = _strip_line_comments(text)
-        stmts = [s.strip() for s in _split_statements(text) if s.strip()]
+        stmts = [s for s in _split_args(text, ";") if s]
         if len(stmts) != 1:
             # parity: dispatcher/manager.rs:131-137 (exactly one statement)
             raise ValueError(f"expected exactly one statement, got {len(stmts)}")
@@ -788,14 +816,15 @@ class Engine:
             "current_tenant": f"'{self.catalog.tenant}'",
             "current_database": f"'{self.database}'",
         }
-        for fn, val in subs.items():
-            sql = re.sub(rf"\b{fn}\s*\(\s*\)", val, sql, flags=re.I)
-        return sql
+        return rewrite_calls(
+            sql, _SESSION_FN_RE,
+            lambda m, args: None if args.text.strip() else subs[m.group(1).lower()],
+        )
 
     def _select(self, stmt: str) -> DataFrame:
         tables = self._register_views()
         stmt = self._session_fns(stmt)
-        if re.search(r"\btime_window_gapfill\s*\(", stmt, re.I):
+        if next(iter_calls(stmt, _GAPFILL_RE), None):
             return self._gapfill_select(stmt, tables)
         m = re.match(
             r"SELECT\s+(timestamp_repair|value_fill|value_repair)\s*\(",
@@ -900,15 +929,12 @@ class Engine:
         sch = src and src[3]
         # f32 log/atan2 parity applies to literal-only statements too
         # (log.slt `select log(1)`), so it runs before the schema gate
-        from .sql.rewriter import rewrite_f32_math
-
         f32_ints = (
             {f for f, t in sch.fields.items() if str(t).lower() in ("bigint", "unsigned")}
             if sch
             else set()
         )
-        if re.search(r"\b(log|atan2)\s*\(", stmt, re.I):
-            stmt = rewrite_f32_math(stmt, f32_ints)
+        stmt = rewrite_f32_math(stmt, f32_ints)
         if sch is None:
             return stmt
         bool_fields = {f for f, t in sch.fields.items() if "bool" in str(t).lower()}
@@ -917,19 +943,10 @@ class Engine:
 
         def map_args(fn_pat: str, arg_fn) -> None:
             nonlocal stmt
-            pos = 0
-            while True:
-                m = re.compile(rf"\b{fn_pat}\s*\(", re.I).search(stmt, pos)
-                if not m:
-                    return
-                from .sql.rewriter import _find_call_end, _split_args
-
-                end = _find_call_end(stmt, m.end() - 1)
-                args = _split_args(stmt[m.end() : end - 1])
-                new_args = [arg_fn(a.strip()) for a in args]
-                repl = stmt[m.start() : m.end()] + ", ".join(new_args) + ")"
-                stmt = stmt[: m.start()] + repl + stmt[end:]
-                pos = m.start() + len(repl)
+            stmt = rewrite_calls(
+                stmt, re.compile(rf"\b{fn_pat}\s*\(", re.I),
+                lambda m, args: m.group(0) + ", ".join(map(arg_fn, args)) + ")",
+            )
 
         def concat_arg(a: str) -> str:
             base = a.split(".")[-1].strip('"')
@@ -970,82 +987,78 @@ class Engine:
                 return f"try_cast({a} as double)"
             return a
 
-        if re.search(r"\bconcat\s*\(", stmt, re.I):
-            map_args("concat(?!_ws)", concat_arg)
+        map_args("concat(?!_ws)", concat_arg)
+        # same '0'/'1' boolean and ISO-'T' time renders apply to the
+        # value args (concat_ws.slt:124,165) AND to the separator — a
+        # typed-column separator materializes between values with the
+        # same DataFusion rendering (concat_ws.slt:226
+        # concat_ws(TIME,TIME,TIME) shows three ISO-'T' copies)
+        map_args("concat_ws", concat_arg)
+        # DataFusion coerces a MIXED numeric/string coalesce to Utf8
+        # (coalesce.slt:26-155: coalesce(d_double_1, null, d_string)
+        # yields '69.0'/'C'); Spark ANSI instead casts the string arg to
+        # double and errors on non-numeric text. Cast the numeric args
+        # to string when the call mixes both — Spark's double→string
+        # render ('69.0') matches DataFusion's byte-for-byte here.
+        num_fields = {
+            f for f, t in sch.fields.items()
+            if str(t).lower() in ("double", "bigint", "unsigned")
+        }
 
-        if re.search(r"\bconcat_ws\s*\(", stmt, re.I):
-            # same '0'/'1' boolean and ISO-'T' time renders apply to the
-            # value args (concat_ws.slt:124,165) AND to the separator — a
-            # typed-column separator materializes between values with the
-            # same DataFusion rendering (concat_ws.slt:226
-            # concat_ws(TIME,TIME,TIME) shows three ISO-'T' copies)
-            pos = 0
-            while True:
-                mm = re.compile(r"\bconcat_ws\s*\(", re.I).search(stmt, pos)
-                if not mm:
-                    break
-                from .sql.rewriter import _find_call_end, _split_args
-
-                end = _find_call_end(stmt, mm.end() - 1)
-                args = _split_args(stmt[mm.end() : end - 1])
-                new_args = [concat_arg(a.strip()) for a in args]
-                repl = stmt[mm.start() : mm.end()] + ", ".join(new_args) + ")"
-                stmt = stmt[: mm.start()] + repl + stmt[end:]
-                pos = mm.start() + len(repl)
-        if re.search(r"\bcoalesce\s*\(", stmt, re.I):
-            # DataFusion coerces a MIXED numeric/string coalesce to Utf8
-            # (coalesce.slt:26-155: coalesce(d_double_1, null, d_string)
-            # yields '69.0'/'C'); Spark ANSI instead casts the string arg to
-            # double and errors on non-numeric text. Cast the numeric args
-            # to string when the call mixes both — Spark's double→string
-            # render ('69.0') matches DataFusion's byte-for-byte here.
-            num_fields = {
-                f for f, t in sch.fields.items()
-                if str(t).lower() in ("double", "bigint", "unsigned")
-            }
-
-            def _coal_type(a: str) -> str:
-                if a.upper() == "NULL":
-                    return "null"
-                if a.startswith("'"):
-                    return "str"
-                base = a.split(".")[-1].strip('"')
-                if base in str_fields or base in tag_set:
-                    return "str"
-                if base in num_fields:
-                    return "num"
-                toks = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", a))
-                if toks & (str_fields | tag_set):
-                    return "other"
-                if toks & num_fields or re.search(r"\d", a):
-                    return "num"
+        def _coal_type(a: str) -> str:
+            if a.upper() == "NULL":
+                return "null"
+            if a.startswith("'"):
+                return "str"
+            base = a.split(".")[-1].strip('"')
+            if base in str_fields or base in tag_set:
+                return "str"
+            if base in num_fields:
+                return "num"
+            toks = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", a))
+            if toks & (str_fields | tag_set):
                 return "other"
+            if toks & num_fields or re.search(r"\d", a):
+                return "num"
+            return "other"
 
-            pos = 0
-            while True:
-                mm = re.compile(r"\bcoalesce\s*\(", re.I).search(stmt, pos)
-                if not mm:
-                    break
-                from .sql.rewriter import _find_call_end, _split_args
+        def coalesce(m: re.Match, args: list[str]) -> str:
+            kinds = [_coal_type(a) for a in args]
+            if "str" in kinds and "num" in kinds:
+                args = [
+                    f"cast({a} as string)" if k == "num" else a
+                    for a, k in zip(args, kinds)
+                ]
+            return m.group(0) + ", ".join(args) + ")"
 
-                end = _find_call_end(stmt, mm.end() - 1)
-                args = [a.strip() for a in _split_args(stmt[mm.end() : end - 1])]
-                kinds = [_coal_type(a) for a in args]
-                if "str" in kinds and "num" in kinds:
-                    args = [
-                        f"cast({a} as string)" if k == "num" else a
-                        for a, k in zip(args, kinds)
-                    ]
-                repl = stmt[mm.start() : mm.end()] + ", ".join(args) + ")"
-                stmt = stmt[: mm.start()] + repl + stmt[end:]
-                pos = mm.start() + len(repl)
+        stmt = rewrite_calls(stmt, _COALESCE_RE, coalesce)
 
         int_fields = {
             f for f, t in sch.fields.items()
             if str(t).lower() in ("bigint", "unsigned")
         }
 
-        if int_fields and re.search(r"\b(left|right)\s*\(", stmt, re.I):
+        def int64_count(m: re.Match, args: list[str]) -> str | None:
+            if len(args) != 2 or args[1].split(".")[-1].strip('"') not in int_fields:
+                return None
+            s, n = args
+            if m.group(1).lower() == "right":
+                return (
+                    f"(CASE WHEN {n} IS NULL THEN CAST(NULL AS STRING) "
+                    f"WHEN {n} >= 0 THEN right({s}, "
+                    f"CAST(LEAST({n}, 2147483647) AS INT)) "
+                    f"ELSE substr({s}, CAST(LEAST(-({n}), 2147483647) "
+                    f"AS INT) + 1) END)"
+                )
+            return (
+                f"(CASE WHEN {n} IS NULL THEN CAST(NULL AS STRING) "
+                f"WHEN {n} >= 0 THEN left({s}, "
+                f"CAST(LEAST({n}, 2147483647) AS INT)) "
+                f"ELSE substr({s}, 1, CAST(greatest("
+                f"char_length({s}) + {n}, 0) AS INT)) END)"
+            )
+
+        if int_fields:
             # DataFusion's left/right count arg is Int64; Spark casts to
             # INT, so a bigint count column overflows at runtime
             # (sqlancer/function.slt:2497 right(s, m2.f0) — DF returns the
@@ -1054,64 +1067,24 @@ class Engine:
             # FIELD columns are clamped — boolean/time counts stay put so
             # Spark still raises the planning error the corpus expects
             # (left.slt:200/212).
-            pos2 = 0
-            while True:
-                lm = re.compile(r"\b(left|right)\s*\(", re.I).search(stmt, pos2)
-                if not lm:
-                    break
-                from .sql.rewriter import _find_call_end, _split_args
-
-                end2 = _find_call_end(stmt, lm.end() - 1)
-                largs = [a.strip() for a in _split_args(stmt[lm.end(): end2 - 1])]
-                if len(largs) != 2 or (
-                    largs[1].split(".")[-1].strip('"') not in int_fields
-                ):
-                    pos2 = end2
-                    continue
-                fn2, s2, n2 = lm.group(1).lower(), largs[0], largs[1]
-                if fn2 == "right":
-                    repl2 = (
-                        f"(CASE WHEN {n2} IS NULL THEN CAST(NULL AS STRING) "
-                        f"WHEN {n2} >= 0 THEN right({s2}, "
-                        f"CAST(LEAST({n2}, 2147483647) AS INT)) "
-                        f"ELSE substr({s2}, CAST(LEAST(-({n2}), 2147483647) "
-                        f"AS INT) + 1) END)"
-                    )
-                else:
-                    repl2 = (
-                        f"(CASE WHEN {n2} IS NULL THEN CAST(NULL AS STRING) "
-                        f"WHEN {n2} >= 0 THEN left({s2}, "
-                        f"CAST(LEAST({n2}, 2147483647) AS INT)) "
-                        f"ELSE substr({s2}, 1, CAST(greatest("
-                        f"char_length({s2}) + {n2}, 0) AS INT)) END)"
-                    )
-                stmt = stmt[: lm.start()] + repl2 + stmt[end2:]
-                pos2 = lm.start() + len(repl2)
-
-        if bool_fields and re.search(r"\bascii\s*\(", stmt, re.I):
+            stmt = rewrite_calls(stmt, _LEFT_RIGHT_RE, int64_count)
+        if bool_fields:
             map_args("ascii", ascii_arg)
-        if re.search(r"\bcorr\s*\(", stmt, re.I):
-            map_args("corr", corr_arg)
+        map_args("corr", corr_arg)
         # covar family: same string-FIELD safe-coercion as corr
         # (statistical_agg/covar.slt:54 expects NULL for covar(f1, f3))
-        if re.search(r"\bcovar(_pop|_samp)?\s*\(", stmt, re.I):
-            map_args("covar(?:_pop|_samp)?", corr_arg)
+        map_args("covar(?:_pop|_samp)?", corr_arg)
         # lag/lead default-value type parity: DataFusion demands the default
         # match the value column's Int64 type — a float default over an
         # integer field is an error (lag.slt:333, lead.slt:231); Spark would
         # silently widen
-        for m in re.finditer(r"\b(lag|lead)\s*\(", stmt, re.I):
-            from .sql.rewriter import _find_call_end, _split_args
-
-            end = _find_call_end(stmt, m.end() - 1)
-            args = _split_args(stmt[m.end() : end - 1])
+        for _, args, _ in iter_calls(stmt, _LAG_LEAD_RE):
             if len(args) == 3:
-                vbase = args[0].strip().split(".")[-1].strip('"')
+                vbase = args[0].split(".")[-1].strip('"')
                 vtype = str(sch.fields.get(vbase, "")).lower()
-                dflt = args[2].strip()
                 if (
                     ("bigint" in vtype or "int" in vtype or vtype == "unsigned")
-                    and re.fullmatch(r"-?(?:\d+\.\d*|\.\d+)", dflt)
+                    and re.fullmatch(r"-?(?:\d+\.\d*|\.\d+)", args[2])
                 ):
                     raise ValueError(
                         "Internal error: Expects default value to have "
@@ -1176,9 +1149,7 @@ class Engine:
         # `time_window(...), *` stays fine, the window isn't a column)
         sm = re.match(r"\s*SELECT\s+(.*?)\s+FROM\b", stmt, re.I | re.S)
         if sm:
-            from .sql.rewriter import _split_args
-
-            items = [i.strip() for i in _split_args(sm.group(1))]
+            items = _split_args(sm.group(1))
             if "*" in items:
                 cols = {TIME_COL, *sch.tags, *sch.fields}
                 if any(i.strip('"') in cols for i in items if i != "*"):
@@ -1186,23 +1157,28 @@ class Engine:
                         "Error during planning: Projections require unique "
                         "expression names"
                     )
+
+        def column_ref(arg: str) -> tuple[str, str | None] | None:
+            """(column, type) when ``arg`` is a bare, optionally
+            qualified, column reference."""
+            r = _COLUMN_REF.fullmatch(arg)
+            return r and (r.group(2), field_type(*r.groups()))
+
         # numeric-only aggregates reject the timestamp column
         # (avg.slt:14, sum.slt:14 expect planning errors for agg(time))
-        for m in re.finditer(
-            r"\b(avg|sum|stddev|variance|var_samp|covar_samp|corr)\s*\(\s*time\s*[,)]",
-            stmt, re.I,
-        ):
-            raise ValueError(
-                "Error during planning: No function matches the given name "
-                f"and argument types '{m.group(1)}(Timestamp)'"
-            )
+        for m, args, _ in iter_calls(stmt, _NUMERIC_AGG_RE):
+            if args and args[0].lower() == "time":
+                raise ValueError(
+                    "Error during planning: No function matches the given name "
+                    f"and argument types '{m.group(1)}(Timestamp)'"
+                )
         # chr/to_hex take a signed Int64 only (chr.slt:31,39;
         # to_hex.slt:100-112: unsigned/double/boolean/string/time error)
-        for m in re.finditer(
-            r"\b(chr|to_hex)\s*\(\s*(?:(\w+)\.)?(\w+)\s*\)", stmt, re.I
-        ):
-            fn2, qual2, col2 = m.groups()
-            t = field_type(qual2, col2)
+        for m, args, _ in iter_calls(stmt, _INT64_ARG_RE):
+            ref = len(args) == 1 and column_ref(args[0])
+            if not ref:
+                continue
+            (col2, t), fn2 = ref, m.group(1)
             bad_kinds = ("double", "unsigned", "float") if fn2.lower() == "chr" else (
                 "double", "unsigned", "float", "boolean", "string",
             )
@@ -1216,39 +1192,33 @@ class Engine:
                 )
         # approx_distinct accepts string/int columns only
         # (approx_distinct.slt:48-59: Timestamp/Float64/Boolean error)
-        for m in re.finditer(
-            r"\bapprox_distinct\s*\(\s*(?:(\w+)\.)?(\w+)\s*\)", stmt, re.I
-        ):
-            t = field_type(m.group(1), m.group(2))
-            if t == "time" or (
-                t is not None
-                and any(k in str(t).lower() for k in ("double", "float", "boolean"))
-            ):
+        for _, args, _ in iter_calls(stmt, _APPROX_DISTINCT_RE):
+            ref = len(args) == 1 and column_ref(args[0])
+            if ref and (ref[1] == "time" or (
+                ref[1] is not None
+                and any(k in str(ref[1]).lower() for k in ("double", "float", "boolean"))
+            )):
                 raise ValueError(
                     "Error during planning: approx_distinct does not accept "
-                    f"{m.group(2)}'s type"
+                    f"{ref[0]}'s type"
                 )
         # the to_timestamp family rejects Float64 columns
         # (to_timestamp_seconds.slt:36 and siblings)
-        for m in re.finditer(
-            r"\b(to_timestamp(?:_seconds|_millis|_micros)?|from_unixtime)"
-            r"\s*\(\s*(?:(\w+)\.)?(\w+)\s*\)",
-            stmt, re.I,
-        ):
-            t = field_type(m.group(2), m.group(3))
-            if t is not None and any(
-                k in str(t).lower() for k in ("double", "float")
+        for m, args, _ in iter_calls(stmt, _TO_TIMESTAMP_RE):
+            ref = len(args) == 1 and column_ref(args[0])
+            if ref and ref[1] is not None and any(
+                k in str(ref[1]).lower() for k in ("double", "float")
             ):
                 raise ValueError(
                     f"Error during planning: {m.group(1)} does not accept "
-                    f"Float64 ({m.group(3)})"
+                    f"Float64 ({ref[0]})"
                 )
         for fn in self._STR_ONLY_FNS:
-            for m in re.finditer(
-                rf"\b{fn}\s*\(\s*(?:(\w+)\.)?(\w+)\s*([,)])", stmt, re.I
-            ):
-                qual, col, delim = m.groups()
-                t = field_type(qual, col)
+            for _, args, _ in iter_calls(stmt, _call_re(fn)):
+                ref = args and column_ref(args[0])
+                if not ref:
+                    continue
+                col, t = ref
                 if t == "time" or (
                     t is not None
                     and "string" not in str(t).lower()
@@ -1258,21 +1228,15 @@ class Engine:
                         "Error during planning: No function matches the "
                         f"given name and argument types '{fn}({col})'"
                     )
-                if fn in self._INT_ARG2_FNS and delim == ",":
-                    am = re.match(
-                        r"\s*(?:(\w+)\.)?(\w+)\s*[,)]", stmt[m.end() :]
+                ref2 = fn in self._INT_ARG2_FNS and len(args) > 1 and column_ref(args[1])
+                if ref2 and ref2[1] is not None and any(
+                    k in str(ref2[1]).lower() for k in ("double", "unsigned", "float")
+                ):
+                    raise ValueError(
+                        "Error during planning: No function matches "
+                        f"the given name and argument types "
+                        f"'{fn}(…, {ref2[0]})'"
                     )
-                    if am:
-                        t2 = field_type(am.group(1), am.group(2))
-                        if t2 is not None and any(
-                            k in str(t2).lower()
-                            for k in ("double", "unsigned", "float")
-                        ):
-                            raise ValueError(
-                                "Error during planning: No function matches "
-                                f"the given name and argument types "
-                                f"'{fn}(…, {am.group(2)})'"
-                            )
 
     def _quality_select(
         self, metric: str, time_col: str, value_col: str, table: str,
@@ -1372,7 +1336,6 @@ class Engine:
         Supported shape mirrors the reference: single table, gapfill call
         in both SELECT and GROUP BY, fills wrap aggregate expressions.
         """
-        from .sql.rewriter import _find_call_end, _split_args
         from .functions.timeseries import time_window_gapfill
 
         m = re.match(
@@ -1399,14 +1362,12 @@ class Engine:
         fill: dict[str, str] = {}
         out_cols: list[str] = []
 
-        for i, item in enumerate(_split_top_level(select_list, ",")):
-            item = item.strip()
+        for i, item in enumerate(_split_args(select_list)):
             am = re.match(r"(.*?)\s+AS\s+(\w+)\s*$", item, re.I | re.S)
             expr_sql, alias = (am.group(1).strip(), am.group(2)) if am else (item, None)
-            gm = re.match(r"time_window_gapfill\s*\(", expr_sql, re.I)
-            if gm:
-                end = _find_call_end(expr_sql, expr_sql.index("("))
-                args = _split_args(expr_sql[expr_sql.index("(") + 1 : end - 1])
+            call = next(iter_calls(expr_sql, _GAPFILL_RE), None)
+            if call and call[0].start() == 0:
+                args = call[1]
                 if len(args) != 2:
                     raise ValueError("time_window_gapfill expects (time, interval)")
                 time_col = args[0]
@@ -1417,13 +1378,11 @@ class Engine:
                 bucket_alias = alias or "_window"
                 out_cols.append(bucket_alias)
                 continue
-            fm = re.match(r"(locf|interpolate)\s*\(", expr_sql, re.I)
-            if fm:
-                end = _find_call_end(expr_sql, expr_sql.index("("))
-                inner = expr_sql[expr_sql.index("(") + 1 : end - 1]
+            call = next(iter_calls(expr_sql, _FILL_RE), None)
+            if call and call[0].start() == 0:
                 name = alias or f"_f{i}"
-                aggs.append(F.expr(rewrite_dql(inner)).alias(name))
-                fill[name] = fm.group(1).lower()
+                aggs.append(F.expr(rewrite_dql(call[1].text)).alias(name))
+                fill[name] = call[0].group(1).lower()
                 out_cols.append(name)
                 continue
             if re.match(r"^[\w.]+$", expr_sql):  # plain group column
@@ -1445,7 +1404,7 @@ class Engine:
         out = out.select(*out_cols)
         if order_by:
             order_sql = order_by.replace(f"{bucket_alias}.start", bucket_alias)
-            out = out.orderBy(*[F.expr(o.strip()) for o in _split_top_level(order_sql, ",")])
+            out = out.orderBy(*[F.expr(o) for o in _split_args(order_sql)])
         return out
 
     # ---------------------------------------------------------------- DDL
@@ -1533,7 +1492,7 @@ class Engine:
         if tm:
             tags = [t.strip().strip('"') for t in tm.group(1).split(",") if t.strip()]
             body = body[: tm.start()] + body[tm.end() :]
-        for coldef in _split_top_level(body, ","):
+        for coldef in _split_args(body):
             coldef = coldef.strip().rstrip(",").strip()
             if not coldef:
                 continue
@@ -1659,7 +1618,7 @@ class Engine:
             raise ValueError(f'Table not found: "{src_db}.{src_table}"')
         if cols_str:
             seen: set[str] = set()
-            for coldef in _split_top_level(cols_str, ","):
+            for coldef in _split_args(cols_str):
                 cname = coldef.split()[0].strip('"') if coldef.split() else ""
                 if cname.lower() in seen:
                     # stream/syntax.slt "Field or Tag have the same name"
@@ -1674,7 +1633,7 @@ class Engine:
             # declared columns must exist in the source table
             # (ddl/create_stream_table.slt 'Unable to get field' record)
             columns = []
-            for coldef in _split_top_level(cols_str, ","):
+            for coldef in _split_args(cols_str):
                 cname = coldef.split()[0].strip('"') if coldef.split() else ""
                 if cname and cname not in valid:
                     raise ValueError(
@@ -1859,22 +1818,15 @@ class Engine:
             field_pos = [i for i, c in enumerate(cols) if c in schema.fields]
             if not field_pos:
                 raise ValueError("Fields can't be empty")
-            from .sql.rewriter import _find_call_end, _split_args
-
-            vtext, vpos = src.rstrip(";"), 0
-            rows_args: list[list[str]] = []
-            while True:
-                op = vtext.find("(", vpos)
-                if op < 0:
-                    break
-                end = _find_call_end(vtext, op)
-                row_args = _split_args(vtext[op + 1 : end - 1])
+            rows_args = [
+                _split_args(row[1:-1])
+                for row in _split_args(src.strip().rstrip(";")[len("VALUES"):])
+            ]
+            for row_args in rows_args:
                 if len(row_args) == len(cols) and all(
-                    row_args[i].strip().upper() == "NULL" for i in field_pos
+                    row_args[i].upper() == "NULL" for i in field_pos
                 ):
                     raise ValueError("Fields can't be empty")
-                rows_args.append(row_args)
-                vpos = end
             # parity: DataFusion's VALUES planner refuses int vs float
             # literals in one column (sqlancer/function.slt:36-49
             # "Inconsistent data type across values list at row R column C";
@@ -2027,7 +1979,7 @@ class Engine:
         tschema = self.catalog.get_schema(db, name)
         set_pairs = [
             tuple(p.strip() for p in a.partition("=")[::2])
-            for a in _split_top_level(sets_str, ",")
+            for a in _split_args(sets_str)
         ]
         # SQL identifiers are case-insensitive: resolve each SET target to
         # the schema's spelling of the column (SET T0 = ... is a tag update)
@@ -2232,14 +2184,11 @@ class Engine:
         (sql/planner.rs:2346-2477)."""
         m = re.match(r"COPY\s+INTO\s+'([^']+)'\s+FROM\s*\(", stmt, re.I | re.S)
         if m:  # export: balanced-paren extraction of the subquery
-            from .sql.rewriter import _find_call_end
-
-            open_p = stmt.index("(", m.end() - 1)
-            end = _find_call_end(stmt, open_p)
+            _, query, end = next(iter_calls(stmt, _PAREN_RE, m.end() - 1))
             fm = re.search(
                 r"FILE_FORMAT\s*=\s*\(\s*TYPE\s*=\s*'(\w+)'\s*\)", stmt[end:], re.I
             )
-            df = self._select(stmt[open_p + 1 : end - 1])
+            df = self._select(query.text)
             return self._export(df, m.group(1), fm.group(1) if fm else None)
         m = re.match(
             r"COPY\s+INTO\s+'([^']+)'\s+FROM\s+\"?([\w.]+)\"?\s*"
@@ -3327,7 +3276,7 @@ def _parse_with_options(withs: str) -> dict:
     opts: dict = {}
     if not withs or not withs.strip():
         return opts
-    for part in _split_top_level(withs, ","):
+    for part in _split_args(withs):
         part = part.strip().rstrip(";").strip()
         if not part:
             continue
@@ -3369,7 +3318,7 @@ def _parse_external_columns(cols_str: str) -> list[tuple[str, str, str]]:
     display)] (reference renders Arrow type names in DESCRIBE,
     ddl/create_external_table.slt:28-33)."""
     out: list[tuple[str, str, str]] = []
-    for coldef in _split_top_level(cols_str, ","):
+    for coldef in _split_args(cols_str):
         coldef = coldef.strip()
         if not coldef:
             continue
@@ -3454,37 +3403,3 @@ def _strip_line_comments(text: str) -> str:
             i += 1
         out_lines.append(line)
     return "\n".join(out_lines)
-
-
-def _split_statements(text: str) -> list[str]:
-    return _split_top_level(text, ";")
-
-
-def _split_top_level(text: str, sep: str) -> list[str]:
-    out: list[str] = []
-    depth = 0
-    in_str: str | None = None
-    cur: list[str] = []
-    for ch in text:
-        if in_str:
-            cur.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out

@@ -21,6 +21,14 @@ _I64_MIN = "-9223372036854775807L"
 _I64_MAX = "9223372036854775807L"
 
 
+def _let(var: str, value: str, body: str) -> str:
+    """``body`` with ``var`` bound to ``value``, which is evaluated once.
+    Spark evaluates an expression again at every use inside a lambda (no
+    common-subexpression elimination in higher-order functions), so an
+    array the lambdas index per element is bound first."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
 def _s_arr(t: str, s: str, compact: bool) -> str:
     """Sorted (t, s) point array; compact keeps only run starts
     (state_agg_data.rs compact variant merges consecutive equal states)."""
@@ -30,11 +38,12 @@ def _s_arr(t: str, s: str, compact: bool) -> str:
     )
     if not compact:
         return arr
-    return (
-        f"filter(transform(sequence(1, size({arr})), _i -> "
-        f"CASE WHEN _i = 1 OR NOT (try_element_at({arr}, _i).s <=> "
-        f"try_element_at({arr}, _i - 1).s) THEN try_element_at({arr}, _i) "
-        f"END), _x -> _x IS NOT NULL)"
+    return _let(
+        "_a", arr,
+        "filter(transform(sequence(1, size(_a)), _i -> "
+        "CASE WHEN _i = 1 OR NOT (try_element_at(_a, _i).s <=> "
+        "try_element_at(_a, _i - 1).s) THEN try_element_at(_a, _i) "
+        "END), _x -> _x IS NOT NULL)",
     )
 
 
@@ -42,13 +51,14 @@ def _s_duration_fold(arr: str, state: str, start_us: str, end_us: str) -> str:
     """Σ over closed periods [pᵢ.t, pᵢ₊₁.t) with state = ``state``, clipped
     to [start_us, end_us] — the last (open) state contributes nothing,
     matching duration_in.rs."""
-    return (
-        f"CASE WHEN size({arr}) >= 2 THEN aggregate("
-        f"sequence(1, size({arr}) - 1), 0L, (_acc, _i) -> _acc + "
-        f"(CASE WHEN try_element_at({arr}, _i).s <=> {state} THEN "
-        f"greatest(0L, least(unix_micros(try_element_at({arr}, _i + 1).t), {end_us}) - "
-        f"greatest(unix_micros(try_element_at({arr}, _i).t), {start_us})) "
-        f"ELSE 0L END)) ELSE 0L END"
+    return _let(
+        "_pt", arr,
+        f"CASE WHEN size(_pt) >= 2 THEN aggregate("
+        f"sequence(1, size(_pt) - 1), 0L, (_acc, _i) -> _acc + "
+        f"(CASE WHEN try_element_at(_pt, _i).s <=> {state} THEN "
+        f"greatest(0L, least(unix_micros(try_element_at(_pt, _i + 1).t), {end_us}) - "
+        f"greatest(unix_micros(try_element_at(_pt, _i).t), {start_us})) "
+        f"ELSE 0L END)) ELSE 0L END",
     )
 
 
@@ -86,24 +96,24 @@ def state_agg(t: str, s: str, compact: bool = False) -> str:
     """Bare ``[compact_]state_agg(t, s)``: struct of ``state_duration``
     (one {state, duration} per state with a closed period) and
     ``state_periods`` ({state, start_time, end_time} per closed period)."""
-    arr = _s_arr(t, s, compact)
-    periods = (
-        f"CASE WHEN size({arr}) >= 2 THEN filter(transform("
-        f"sequence(1, size({arr})), _i -> named_struct("
-        f"'state', try_element_at({arr}, _i).s, "
-        f"'start_time', try_element_at({arr}, _i).t, "
-        f"'end_time', try_element_at({arr}, _i + 1).t)), "
-        f"_p -> _p.end_time IS NOT NULL) END"
+    periods = _let(
+        "_pt", _s_arr(t, s, compact),
+        "CASE WHEN size(_pt) >= 2 THEN filter(transform("
+        "sequence(1, size(_pt)), _i -> named_struct("
+        "'state', try_element_at(_pt, _i).s, "
+        "'start_time', try_element_at(_pt, _i).t, "
+        "'end_time', try_element_at(_pt, _i + 1).t)), "
+        "_p -> _p.end_time IS NOT NULL) END",
     )
     durations = (
-        f"transform(array_distinct(transform({periods}, _p -> _p.state)), "
-        f"_st -> named_struct('state', _st, 'duration', "
-        f"make_dt_interval(0, 0, 0, aggregate({periods}, 0L, "
-        f"(_acc, _p) -> _acc + (CASE WHEN _p.state <=> _st THEN "
-        f"unix_micros(_p.end_time) - unix_micros(_p.start_time) "
-        f"ELSE 0L END)) / 1e6)))"
+        "transform(array_distinct(transform(_ps, _p -> _p.state)), "
+        "_st -> named_struct('state', _st, 'duration', "
+        "make_dt_interval(0, 0, 0, aggregate(_ps, 0L, "
+        "(_acc, _p) -> _acc + (CASE WHEN _p.state <=> _st THEN "
+        "unix_micros(_p.end_time) - unix_micros(_p.start_time) "
+        "ELSE 0L END)) / 1e6)))"
     )
-    return (
-        f"named_struct('state_duration', {durations}, "
-        f"'state_periods', {periods})"
+    return _let(
+        "_ps", periods,
+        f"named_struct('state_duration', {durations}, 'state_periods', _ps)",
     )

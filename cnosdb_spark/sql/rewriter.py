@@ -20,8 +20,15 @@ remaining forms:
 The time-series function expressions are built in ``cnosdb_spark.functions``
 (timeseries.py, gauge.py, state.py); this module parses each call, raises
 the reference's signature errors and splices the built expression in.
-Rewrites are token-aware enough for real queries (they respect quoted
-strings) without a full SQL parser.
+
+Every call rewrite and every call check, here and in the engine's
+schema-aware passes, goes through one scanner instead of a full SQL
+parser: ``iter_calls`` yields each call of a ``name(`` pattern that
+starts outside quoted text ('…' literals, "…" and `…` identifiers) with
+its arguments split at top-level commas, so a function name inside a
+string literal is never touched (the reference rewrites plan nodes, where
+a literal is a value). ``rewrite_calls`` splices a callback's replacement
+over each call, innermost call first, and resumes after it.
 """
 
 from __future__ import annotations
@@ -38,17 +45,19 @@ _EXACT_COUNT_RE = re.compile(r"\bexact_count\s*\(", re.I)
 _INTERVAL_RE = re.compile(r"^\s*interval\s+'([^']+)'\s*$", re.I)
 
 
+_QUOTE_RE = re.compile(r"['\"`]")
+
+
 def _find_call_end(sql: str, open_paren: int) -> int:
     """Index just past the matching ')' for the '(' at ``open_paren``."""
     depth = 0
-    i = open_paren
     in_str: str | None = None
-    while i < len(sql):
+    for i in range(open_paren, len(sql)):
         ch = sql[i]
         if in_str:
             if ch == in_str:
                 in_str = None
-        elif ch in ("'", '"'):
+        elif ch in "'\"`":
             in_str = ch
         elif ch == "(":
             depth += 1
@@ -56,38 +65,102 @@ def _find_call_end(sql: str, open_paren: int) -> int:
             depth -= 1
             if depth == 0:
                 return i + 1
-        i += 1
     raise ValueError(f"unbalanced parentheses in SQL near offset {open_paren}")
 
 
-def _split_args(argstr: str) -> list[str]:
+def _split_args(text: str, sep: str = ",") -> list[str]:
+    """``text`` cut at each ``sep`` outside parentheses and quoted text,
+    every piece stripped; a blank last piece is dropped."""
     args: list[str] = []
     depth = 0
     in_str: str | None = None
     cur: list[str] = []
-    for ch in argstr:
+    for ch in text:
         if in_str:
-            cur.append(ch)
             if ch == in_str:
                 in_str = None
-            continue
-        if ch in ("'", '"'):
+        elif ch in "'\"`":
             in_str = ch
-            cur.append(ch)
         elif ch == "(":
             depth += 1
-            cur.append(ch)
         elif ch == ")":
             depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
+        elif ch == sep and depth == 0:
             args.append("".join(cur).strip())
             cur = []
-        else:
-            cur.append(ch)
-    if cur and "".join(cur).strip():
+            continue
+        cur.append(ch)
+    if "".join(cur).strip():
         args.append("".join(cur).strip())
     return args
+
+
+class CallArgs(list):
+    """A call's arguments, cut at top-level commas and stripped; ``text``
+    is the raw text between the call's parentheses."""
+
+    def __init__(self, text: str):
+        super().__init__(_split_args(text))
+        self.text = text
+
+
+def iter_calls(sql: str, pattern: re.Pattern, pos: int = 0):
+    """Yield ``(match, args, end)`` for each call of ``pattern`` at or
+    after ``pos`` that starts outside quoted text ('…' literals, "…" and
+    `…` identifiers), in text order, nested calls included. ``pattern``
+    matches up to the call's opening parenthesis; ``end`` is the index
+    just past its closing one."""
+    m = pattern.search(sql, pos)
+    while m:
+        q = _QUOTE_RE.search(sql, pos, m.start())
+        if q:
+            close = sql.find(q.group(), q.end())
+            if close < 0:
+                return
+            pos = close + 1
+            if m.start() < pos:
+                m = pattern.search(sql, pos)
+            continue
+        end = _find_call_end(sql, m.end() - 1)
+        yield m, CallArgs(sql[m.end() : end - 1]), end
+        pos = m.end()
+        m = pattern.search(sql, pos)
+
+
+def rewrite_calls(sql: str, pattern: re.Pattern, fn) -> str:
+    """Rewrite each call ``iter_calls`` finds, innermost first: the
+    arguments are rewritten, then ``fn(match, args)`` returns the call's
+    replacement text, or None to keep the call. Scanning resumes after
+    the call."""
+    pos = 0
+    while call := next(iter_calls(sql, pattern, pos), None):
+        m, args, end = call
+        inner = rewrite_calls(args.text, pattern, fn)
+        repl = fn(m, args if inner == args.text else CallArgs(inner))
+        if repl is None:
+            repl = m.group(0) + inner + ")"
+        sql = sql[: m.start()] + repl + sql[end:]
+        pos = m.start() + len(repl)
+    return sql
+
+
+def _sole_call(text: str, pattern: re.Pattern) -> tuple[re.Match, CallArgs] | None:
+    """The match and arguments when ``text`` is one call of ``pattern``
+    and nothing else."""
+    m, args, end = next(iter_calls(text, pattern), (None, None, 0))
+    if m and not text[: m.start()].strip() and not text[end:].strip():
+        return m, args
+    return None
+
+
+def _call_re(*names: str) -> re.Pattern:
+    """Pattern for a call of any of ``names``; group 1 is the name."""
+    return re.compile(rf"\b({'|'.join(names)})\s*\(", re.I)
+
+
+def _rename(sql: str, pattern: re.Pattern, name: str) -> str:
+    """Each call of ``pattern`` renamed to ``name``, arguments kept."""
+    return rewrite_calls(sql, pattern, lambda m, args: f"{name}({args.text})")
 
 
 _CAST_INTERVAL_RE = re.compile(
@@ -139,34 +212,30 @@ def rewrite_time_window(sql: str) -> str:
     # its own (tsbench/avg_daily_driving_duration.slt:103 nests a 10-minute
     # window inside a 1-day one). transform_time_window.rs rejects only a
     # second TimeWindow expr within one aggregation scope.
-    scopes: dict[int, set[str]] = {}
-    for m in _TW_RE.finditer(sql):
-        open_p = sql.index("(", m.start())
-        end = _find_call_end(sql, open_p)
-        scope = _select_scope_at(sql, m.start())
-        scopes.setdefault(scope, set()).add(
-            " ".join(sql[open_p:end].split()).lower()
+    scopes: dict[int, set[tuple[str, ...]]] = {}
+    for m, args, _ in iter_calls(sql, _TW_RE):
+        scopes.setdefault(_select_scope_at(sql, m.start()), set()).add(
+            tuple(" ".join(a.split()).lower() for a in args)
         )
     if any(len(calls) > 1 for calls in scopes.values()):
         raise ValueError("only one time_window per query is supported")
-    while True:
-        m = _TW_RE.search(sql)
-        if not m:
-            return sql
-        open_p = sql.index("(", m.start())
-        end = _find_call_end(sql, open_p)
-        args = _split_args(sql[open_p + 1 : end - 1])
+
+    def window(m: re.Match, args: CallArgs) -> str:
         if not 2 <= len(args) <= 4:
             raise ValueError("time_window expects 2-4 arguments")
         # interval 'X' / CAST('X' AS INTERVAL) → the duration literal 'X'
         lits = []
         for a in args[1:3]:
             im = _INTERVAL_RE.match(a)
-            cm = _CAST_INTERVAL_RE.fullmatch(a.strip())
+            cm = _CAST_INTERVAL_RE.fullmatch(a)
             lits.append(f"'{im.group(1)}'" if im else (f"'{cm.group(1)}'" if cm else a))
         start = args[3] if len(args) == 4 else None
-        repl = timeseries.time_window(args[0], *lits, start=start)
-        sql = sql[: m.start()] + repl + sql[end:]
+        return timeseries.time_window(args[0], *lits, start=start)
+
+    return rewrite_calls(sql, _TW_RE, window)
+
+
+_EXPLODE_RE = re.compile(r"\bexplode\(", re.I)
 
 
 def rewrite_exploded_groupby(sql: str) -> str:
@@ -176,11 +245,9 @@ def rewrite_exploded_groupby(sql: str) -> str:
     ``SELECT w, <aggs> FROM (SELECT explode(ARR) AS w, * FROM t)
     GROUP BY w`` — the same Expand-below-Aggregate plan the reference
     builds (transform_time_window.rs build_sliding_window_plan)."""
-    m = re.search(r"\bexplode\(", sql, re.I)
+    m, _, end = next(iter_calls(sql, _EXPLODE_RE), (None, None, 0))
     if not m:
         return sql
-    open_p = sql.index("(", m.start())
-    end = _find_call_end(sql, open_p)
     am = re.match(r"\s+as\s+(\w+)", sql[end:], re.I)
     if not am:
         return sql
@@ -213,34 +280,28 @@ _APPROX_DISTINCT_RE = re.compile(r"\bapprox_distinct\s*\(", re.I)
 def rewrite_approx_distinct(sql: str) -> str:
     """approx_distinct(x) → approx_count_distinct(x) (DataFusion name →
     Spark name; both HLL-based)."""
-    return _APPROX_DISTINCT_RE.sub("approx_count_distinct(", sql)
+    return _rename(sql, _APPROX_DISTINCT_RE, "approx_count_distinct")
 
 
 def rewrite_first_last(sql: str) -> str:
     """first(t, v) / last(t, v) → ``functions.timeseries.first``/``last``.
     Only rewrites two-argument calls — Spark's own one-argument
     first()/last() window aggregates pass through untouched."""
-    pos = 0
-    while True:
-        m = _FIRST_LAST_RE.search(sql, pos)
-        if not m:
-            return sql
+
+    def first_last(m: re.Match, args: CallArgs) -> str:
         fn = m.group(1).lower()
-        open_p = sql.index("(", m.start())
-        end = _find_call_end(sql, open_p)
-        args = _split_args(sql[open_p + 1 : end - 1])
         # reference signature is strictly (time, value)
         # (aggregate_function/{first,last}.rs; first.slt:11,29,52 expect
         # planning errors for first(time) / first(f0, f1) / first(null))
         if len(args) != 2 or not re.search(r"\btime\b", args[0], re.I):
             raise ValueError(
                 f"Error during planning: No function matches the given name "
-                f"and argument types '{fn}({', '.join(a.strip() for a in args)})'"
+                f"and argument types '{fn}({', '.join(args)})'"
             )
         build = timeseries.first if fn == "first" else timeseries.last
-        repl = build(args[0], args[1])
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+        return build(args[0], args[1])
+
+    return rewrite_calls(sql, _FIRST_LAST_RE, first_last)
 
 
 _INCREASE_RE = re.compile(r"\bincrease\s*\(", re.I)
@@ -248,15 +309,11 @@ _INCREASE_RE = re.compile(r"\bincrease\s*\(", re.I)
 
 def rewrite_increase(sql: str) -> str:
     """``increase(time, v ORDER BY time)`` → ``functions.timeseries.increase``."""
-    while True:
-        m = _INCREASE_RE.search(sql)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
+
+    def increase(m: re.Match, args: CallArgs) -> str:
         om = re.match(
             r"(.+?),(.+?)\s+ORDER\s+BY\s+(.+?)\s*(?:ASC)?\s*$",
-            inner, re.I | re.S,
+            args.text, re.I | re.S,
         )
         # the first argument must be the (timestamp-typed) time column:
         # increase.slt:93-108 expects planning errors for tag/field args
@@ -266,11 +323,17 @@ def rewrite_increase(sql: str) -> str:
                 "and argument types for increase — expected "
                 "(time, value ORDER BY time), aggregate_function/increase.rs"
             )
-        repl = timeseries.increase(om.group(1).strip(), om.group(2).strip())
-        sql = sql[: m.start()] + repl + sql[end:]
+        return timeseries.increase(om.group(1).strip(), om.group(2).strip())
+
+    return rewrite_calls(sql, _INCREASE_RE, increase)
 
 
 _LAG_LEAD_RE = re.compile(r"\b(lag|lead)\s*\(", re.I)
+_OVER_RE = re.compile(r"\bOVER\s*\(", re.I)
+# the literal offsets lag/lead coerce to 1: NULL, float, boolean, string
+_COERCIBLE_OFFSET = re.compile(
+    r"NULL|TRUE|FALSE|-?(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?|'[^']*'", re.I
+)
 
 
 def rewrite_lag_lead(sql: str) -> str:
@@ -280,41 +343,34 @@ def rewrite_lag_lead(sql: str) -> str:
     stays put so Spark still rejects it (lag.slt:235 expects an error);
     a bare ``OVER ()`` gets a constant ordering (DataFusion allows
     unordered lag, lag.slt:125)."""
-    pos = 0
-    while True:
-        m = _LAG_LEAD_RE.search(sql, pos)
-        if not m:
-            break
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
+
+    def offset_one(m: re.Match, args: CallArgs) -> str | None:
         # coerce ONLY the literal forms the corpus exercises (NULL, float,
         # boolean, string literals) — identifiers and expressions pass
         # through so Spark evaluates or rejects them (a column-ref offset
         # must not silently become 1)
-        _coercible = re.compile(
-            r"NULL|TRUE|FALSE|-?(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?|'[^']*'",
-            re.I,
-        )
         if (
             len(args) in (2, 3)
-            and not re.fullmatch(r"-?\d+", args[1].strip())
-            and _coercible.fullmatch(args[1].strip())
+            and not re.fullmatch(r"-?\d+", args[1])
+            and _COERCIBLE_OFFSET.fullmatch(args[1])
         ):
-            args[1] = "1"
-            repl = f"{m.group(1)}({', '.join(a.strip() for a in args)})"
-            sql = sql[: m.start()] + repl + sql[end:]
-            pos = m.start() + len(repl)
-        else:
-            pos = end
-    # DataFusion allows an empty OVER () for every window function
-    # (rank.slt:142, row_number.slt:63, nth_value.slt:105); Spark's
-    # rank-family demands an ORDER BY. A constant ordering keeps aggregate
-    # frames whole-partition (all rows are RANGE peers of each other).
-    return re.sub(r"(\bOVER\s*\(\s*)\)", r"\1ORDER BY 1)", sql, flags=re.I)
+            return f"{m.group(1)}({', '.join([args[0], '1', *args[2:]])})"
+        return None
+
+    def constant_order(m: re.Match, args: CallArgs) -> str | None:
+        # DataFusion allows an empty OVER () for every window function
+        # (rank.slt:142, row_number.slt:63, nth_value.slt:105); Spark's
+        # rank-family demands an ORDER BY. A constant ordering keeps
+        # aggregate frames whole-partition (all rows are RANGE peers of
+        # each other).
+        return None if args.text.strip() else f"{m.group(0)}{args.text}ORDER BY 1)"
+
+    sql = rewrite_calls(sql, _LAG_LEAD_RE, offset_one)
+    return rewrite_calls(sql, _OVER_RE, constant_order)
 
 
 def rewrite_exact_count(sql: str) -> str:
-    return _EXACT_COUNT_RE.sub("count(", sql)
+    return _rename(sql, _EXACT_COUNT_RE, "count")
 
 
 def rewrite_selector(sql: str) -> str:
@@ -322,16 +378,13 @@ def rewrite_selector(sql: str) -> str:
     LIMIT appended to the (single, un-suffixed) SELECT. Parity rules from
     the reference analyzer: exactly one selector per query, no nesting,
     k ∈ [1, 255]."""
-    matches = list(_TOPK_RE.finditer(sql))
-    if not matches:
+    calls = list(iter_calls(sql, _TOPK_RE))
+    if not calls:
         return sql
-    if len(matches) > 1:
+    if len(calls) > 1:
         raise ValueError("only one topk/bottom selector is allowed per query")
-    m = matches[0]
+    m, args, end = calls[0]
     fn = m.group(1).lower()
-    open_p = sql.index("(", m.start())
-    end = _find_call_end(sql, open_p)
-    args = _split_args(sql[open_p + 1 : end - 1])
     if len(args) != 2:
         raise ValueError(f"{fn} expects exactly 2 arguments")
     col, k_str = args
@@ -372,15 +425,8 @@ _SAMPLE_RE = re.compile(r"\bsample\s*\(", re.I)
 _ORDER_BY_TAIL = re.compile(r"\s+order\s+by\s+.+$", re.I | re.S)
 
 
-def _gauge_inner(arg: str) -> tuple[str, str] | None:
-    """If ``arg`` is exactly ``gauge_agg(t, v)``, return (t, v)."""
-    m = re.match(r"\s*gauge_agg\s*\(", arg, re.I)
-    if not m:
-        return None
-    end = _find_call_end(arg, arg.index("(", m.start()))
-    if arg[end:].strip():
-        return None
-    args = _split_args(arg[arg.index("(", m.start()) + 1 : end - 1])
+def _gauge_args(args: CallArgs) -> tuple[str, str] | None:
+    """(t, v) of a two-argument ``gauge_agg`` call."""
     if len(args) != 2:
         return None
     if not re.search(r"\btime\b", args[0], re.I):
@@ -393,15 +439,8 @@ def _gauge_inner(arg: str) -> tuple[str, str] | None:
     return args[0], _ORDER_BY_TAIL.sub("", args[1]).strip()
 
 
-def _state_inner(arg: str) -> tuple[bool, str, str] | None:
-    """If ``arg`` is ``[compact_]state_agg(t, s)``, return (compact, t, s)."""
-    m = re.match(r"\s*(compact_state_agg|state_agg)\s*\(", arg, re.I)
-    if not m:
-        return None
-    end = _find_call_end(arg, arg.index("(", m.end() - 1))
-    if arg[end:].strip():
-        return None
-    args = _split_args(arg[arg.index("(", m.end() - 1) + 1 : end - 1])
+def _state_args(m: re.Match, args: CallArgs) -> tuple[bool, str, str] | None:
+    """(compact, t, s) of a two-argument ``[compact_]state_agg`` call."""
     if len(args) != 2:
         return None
     return (
@@ -417,35 +456,18 @@ def rewrite_gauge(sql: str) -> str:
     (first/second/penultimate/last TSPoints + num_elements,
     gauge_agg.rs:22-67). Non-matching arities are left for Spark's
     unresolved-function error (parity with DataFusion's planner errors)."""
-    pos = 0
-    while True:
-        m = _GAUGE_ACC_RE.search(sql, pos)
-        if not m:
-            break
-        open_p = sql.index("(", m.end() - 1)
-        end = _find_call_end(sql, open_p)
-        args = _split_args(sql[open_p + 1 : end - 1])
-        inner = _gauge_inner(args[0]) if len(args) == 1 else None
-        if inner is None:
-            pos = end
-            continue
-        repl = gauge.gauge_accessor(m.group(1).lower(), *inner)
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
-    pos = 0
-    while True:
-        m = _GAUGE_AGG_RE.search(sql, pos)
-        if not m:
-            return sql
-        open_p = sql.index("(", m.end() - 1)
-        end = _find_call_end(sql, open_p)
-        inner = _gauge_inner(sql[m.start() : end])
-        if inner is None:
-            pos = end
-            continue
-        repl = gauge.gauge_agg(*inner)
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+
+    def accessor(m: re.Match, args: CallArgs) -> str | None:
+        call = _sole_call(args[0], _GAUGE_AGG_RE) if len(args) == 1 else None
+        inner = call and _gauge_args(call[1])
+        return inner and gauge.gauge_accessor(m.group(1).lower(), *inner)
+
+    def bare(m: re.Match, args: CallArgs) -> str | None:
+        inner = _gauge_args(args)
+        return inner and gauge.gauge_agg(*inner)
+
+    sql = rewrite_calls(sql, _GAUGE_ACC_RE, accessor)
+    return rewrite_calls(sql, _GAUGE_AGG_RE, bare)
 
 
 def rewrite_state(sql: str) -> str:
@@ -454,54 +476,40 @@ def rewrite_state(sql: str) -> str:
     → built-in aggregate expressions (state_agg accumulator semantics:
     periods are closed on the left, the final state is a zero-length period
     — state_at at/after the last point is NULL, state_at.slt)."""
-    pos = 0
-    while True:
-        m = _STATE_ACC_RE.search(sql, pos)
-        if not m:
-            break
-        fn = m.group(1).lower()
-        open_p = sql.index("(", m.end() - 1)
-        end = _find_call_end(sql, open_p)
-        args = _split_args(sql[open_p + 1 : end - 1])
-        inner = _state_inner(args[0]) if len(args) >= 2 else None
-        if inner is None:
-            pos = end
-            continue
+
+    def accessor(m: re.Match, args: CallArgs) -> str | None:
+        call = _sole_call(args[0], _STATE_AGG_RE) if len(args) >= 2 else None
+        inner = call and _state_args(*call)
+        if not inner:
+            return None
         compact, t, s = inner
-        if fn == "state_at":
+        if m.group(1).lower() == "state_at":
             if compact:
                 raise ValueError(
                     "state_at(state_agg, ts) doesn't support compact_agg"
                 )
             if len(args) != 2:
                 raise ValueError("state_at expects 2 arguments")
-            repl = state.state_at(t, s, args[1])
-        else:  # duration_in
-            if len(args) > 4:
-                raise ValueError("duration_in expects 2-4 arguments")
-            if compact and len(args) > 2:
-                raise ValueError(
-                    "duration_in(state_agg, state, start_time) doesn't "
-                    "support compact_agg"
-                )
-            repl = state.duration_in(t, s, *args[1:], compact=compact)
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
-    pos = 0
-    while True:
-        m = _STATE_AGG_RE.search(sql, pos)
-        if not m:
-            return sql
-        open_p = sql.index("(", m.end() - 1)
-        end = _find_call_end(sql, open_p)
-        inner = _state_inner(sql[m.start() : end])
-        if inner is None:
-            pos = end
-            continue
+            return state.state_at(t, s, args[1])
+        if len(args) > 4:
+            raise ValueError("duration_in expects 2-4 arguments")
+        if compact and len(args) > 2:
+            raise ValueError(
+                "duration_in(state_agg, state, start_time) doesn't "
+                "support compact_agg"
+            )
+        return state.duration_in(t, s, *args[1:], compact=compact)
+
+    sql = rewrite_calls(sql, _STATE_ACC_RE, accessor)
+
+    def bare(m: re.Match, args: CallArgs) -> str | None:
+        inner = _state_args(m, args)
+        if not inner:
+            return None
         compact, t, s = inner
-        repl = state.state_agg(t, s, compact)
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+        return state.state_agg(t, s, compact)
+
+    return rewrite_calls(sql, _STATE_AGG_RE, bare)
 
 
 def rewrite_sample(sql: str) -> str:
@@ -509,14 +517,8 @@ def rewrite_sample(sql: str) -> str:
     aggregate (aggregate_function/sample.rs: reservoir of n; ours orders by
     md5 so engine and oracle agree — documented divergence, SURVEY §2.4).
     n must lie in (1, 2000] (sample.slt's guard records)."""
-    pos = 0
-    while True:
-        m = _SAMPLE_RE.search(sql, pos)
-        if not m:
-            return sql
-        open_p = sql.index("(", m.end() - 1)
-        end = _find_call_end(sql, open_p)
-        args = _split_args(sql[open_p + 1 : end - 1])
+
+    def sample(m: re.Match, args: CallArgs) -> str:
         if len(args) != 2:
             raise ValueError("sample expects exactly 2 arguments")
         x, n_str = args
@@ -526,20 +528,17 @@ def rewrite_sample(sql: str) -> str:
             raise ValueError("sample n must be an integer literal") from exc
         if not 1 < n <= 2000:
             raise ValueError(f"sample n must be in (1, 2000], got {n}")
-        repl = (
+        return (
             f"slice(transform(array_sort(transform(collect_list({x}), "
             f"_x -> named_struct('k', md5(cast(_x as string)), 'v', _x))), "
             f"_p -> _p.v), 1, {n})"
         )
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+
+    return rewrite_calls(sql, _SAMPLE_RE, sample)
 
 
 _TIME_INT_CMP = re.compile(
     r"\b(time)\s*(<=|>=|<>|<|>|=|!=)\s*(-?\d+)(?![\d.\w])", re.I
-)
-_TIME_INT_BETWEEN = re.compile(
-    r"\b(time)\s+(NOT\s+)?BETWEEN\s+(-?\d+)\s+AND\s+(-?\d+)(?![\d.\w])", re.I
 )
 # mixed bounds: one side an int literal, the other a string literal —
 # DataFusion coerces each independently (type_conversion/timestamp.slt:461)
@@ -591,6 +590,7 @@ def rewrite_time_int_comparison(sql: str) -> str:
 _CAST_INT_TS = re.compile(
     r"\bCAST\s*\(\s*(-?\d+)\s+AS\s+TIMESTAMP\s*\)", re.I
 )
+_CAST_RE = re.compile(r"\bCAST\s*\(", re.I)
 
 
 def rewrite_cast_int_timestamp(sql: str) -> str:
@@ -599,9 +599,12 @@ def rewrite_cast_int_timestamp(sql: str) -> str:
     Truncated to Spark's µs precision — the documented ns→µs divergence
     (data_type/type_conversion/between.slt:18 expects .263356943, we hold
     .263356)."""
-    return _CAST_INT_TS.sub(
-        lambda m: f"timestamp_micros({int(m.group(1)) // 1000})", sql
-    )
+
+    def ns_cast(m: re.Match, args: CallArgs) -> str | None:
+        im = re.fullmatch(r"(-?\d+)\s+AS\s+TIMESTAMP", args.text.strip(), re.I)
+        return im and f"timestamp_micros({int(im.group(1)) // 1000})"
+
+    return rewrite_calls(sql, _CAST_RE, ns_cast)
 
 
 _VALUES_COLN = re.compile(r"\bcolumn(\d+)\b")
@@ -709,15 +712,11 @@ def rewrite_date_bin(sql: str) -> str:
     tsbench/avg_daily_driving_duration.slt:26) → epoch-µs floor arithmetic:
     ts - pmod(ts - origin, stride). pmod keeps the floor correct for
     pre-origin timestamps."""
-    while True:
-        m = _DATE_BIN_RE.search(sql)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
+
+    def date_bin(m: re.Match, args: CallArgs) -> str:
         if not 2 <= len(args) <= 3:
             raise ValueError("date_bin expects (stride, source[, origin])")
-        im = _INTERVAL_RE.match(args[0].strip())
+        im = _INTERVAL_RE.match(args[0])
         if not im:
             raise ValueError("date_bin stride must be an interval literal")
         stride_us = int(timeseries._parse_duration(im.group(1)).total_seconds() * 1_000_000)
@@ -725,15 +724,17 @@ def rewrite_date_bin(sql: str) -> str:
         origin_us = (
             f"unix_micros(CAST({args[2]} AS TIMESTAMP))" if len(args) == 3 else "0"
         )
-        repl = (
+        return (
             f"timestamp_micros(unix_micros({ts}) - "
             f"pmod(unix_micros({ts}) - {origin_us}, {stride_us}))"
         )
-        sql = sql[: m.start()] + repl + sql[end:]
+
+    return rewrite_calls(sql, _DATE_BIN_RE, date_bin)
 
 
 _FROM_UNIXTIME_RE = re.compile(r"\bfrom_unixtime\s*\(", re.I)
-_CURRENT_TIME_RE = re.compile(r"\bcurrent_time\s*\(\s*\d*\s*\)", re.I)
+_LENGTH_RE = re.compile(r"\blength\s*\(", re.I)
+_CURRENT_TIME_RE = re.compile(r"\bcurrent_time\s*\(", re.I)
 
 
 def rewrite_time_fn_parity(sql: str) -> str:
@@ -745,180 +746,187 @@ def rewrite_time_fn_parity(sql: str) -> str:
       Time has no length), while ``current_time() < '23:59:59'`` works
       (string-comparable); Spark 4's TIME type does neither, so
       current_time() becomes a formatted string after the length guard."""
-    m = _FROM_UNIXTIME_RE.search(sql)
-    if m:
-        end = _find_call_end(sql, m.end() - 1)
-        arg = sql[m.end() : end - 1].strip()
-        if _FLOAT_LIT_RE.fullmatch(arg):
+    for _, args, _ in iter_calls(sql, _FROM_UNIXTIME_RE):
+        if _FLOAT_LIT_RE.fullmatch(args.text.strip()):
             raise ValueError(
                 "Error during planning: No function matches "
-                f"'from_unixtime(Float64)' for literal {arg}"
+                f"'from_unixtime(Float64)' for literal {args.text.strip()}"
             )
-    if re.search(r"\blength\s*\(\s*current_time\s*\(", sql, re.I):
-        raise ValueError(
-            "Error during planning: No function matches the given name and "
-            "argument types 'length(Time64(Nanosecond))'"
-        )
-    if re.search(r"current_time\s*\(\s*\d*\s*\)\s*[+-]\s*interval\b", sql, re.I):
-        # current_time.slt:24 — Time ± Interval is a planning error
-        raise ValueError(
-            "Error during planning: Time64(Nanosecond) + Interval is not supported"
-        )
-    return _CURRENT_TIME_RE.sub(
-        "date_format(current_timestamp(), 'HH:mm:ss.SSSSSS')", sql
-    )
+    for _, args, _ in iter_calls(sql, _LENGTH_RE):
+        if _CURRENT_TIME_RE.match(args.text.lstrip()):
+            raise ValueError(
+                "Error during planning: No function matches the given name and "
+                "argument types 'length(Time64(Nanosecond))'"
+            )
+    for _, args, end in iter_calls(sql, _CURRENT_TIME_RE):
+        if re.fullmatch(r"\s*\d*\s*", args.text) and re.match(
+            r"\s*[+-]\s*interval\b", sql[end:], re.I
+        ):
+            # current_time.slt:24 — Time ± Interval is a planning error
+            raise ValueError(
+                "Error during planning: Time64(Nanosecond) + Interval is not supported"
+            )
+
+    def time_string(m: re.Match, args: CallArgs) -> str | None:
+        if re.fullmatch(r"\s*\d*\s*", args.text):
+            return "date_format(current_timestamp(), 'HH:mm:ss.SSSSSS')"
+        return None
+
+    return rewrite_calls(sql, _CURRENT_TIME_RE, time_string)
+
+
+_STARTS_WITH_RE = _call_re("starts_with")
+_COVAR_RE = _call_re("covar")
+_VAR_RE = _call_re("var")
+_MODE_RE = _call_re("mode")
+_STRPOS_RE = _call_re("strpos")
+_TRUNC_RE = _call_re("trunc")
+_TRIM_RE = _call_re("trim")
+_GCD_LCM_RE = _call_re("gcd", "lcm")
+_LEN_RE = _call_re("len")
+_REPLACE_RE = _call_re("replace")
+_CHR_RE = _call_re("chr")
+_TO_HEX_RE = _call_re("to_hex")
+_CONCAT_ANY_RE = _call_re("concat", "concat_ws")
+_REPEAT_WRAP_RE = _call_re("repeat", "left", "right")
+_NONSTR_LIT = r"-?\d+(\.\d+)?|TRUE|FALSE|(DATE|TIMESTAMP)\s+'[^']*'"
+# Utf8-subject functions: (count argument position, negative count allowed)
+_STR_SUBJECT_FNS = {
+    "substr": (2, False), "substring": (2, False), "left": (1, True),
+    "right": (1, True), "split_part": (2, False), "length": (None, True),
+    "char_length": (None, True), "character_length": (None, True),
+    "translate": (None, True), "lpad": (1, True), "rpad": (1, True),
+    "replace": (None, True),
+}
+_REPEAT_CAP = 4_194_304
 
 
 def rewrite_fn_aliases(sql: str) -> str:
     """DataFusion fn names → Spark equivalents (same semantics):
     starts_with → startswith (string_func/starts_with.slt),
     covar → covar_samp, var → var_samp (statistical_agg/*.slt),
+    1-arg mode → mode(x, true), the lowest value on a tie,
     strpos(str, sub) → locate(sub, str) (string_func/strpos.slt),
     1-arg numeric trunc → toward-zero floor/ceil (math_function/trunc.slt;
     Spark's trunc is the 2-arg date function)."""
-    sql = re.sub(r"\bstarts_with\s*\(", "startswith(", sql, flags=re.I)
-    sql = re.sub(r"\bcovar\s*\(", "covar_samp(", sql, flags=re.I)
-    sql = re.sub(r"\bvar\s*\(", "var_samp(", sql, flags=re.I)
-    while True:
-        m = re.search(r"\bstrpos\s*\(", sql, flags=re.I)
-        if not m:
-            break
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
-        if len(args) != 2 or re.fullmatch(
-            r"-?\d+(\.\d+)?", args[0].strip()
-        ):
+    sql = _rename(sql, _STARTS_WITH_RE, "startswith")
+    sql = _rename(sql, _COVAR_RE, "covar_samp")
+    sql = _rename(sql, _VAR_RE, "var_samp")
+    # Spark's 1-arg mode picks any of the tied values
+    sql = rewrite_calls(
+        sql, _MODE_RE,
+        lambda m, args: f"mode({args[0]}, true)" if len(args) == 1 else None,
+    )
+
+    def strpos(m: re.Match, args: CallArgs) -> str:
+        if len(args) != 2 or re.fullmatch(r"-?\d+(\.\d+)?", args[0]):
             # strpos.slt:64 — a numeric haystack is a signature error
             raise ValueError(
                 "Error during planning: strpos expects (string, substring)"
             )
-        repl = f"locate({args[1].strip()}, {args[0].strip()})"
-        sql = sql[: m.start()] + repl + sql[end:]
-    while True:
-        m = re.search(r"\btrunc\s*\(", sql, flags=re.I)
-        if not m:
-            break
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
+        return f"locate({args[1]}, {args[0]})"
+
+    def trunc(m: re.Match, args: CallArgs) -> str:
         if len(args) != 1:
             # DataFusion-27 trunc is unary (trunc.slt:25 expects an error
             # for the two-argument form)
             raise ValueError("Error during planning: trunc expects 1 argument")
-        x = args[0].strip()
-        repl = f"(CASE WHEN ({x}) >= 0 THEN floor({x}) ELSE ceil({x}) END)"
-        sql = sql[: m.start()] + repl + sql[end:]
+        x = args[0]
+        return f"(CASE WHEN ({x}) >= 0 THEN floor({x}) ELSE ceil({x}) END)"
+
+    sql = rewrite_calls(sql, _STRPOS_RE, strpos)
+    sql = rewrite_calls(sql, _TRUNC_RE, trunc)
     # DataFusion's trim is unary (ltrim/rtrim DO take a 2nd chars arg —
     # ltrim.slt:88) and the SQL-standard TRIM(BOTH/LEADING/TRAILING …
     # FROM …) form is unsupported (string_func/trim.slt:7,16)
-    tm = re.search(r"\btrim\s*\(", sql, flags=re.I)
-    if tm:
-        end = _find_call_end(sql, tm.end() - 1)
-        inner = sql[tm.end() : end - 1]
-        if re.match(r"\s*(BOTH|LEADING|TRAILING)\s+FROM\b", inner, re.I):
+    for _, args, _ in iter_calls(sql, _TRIM_RE):
+        if re.match(r"\s*(BOTH|LEADING|TRAILING)\s+FROM\b", args.text, re.I):
             # chars-less spec form errors (trim.slt:16); WITH chars
             # (TRIM(BOTH ' ' FROM x), trim.slt:21) is fine in both engines
             raise ValueError("sql parser error: Expected an expression, found: FROM")
         if not re.match(
-            r"\s*(BOTH|LEADING|TRAILING)\b", inner, re.I
-        ) and len(_split_args(inner)) > 1:
+            r"\s*(BOTH|LEADING|TRAILING)\b", args.text, re.I
+        ) and len(args) > 1:
             raise ValueError("Error during planning: trim expects 1 argument")
     # gcd/lcm are integer-only (gcd.slt:17 gcd(0.5,3); lcm.slt:19 lcm(0,'a'))
-    gm = re.search(r"\b(?:gcd|lcm)\s*\(", sql, flags=re.I)
-    if gm:
-        end = _find_call_end(sql, gm.end() - 1)
-        for a in _split_args(sql[gm.end() : end - 1]):
-            a = a.strip()
-            if re.fullmatch(r"-?\d+\.\d*", a) or a.startswith("'"):
-                raise ValueError(
-                    "Error during planning: gcd/lcm expect integer arguments"
-                )
+    for _, args, _ in iter_calls(sql, _GCD_LCM_RE):
+        if any(re.fullmatch(r"-?\d+\.\d*", a) or a.startswith("'") for a in args):
+            raise ValueError(
+                "Error during planning: gcd/lcm expect integer arguments"
+            )
     # Utf8-subject functions with a non-string LITERAL subject are planning
     # errors in DataFusion (substr.slt:92-116, left.slt:145, right.slt:49,
     # split_part.slt:116, length…slt:58); non-integer or negative count
     # args are errors too (left.slt:123, split_part.slt:90,126,
-    # substr.slt:72-75)
-    _NONSTR_LIT = r"-?\d+(\.\d+)?|TRUE|FALSE|(DATE|TIMESTAMP)\s+'[^']*'"
-    # count-arg rule: left/right take negative counts (left.slt:25 drops
-    # from the right) but not fractions; split_part/substr reject both
-    for fn, count_pos, allow_negative in (
-        ("substr", 2, False), ("substring", 2, False), ("left", 1, True),
-        ("right", 1, True), ("split_part", 2, False), ("length", None, True),
-        ("char_length", None, True), ("character_length", None, True),
-        ("translate", None, True), ("lpad", 1, True), ("rpad", 1, True),
-        ("replace", None, True),
-    ):
-        fmm = re.search(rf"\b{fn}\s*\(", sql, flags=re.I)
-        if not fmm:
-            continue
-        end = _find_call_end(sql, fmm.end() - 1)
-        fargs = _split_args(sql[fmm.end() : end - 1])
-        if fargs and re.fullmatch(_NONSTR_LIT, fargs[0].strip(), re.I):
-            raise ValueError(
-                f"Error during planning: {fn} expects a string subject"
-            )
-        if count_pos is not None and len(fargs) > count_pos:
-            carg = fargs[count_pos].strip()
-            if re.fullmatch(r"-?\d+\.\d+", carg) or (
-                not allow_negative and re.fullmatch(r"-\d+", carg)
-            ):
+    # substr.slt:72-75). Count-arg rule: left/right take negative counts
+    # (left.slt:25 drops from the right) but not fractions; split_part/substr
+    # reject both
+    for fn, (count_pos, allow_negative) in _STR_SUBJECT_FNS.items():
+        for _, fargs, _ in iter_calls(sql, _call_re(fn)):
+            if fargs and re.fullmatch(_NONSTR_LIT, fargs[0], re.I):
                 raise ValueError(
-                    f"Error during planning: {fn} count must be an integer"
+                    f"Error during planning: {fn} expects a string subject"
                 )
+            if count_pos is not None and len(fargs) > count_pos:
+                carg = fargs[count_pos]
+                if re.fullmatch(r"-?\d+\.\d+", carg) or (
+                    not allow_negative and re.fullmatch(r"-\d+", carg)
+                ):
+                    raise ValueError(
+                        f"Error during planning: {fn} count must be an integer"
+                    )
     # DataFusion has no len() alias (length…slt:4) and concat needs ≥1 arg,
     # concat_ws a separator plus ≥1 value (concat.slt:4, concat_ws.slt:51)
-    if re.search(r"\blen\s*\(", sql, re.I):
+    if next(iter_calls(sql, _LEN_RE), None):
         raise ValueError("Error during planning: no function named len")
     # replace is strictly ternary (replace.slt:192) and chr rejects the
     # NUL code point (chr.slt:14); to_hex is Spark's hex
-    repm = re.search(r"\breplace\s*\(", sql, re.I)
-    if repm:
-        end = _find_call_end(sql, repm.end() - 1)
-        if len(_split_args(sql[repm.end() : end - 1])) != 3:
+    for _, args, _ in iter_calls(sql, _REPLACE_RE):
+        if len(args) != 3:
             raise ValueError("Error during planning: replace expects 3 arguments")
-    if re.search(r"\bchr\s*\(\s*0\s*\)", sql, re.I):
-        raise ValueError("Execution error: requires an ASCII code > 0")
-    if re.search(r"\bto_hex\s*\(\s*NULL\s*\)", sql, re.I):
-        # to_hex is Int64-only in DataFusion (to_hex.slt:54)
-        raise ValueError("Error during planning: to_hex expects an integer")
+    for _, args, _ in iter_calls(sql, _CHR_RE):
+        if args.text.strip() == "0":
+            raise ValueError("Execution error: requires an ASCII code > 0")
+    for _, args, _ in iter_calls(sql, _TO_HEX_RE):
+        if args.text.strip().upper() == "NULL":
+            # to_hex is Int64-only in DataFusion (to_hex.slt:54)
+            raise ValueError("Error during planning: to_hex expects an integer")
     # DataFusion's to_hex emits lowercase, Spark's hex uppercase — wrap in
     # lower() for byte-for-byte output parity (to_hex.slt)
-    while True:
-        thm = re.search(r"\bto_hex\s*\(", sql, flags=re.I)
-        if not thm:
-            break
-        end = _find_call_end(sql, thm.end() - 1)
-        inner = sql[thm.end() : end - 1]
-        sql = sql[: thm.start()] + f"lower(hex({inner}))" + sql[end:]
-    cm = re.search(r"\bconcat(_ws)?\s*\(", sql, flags=re.I)
-    if cm:
-        end = _find_call_end(sql, cm.end() - 1)
-        n_args = len(_split_args(sql[cm.end() : end - 1]))
-        if n_args < (2 if cm.group(1) else 1):
+    sql = rewrite_calls(sql, _TO_HEX_RE, lambda m, args: f"lower(hex({args.text}))")
+    for m, args, _ in iter_calls(sql, _CONCAT_ANY_RE):
+        if len(args) < (2 if m.group(1).lower() == "concat_ws" else 1):
             raise ValueError("Error during planning: too few concat arguments")
     # reference transport caps one flight message at 4 MiB — a literal
     # repeat() whose product exceeds it can only ever error
-    # (concat.slt:32-47, left.slt:82 "message length too large")
-    rm = re.search(r"\brepeat\s*\(\s*'([^']*)'\s*,\s*(\d+)\s*\)", sql, re.I)
-    if rm and len(rm.group(1)) * int(rm.group(2)) > 4_194_304:
-        # wrapped in a small-count left/right the output shrinks below the
-        # cap again (left.slt:135 LEFT(REPEAT('abc', 10000000), 10) is ok)
-        wrap = re.match(
-            r".*\b(?:left|right)\s*\(\s*$", sql[: rm.start()], re.I | re.S
-        )
-        small_trunc = False
-        if wrap:
-            outer_open = sql[: rm.start()].rindex("(")
-            outer_end = _find_call_end(sql, outer_open)
-            outer_args = _split_args(sql[outer_open + 1 : outer_end - 1])
-            if len(outer_args) == 2:
-                ca = outer_args[1].strip()
-                if re.fullmatch(r"-?\d+", ca) and abs(int(ca)) <= 4_194_304:
-                    small_trunc = True
-        if not small_trunc:
+    # (concat.slt:32-47, left.slt:82 "message length too large"), unless a
+    # small-count left/right shrinks it below the cap again (left.slt:135
+    # LEFT(REPEAT('abc', 10000000), 10) is ok)
+    truncated: set[int] = set()
+    for m, args, _ in iter_calls(sql, _REPEAT_WRAP_RE):
+        if m.group(1).lower() != "repeat":
+            if len(args) == 2 and re.fullmatch(r"-?\d+", args[1]) and (
+                abs(int(args[1])) <= _REPEAT_CAP
+            ):
+                truncated.add(m.end() + len(args.text) - len(args.text.lstrip()))
+            continue
+        lit = re.fullmatch(r"'([^']*)'", args[0]) if len(args) == 2 else None
+        if (
+            lit and re.fullmatch(r"\d+", args[1])
+            and len(lit.group(1)) * int(args[1]) > _REPEAT_CAP
+            and m.start() not in truncated
+        ):
             raise ValueError(
                 "Error, message length too large: the limit is: 4194304 bytes"
             )
     return sql
+
+
+_APPROX_PERCENTILE_RE = _call_re(
+    "approx_percentile_cont_with_weight", "approx_percentile_cont",
+    "approx_percentile",
+)
+_APPROX_PERCENTILE_CONT_RE = _call_re("approx_percentile_cont")
 
 
 def rewrite_approx_percentile(sql: str) -> str:
@@ -926,42 +934,24 @@ def rewrite_approx_percentile(sql: str) -> str:
     (same t-digest family; approx_percentile_cont_with_weight.slt:94 uses
     the 3-arg form). A literal percentile outside [0,1] is a planning error
     for both the plain and weighted variants (…_with_weight.slt:62-65)."""
-    for fn_pat, p_idx in (
-        (r"\bapprox_percentile_cont_with_weight\s*\(", 2),
-        (r"\bapprox_percentile_cont\s*\(", 1),
-        (r"\bapprox_percentile\s*\(", 1),
-    ):
-        m = re.search(fn_pat, sql, re.I)
-        if not m:
-            continue
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
-        if len(args) > p_idx:
-            p = args[p_idx].strip()
-            if re.fullmatch(r"-?\d+(\.\d+)?", p) and not 0.0 <= float(p) <= 1.0:
-                raise ValueError(
-                    "Error during planning: Percentile value must be "
-                    f"between 0.0 and 1.0 inclusive, {p} is invalid"
-                )
-    return re.sub(
-        r"\bapprox_percentile_cont\s*\(", "approx_percentile(", sql, flags=re.I
-    )
+    for m, args, _ in iter_calls(sql, _APPROX_PERCENTILE_RE):
+        p_idx = 2 if m.group(1).lower().endswith("_with_weight") else 1
+        p = args[p_idx] if len(args) > p_idx else ""
+        if re.fullmatch(r"-?\d+(\.\d+)?", p) and not 0.0 <= float(p) <= 1.0:
+            raise ValueError(
+                "Error during planning: Percentile value must be "
+                f"between 0.0 and 1.0 inclusive, {p} is invalid"
+            )
+    return _rename(sql, _APPROX_PERCENTILE_CONT_RE, "approx_percentile")
 
 
 def rewrite_approx_median(sql: str) -> str:
     """approx_median(x) → approx_percentile(x, 0.5)
     (approx_agg/approx_median.slt; both are t-digest-family sketches)."""
-    while True:
-        m = _APPROX_MEDIAN_RE.search(sql)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
-        sql = (
-            sql[: m.start()]
-            + f"approx_percentile({inner}, 0.5)"
-            + sql[end:]
-        )
+    return rewrite_calls(
+        sql, _APPROX_MEDIAN_RE,
+        lambda m, args: f"approx_percentile({args.text}, 0.5)",
+    )
 
 
 _BARE_TO_TS_RE = re.compile(r"\bto_timestamp\s*\(", re.I)
@@ -975,37 +965,31 @@ def rewrite_bare_to_timestamp(sql: str) -> str:
     for 1672538600); Spark's counts seconds. Floats are a parse error
     (to_timestamp.slt:36). Integer literals are rewritten at µs precision;
     non-literal args get a try-string/try-int fallback chain."""
-    pos = 0
-    while True:
-        m = _BARE_TO_TS_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        arg = sql[m.end() : end - 1].strip()
+
+    def to_timestamp(m: re.Match, args: CallArgs) -> str | None:
+        arg = args.text.strip()
         if _INT_LIT_RE.fullmatch(arg):
-            repl = f"timestamp_micros({int(arg) // 1000})"
-        elif _FLOAT_LIT_RE.fullmatch(arg):
+            return f"timestamp_micros({int(arg) // 1000})"
+        if _FLOAT_LIT_RE.fullmatch(arg):
             raise ValueError(
                 f"Arrow: Parser error: Error parsing timestamp from '{arg}': "
                 "error parsing date"
             )
-        elif arg.startswith("'"):
-            pos = end
-            continue  # string literal: Spark's parser already matches
-        else:
-            # unparseable non-null input is a RUNTIME parse error in the
-            # reference (to_timestamp.slt:47 'invalid-date' string row), not
-            # a NULL — the raise_error arm fires only when both parse paths
-            # miss (coalesce evaluates lazily)
-            repl = (
-                f"coalesce(try_to_timestamp(cast(({arg}) as string)), "
-                f"timestamp_micros(try_cast(({arg}) as bigint) div 1000), "
-                f"CASE WHEN ({arg}) IS NOT NULL THEN raise_error(concat("
-                f"'Arrow: Parser error: Error parsing timestamp from ', "
-                f"cast(({arg}) as string), ': error parsing date')) END)"
-            )
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+        if arg.startswith("'"):
+            return None  # string literal: Spark's parser already matches
+        # unparseable non-null input is a RUNTIME parse error in the
+        # reference (to_timestamp.slt:47 'invalid-date' string row), not
+        # a NULL — the raise_error arm fires only when both parse paths
+        # miss (coalesce evaluates lazily)
+        return (
+            f"coalesce(try_to_timestamp(cast(({arg}) as string)), "
+            f"timestamp_micros(try_cast(({arg}) as bigint) div 1000), "
+            f"CASE WHEN ({arg}) IS NOT NULL THEN raise_error(concat("
+            f"'Arrow: Parser error: Error parsing timestamp from ', "
+            f"cast(({arg}) as string), ': error parsing date')) END)"
+        )
+
+    return rewrite_calls(sql, _BARE_TO_TS_RE, to_timestamp)
 
 
 def rewrite_to_timestamp_unit(sql: str) -> str:
@@ -1013,13 +997,9 @@ def rewrite_to_timestamp_unit(sql: str) -> str:
     strings parse as timestamps, integers count epoch units; the result
     truncates to the unit — all expressible with Spark's timestamp_<unit>
     + unix_<unit> builtins (stays in whole-stage codegen)."""
-    while True:
-        m = _TO_TS_UNIT_RE.search(sql)
-        if not m:
-            return sql
-        unit = m.group(1).lower()
-        end = _find_call_end(sql, m.end() - 1)
-        x = sql[m.end() : end - 1]
+
+    def unit_timestamp(m: re.Match, args: CallArgs) -> str:
+        unit, x = m.group(1).lower(), args.text
         if _FLOAT_LIT_RE.fullmatch(x.strip()):
             # to_timestamp_seconds.slt:60 — float input is a planning error
             raise ValueError(
@@ -1034,39 +1014,31 @@ def rewrite_to_timestamp_unit(sql: str) -> str:
             f"cast(({x}) as string), ': error parsing date')) END)"
         )
         if unit == "micros":
-            repl = parsed  # TimestampType is already µs-precision
-        else:
-            repl = f"timestamp_{unit}(unix_{unit}({parsed}))"
-        sql = sql[: m.start()] + repl + sql[end:]
+            return parsed  # TimestampType is already µs-precision
+        return f"timestamp_{unit}(unix_{unit}({parsed}))"
+
+    return rewrite_calls(sql, _TO_TS_UNIT_RE, unit_timestamp)
 
 
 def rewrite_array_agg_order(sql: str) -> str:
     """array_agg(expr ORDER BY key [ASC|DESC]) — Spark's array_agg takes no
     ORDER BY; rewrite to the struct-sort idiom (sort by key, project the
     value), which keeps the aggregation map-side combinable."""
-    pos = 0
-    while True:
-        m = _ARRAY_AGG_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1]
+
+    def sorted_agg(m: re.Match, args: CallArgs) -> str | None:
         om = re.match(
             r"(.+?)\s+ORDER\s+BY\s+(.+?)\s*(ASC|DESC)?\s*$",
-            inner, re.I | re.S,
+            args.text, re.I | re.S,
         )
         if not om:
-            pos = m.end()
-            continue
+            return None
         expr, key, direction = om.group(1), om.group(2), (om.group(3) or "ASC")
         agg = f"array_sort(array_agg(struct({key} AS _k, {expr} AS _v)))"
         if direction.upper() == "DESC":
             agg = f"reverse({agg})"
-        sql = (
-            sql[: m.start()]
-            + f"transform({agg}, s -> s._v)"
-            + sql[end:]
-        )
+        return f"transform({agg}, s -> s._v)"
+
+    return rewrite_calls(sql, _ARRAY_AGG_RE, sorted_agg)
 
 
 _LIKE_LIT = re.compile(r"((?:NOT\s+)?I?LIKE\s*\(?\s*)('(?:[^']|'')*')", re.I)
@@ -1126,6 +1098,13 @@ def rewrite_overflow_decimal_literals(sql: str) -> str:
 
 
 _NTH_VALUE_RE = re.compile(r"\bnth_value\s*\(", re.I)
+_ARROW_TYPEOF_RE = _call_re("arrow_typeof")
+_CURRENT_DATE_RE = _call_re("current_date")
+_RANDOM_RE = _call_re("random")
+_MAP_RE = _call_re("MAP")
+_RANK_FAMILY_RE = _call_re(
+    "rank", "dense_rank", "percent_rank", "cume_dist", "row_number"
+)
 
 
 def rewrite_misc_parity(sql: str) -> str:
@@ -1140,49 +1119,36 @@ def rewrite_misc_parity(sql: str) -> str:
     sql = re.sub(
         r"\bARRAY\s*\[([^\]]*)\]", lambda m: f"array({m.group(1)})", sql, flags=re.I
     )
-    sql = re.sub(r"\barrow_typeof\s*\(", "typeof(", sql, flags=re.I)
-    if re.search(r"current_date\s*\(\s*\)\s*[+-]\s*\d", sql, re.I):
-        raise ValueError("Error during planning: Date32 + Int64 is not supported")
-    rm = re.search(r"\brandom\s*\(", sql, re.I)
-    if rm:
-        end = _find_call_end(sql, rm.end() - 1)
-        if sql[rm.end() : end - 1].strip():
+    sql = _rename(sql, _ARROW_TYPEOF_RE, "typeof")
+    for _, args, end in iter_calls(sql, _CURRENT_DATE_RE):
+        if not args.text.strip() and re.match(r"\s*[+-]\s*\d", sql[end:]):
+            raise ValueError("Error during planning: Date32 + Int64 is not supported")
+    for _, args, _ in iter_calls(sql, _RANDOM_RE):
+        if args:
             raise ValueError("Error during planning: random takes no arguments")
     # DataFusion has no MAP constructor (nth_value.slt:232,
     # first_value.slt:240 expect planning errors)
-    if re.search(r"\bMAP\s*\(", sql, re.I):
+    if next(iter_calls(sql, _MAP_RE), None):
         raise ValueError("Error during planning: no function named map")
     # rank-family window functions are nullary (dense_rank.slt:173)
-    km = re.search(
-        r"\b(rank|dense_rank|percent_rank|cume_dist|row_number)\s*\(", sql, re.I
-    )
-    if km:
-        end = _find_call_end(sql, km.end() - 1)
-        if sql[km.end() : end - 1].strip():
+    for m, args, _ in iter_calls(sql, _RANK_FAMILY_RE):
+        if args:
             raise ValueError(
-                f"Error during planning: {km.group(1)} takes no arguments"
+                f"Error during planning: {m.group(1)} takes no arguments"
             )
-    pos = 0
-    while True:
-        m = _NTH_VALUE_RE.search(sql, pos)
-        if not m:
-            break
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
-        if len(args) == 2:
-            off = args[1].strip()
-            if re.fullmatch(r"-?\d+\.\d+", off):
-                raise ValueError(
-                    "Error during planning: nth_value offset must be an integer"
-                )
-            if re.fullmatch(r"-\d+", off):
-                args[1] = "1"
-                repl = f"nth_value({', '.join(a.strip() for a in args)})"
-                sql = sql[: m.start()] + repl + sql[end:]
-                pos = m.start() + len(repl)
-                continue
-        pos = end
-    return sql
+
+    def nth_value(m: re.Match, args: CallArgs) -> str | None:
+        if len(args) != 2:
+            return None
+        if re.fullmatch(r"-?\d+\.\d+", args[1]):
+            raise ValueError(
+                "Error during planning: nth_value offset must be an integer"
+            )
+        if re.fullmatch(r"-\d+", args[1]):
+            return f"nth_value({args[0]}, 1)"
+        return None
+
+    return rewrite_calls(sql, _NTH_VALUE_RE, nth_value)
 
 
 _STR_EDGE_RE = re.compile(
@@ -1200,20 +1166,14 @@ def rewrite_string_fn_edge_cases(sql: str) -> str:
       between every character (replace.slt:92);
     - left/right with a negative literal count drop from the other end
       (left.slt:25 LEFT('Hello', -1) → 'Hell'; Spark returns '')."""
-    pos = 0
-    while True:
-        m = _STR_EDGE_RE.search(sql, pos)
-        if not m:
-            return sql
+
+    def edge_case(m: re.Match, args: CallArgs) -> str | None:
         fn = m.group(1).lower()
-        end = _find_call_end(sql, m.end() - 1)
-        args = [a.strip() for a in _split_args(sql[m.end() : end - 1])]
-        repl = None
         if fn in ("ltrim", "rtrim") and len(args) == 2:
-            repl = f"{fn}({args[1]}, {args[0]})"
-        elif fn == "split_part" and len(args) == 3 and args[1] == "''":
-            repl = f"(CASE WHEN ({args[0]}) IS NULL THEN CAST(NULL AS STRING) ELSE '' END)"
-        elif fn == "replace" and len(args) == 3 and args[1] == "''":
+            return f"{fn}({args[1]}, {args[0]})"
+        if fn == "split_part" and len(args) == 3 and args[1] == "''":
+            return f"(CASE WHEN ({args[0]}) IS NULL THEN CAST(NULL AS STRING) ELSE '' END)"
+        if fn == "replace" and len(args) == 3 and args[1] == "''":
             s, r = args[0], args[2]
             # NULL guard: the inner concat is later converted to
             # NULL-skipping concat_ws('') by rewrite_concat_null_skip,
@@ -1223,40 +1183,30 @@ def rewrite_string_fn_edge_cases(sql: str) -> str:
                 f"filter(split({s}, ''), _c -> _c <> ''), "
                 f"_c -> concat(_c, {r})), ''))"
             )
-            repl = (
+            return (
                 f"(CASE WHEN ({s}) IS NULL OR ({r}) IS NULL "
                 f"THEN CAST(NULL AS STRING) ELSE {body} END)"
             )
-        elif (
-            fn in ("left", "right")
-            and len(args) == 2
-            and re.fullmatch(r"-\d+", args[1])
-        ):
+        if fn not in ("left", "right") or len(args) != 2:
+            return None
+        if re.fullmatch(r"-\d+", args[1]):
             # clamp to i32 so the substr arithmetic stays INT-safe; any
             # clamped drop-count already exceeds every string length
             n = min(-int(args[1]), 2147483646)
             if fn == "left":
-                repl = (
+                return (
                     f"substr({args[0]}, 1, "
                     f"greatest(char_length({args[0]}) - {n}, 0))"
                 )
-            else:
-                repl = f"substr({args[0]}, {n} + 1)"
-        elif (
-            fn in ("left", "right")
-            and len(args) == 2
-            and re.fullmatch(r"\d+", args[1])
-            and int(args[1]) > 2147483647
-        ):
+            return f"substr({args[0]}, {n} + 1)"
+        if re.fullmatch(r"\d+", args[1]) and int(args[1]) > 2147483647:
             # DataFusion's count arg is Int64; a count beyond i32 (and any
             # string length) means the whole string — Spark's INT cast
             # would overflow
-            repl = f"{fn}({args[0]}, 2147483647)"
-        if repl is None:
-            pos = end
-            continue
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+            return f"{fn}({args[0]}, 2147483647)"
+        return None
+
+    return rewrite_calls(sql, _STR_EDGE_RE, edge_case)
 
 
 _FLOAT_MATH_RE = re.compile(r"\b(signum|ln|log10|log2)\s*\(", re.I)
@@ -1266,6 +1216,7 @@ _FOLD_INT_PAIR = re.compile(
     r"\(\s*\(\s*(-?\d+)\s*\)\s*([+*/%-])\s*\(\s*(-?\d+)\s*\)\s*\)"
 )
 
+_PAREN_RE = re.compile(r"\(")
 _I64_MASK = (1 << 64) - 1
 
 
@@ -1383,7 +1334,7 @@ def rewrite_fuzzer_arith_parity(sql: str) -> str:
         if prev_op in "*/%" or (ch in "+-" and prev_op in "+-"):
             i += 1
             continue
-        re_ = _find_call_end(sql, rp)
+        _, _, re_ = next(iter_calls(sql, _PAREN_RE, rp))
         if ch in "+-":
             nx = re_
             while nx < len(sql) and sql[nx].isspace():
@@ -1434,38 +1385,28 @@ def rewrite_f32_math(sql: str, int_fields: set[str]) -> str:
             return True
         return a.split(".")[-1].strip('"').lower() in intset
 
-    pos = 0
-    while True:
-        m = _F32_MATH_RE.search(sql, pos)
-        if not m:
-            return sql
+    def f32(m: re.Match, args: CallArgs) -> str | None:
         fn = m.group(1).lower()
-        end = _find_call_end(sql, m.end() - 1)
-        args = [a.strip() for a in _split_args(sql[m.end() : end - 1])]
-        repl = None
         if fn == "log" and len(args) == 1:
             x = args[0]
-            if is_int(x):
-                xd = f"CAST(({x}) AS DOUBLE)"
-                repl = (
-                    f"(CASE WHEN {xd} IS NULL THEN CAST(NULL AS FLOAT) "
-                    f"WHEN isnan({xd}) OR {xd} < 0.0 THEN CAST('NaN' AS FLOAT) "
-                    f"WHEN {xd} = 0.0 THEN CAST('-Infinity' AS FLOAT) "
-                    f"ELSE CAST(log10({xd}) AS FLOAT) END)"
-                )
-            else:
-                repl = f"log10({x})"
-        elif fn == "atan2" and len(args) == 2 and all(is_int(a) for a in args):
+            if not is_int(x):
+                return f"log10({x})"
+            xd = f"CAST(({x}) AS DOUBLE)"
+            return (
+                f"(CASE WHEN {xd} IS NULL THEN CAST(NULL AS FLOAT) "
+                f"WHEN isnan({xd}) OR {xd} < 0.0 THEN CAST('NaN' AS FLOAT) "
+                f"WHEN {xd} = 0.0 THEN CAST('-Infinity' AS FLOAT) "
+                f"ELSE CAST(log10({xd}) AS FLOAT) END)"
+            )
+        if fn == "atan2" and len(args) == 2 and all(is_int(a) for a in args):
             a, b = args
-            repl = (
+            return (
                 f"CAST(atan2(CAST(({a}) AS DOUBLE), "
                 f"CAST(({b}) AS DOUBLE)) AS FLOAT)"
             )
-        if repl is None:
-            pos = end
-            continue
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+        return None
+
+    return rewrite_calls(sql, _F32_MATH_RE, f32)
 
 
 _ASINH_RE = re.compile(r"\basinh\s*\(", re.I)
@@ -1477,33 +1418,23 @@ def rewrite_asinh_stable(sql: str) -> str:
     round(asinh(-1000000), 10) must be -14.5086577385, Spark's builtin
     yields -14.5086501241). Rust's asinh is odd-symmetric and stable —
     mirror negatives through the positive branch."""
-    pos = 0
-    while True:
-        m = _ASINH_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
-        if len(args) != 1:
-            pos = end
-            continue
-        x = f"CAST(({args[0].strip()}) AS DOUBLE)"
 
-        def stable(y: str) -> str:
-            # |y| < 1: ln(1+t) cancellation → log1p form; |y| >= 1 the
-            # direct ln(y + sqrt(y²+1)) (= Spark's asinh) is stable
-            return (
-                f"(CASE WHEN {y} < 1.0 THEN "
-                f"log1p({y} + {y} * {y} / (1.0 + sqrt({y} * {y} + 1.0))) "
-                f"ELSE asinh({y}) END)"
-            )
-
-        repl = (
-            f"(CASE WHEN {x} < 0.0 THEN -{stable(f'(-{x})')} "
-            f"ELSE {stable(x)} END)"
+    def stable(y: str) -> str:
+        # |y| < 1: ln(1+t) cancellation → log1p form; |y| >= 1 the
+        # direct ln(y + sqrt(y²+1)) (= Spark's asinh) is stable
+        return (
+            f"(CASE WHEN {y} < 1.0 THEN "
+            f"log1p({y} + {y} * {y} / (1.0 + sqrt({y} * {y} + 1.0))) "
+            f"ELSE asinh({y}) END)"
         )
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+
+    def odd_symmetric(m: re.Match, args: CallArgs) -> str | None:
+        if len(args) != 1:
+            return None
+        x = f"CAST(({args[0]}) AS DOUBLE)"
+        return f"(CASE WHEN {x} < 0.0 THEN -{stable(f'(-{x})')} ELSE {stable(x)} END)"
+
+    return rewrite_calls(sql, _ASINH_RE, odd_symmetric)
 
 
 def rewrite_float_math_parity(sql: str) -> str:
@@ -1511,33 +1442,25 @@ def rewrite_float_math_parity(sql: str) -> str:
     (math_function/{signum,log10,log2}.slt; Rust f64::signum(+0.0) = 1.0
     and ln/log10/log2 of 0 → -inf, of negatives → NaN) — Spark returns
     0.0 / NULL respectively."""
-    pos = 0
-    while True:
-        m = _FLOAT_MATH_RE.search(sql, pos)
-        if not m:
-            return sql
-        fn = m.group(1).lower()
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
+
+    def rust_f64(m: re.Match, args: CallArgs) -> str | None:
         if len(args) != 1:
-            pos = end
-            continue  # 2-arg log(base, x) etc: leave to Spark
-        x = f"CAST(({args[0].strip()}) AS DOUBLE)"
+            return None  # 2-arg log(base, x) etc: leave to Spark
+        fn, x = m.group(1).lower(), f"CAST(({args[0]}) AS DOUBLE)"
         if fn == "signum":
-            repl = (
+            return (
                 f"(CASE WHEN {x} IS NULL THEN CAST(NULL AS DOUBLE) "
                 f"WHEN isnan({x}) THEN {x} "
                 f"WHEN {x} >= 0.0 THEN 1.0D ELSE -1.0D END)"
             )
-        else:
-            repl = (
-                f"(CASE WHEN {x} IS NULL THEN CAST(NULL AS DOUBLE) "
-                f"WHEN isnan({x}) OR {x} < 0.0 THEN CAST('NaN' AS DOUBLE) "
-                f"WHEN {x} = 0.0 THEN CAST('-Infinity' AS DOUBLE) "
-                f"ELSE {fn}({x}) END)"
-            )
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+        return (
+            f"(CASE WHEN {x} IS NULL THEN CAST(NULL AS DOUBLE) "
+            f"WHEN isnan({x}) OR {x} < 0.0 THEN CAST('NaN' AS DOUBLE) "
+            f"WHEN {x} = 0.0 THEN CAST('-Infinity' AS DOUBLE) "
+            f"ELSE {fn}({x}) END)"
+        )
+
+    return rewrite_calls(sql, _FLOAT_MATH_RE, rust_f64)
 
 
 # pmod, not %: pre-1970 timestamps have negative unix_micros and the
@@ -1552,6 +1475,8 @@ _SUBSEC_EXPR = {
     # dayofweek is 1-based Sunday=1
     "dow": "(dayofweek(CAST({x} AS TIMESTAMP)) - 1)",
 }
+_EXTRACT_RE = _call_re("extract", "date_part")
+_DATE_TRUNC_RE = _call_re("date_trunc")
 _DATE_TRUNC_UNITS = {
     "year", "quarter", "month", "week", "day", "hour", "minute", "second",
 }
@@ -1563,24 +1488,22 @@ def rewrite_extract_parts(sql: str) -> str:
     epoch is float seconds (extract.slt:102-152, date_part.slt:105-155);
     Spark's EXTRACT has none of them. Also: an invalid date_trunc unit is a
     planning error, not null (date_trunc.slt:109)."""
-    for unit, tpl in _SUBSEC_EXPR.items():
-        pat = re.compile(
-            rf"\b(?:extract\s*\(\s*{unit}\s+FROM\s+|date_part\s*\(\s*'{unit}'\s*,\s*)",
-            re.I,
-        )
-        while True:
-            m = pat.search(sql)
-            if not m:
-                break
-            open_p = sql.index("(", m.start())
-            end = _find_call_end(sql, open_p)
-            x = sql[m.end() : end - 1].strip()
-            sql = sql[: m.start()] + tpl.format(x=x) + sql[end:]
-    dm = re.search(r"\bdate_trunc\s*\(\s*'(\w+)'", sql, re.I)
-    if dm and dm.group(1).lower() not in _DATE_TRUNC_UNITS:
-        raise ValueError(
-            f"Error during planning: unsupported date_trunc unit {dm.group(1)!r}"
-        )
+
+    def subsecond(m: re.Match, args: CallArgs) -> str | None:
+        if m.group(1).lower() == "extract":
+            um = re.match(r"\s*(\w+)\s+FROM\s+", args.text, re.I)
+        else:
+            um = re.match(r"\s*'(\w+)'\s*,\s*", args.text)
+        tpl = um and _SUBSEC_EXPR.get(um.group(1).lower())
+        return tpl and tpl.format(x=args.text[um.end() :].strip())
+
+    sql = rewrite_calls(sql, _EXTRACT_RE, subsecond)
+    for _, args, _ in iter_calls(sql, _DATE_TRUNC_RE):
+        dm = re.match(r"\s*'(\w+)'", args.text)
+        if dm and dm.group(1).lower() not in _DATE_TRUNC_UNITS:
+            raise ValueError(
+                f"Error during planning: unsupported date_trunc unit {dm.group(1)!r}"
+            )
     return sql
 
 
@@ -1594,31 +1517,26 @@ def rewrite_corr(sql: str) -> str:
     NULL, corr.slt:55) — Spark's corr raises DIVIDE_BY_ZERO under ANSI.
     covar_pop is already pairwise; the stddevs are pairwise-filtered so
     differing null patterns can't skew the ratio."""
-    pos = 0
-    while True:
-        m = _CORR_RE.search(sql, pos)
-        if not m:
-            return sql
-        end = _find_call_end(sql, m.end() - 1)
-        args = _split_args(sql[m.end() : end - 1])
+
+    def corr(m: re.Match, args: CallArgs) -> str:
         if len(args) != 2:
             raise ValueError(
                 "Error during planning: The function Correlation expects 2 "
                 f"arguments, but {len(args)} were provided"
             )
-        x, y = (a.strip() for a in args)
+        x, y = args
         xp = f"CASE WHEN ({y}) IS NOT NULL THEN CAST(({x}) AS DOUBLE) END"
         yp = f"CASE WHEN ({x}) IS NOT NULL THEN CAST(({y}) AS DOUBLE) END"
         denom = f"(stddev_pop({xp}) * stddev_pop({yp}))"
-        repl = (
+        return (
             f"(CASE WHEN count({xp}) = 0 OR count({yp}) = 0 "
             f"THEN CAST(NULL AS DOUBLE) "
             f"WHEN {denom} = 0 THEN 0.0 "
             f"ELSE covar_pop(CAST(({x}) AS DOUBLE), CAST(({y}) AS DOUBLE)) "
             f"/ {denom} END)"
         )
-        sql = sql[: m.start()] + repl + sql[end:]
-        pos = m.start() + len(repl)
+
+    return rewrite_calls(sql, _CORR_RE, corr)
 
 
 _CONCAT_RE = re.compile(r"\bconcat\s*\(", re.I)
@@ -1628,27 +1546,15 @@ def rewrite_concat_null_skip(sql: str) -> str:
     """DataFusion's concat SKIPS NULL arguments (concat.slt:146:
     CONCAT('-','1',NULL,'2','3') → '-123'); Spark's concat propagates NULL.
     concat_ws('') has exactly the skip-NULL semantics. concat_ws itself is
-    untouched (the \\bconcat\\( pattern can't match 'concat_ws('). Quoted
-    regions are skipped — 'concat(' inside a string literal stays put."""
-    out = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n and sql[j] != ch:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        m = _CONCAT_RE.match(sql, i)
-        if m:
-            out.append("concat_ws('', ")
-            i = m.end()
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+    untouched (the \\bconcat\\( pattern can't match 'concat_ws(')."""
+    return rewrite_calls(
+        sql, _CONCAT_RE, lambda m, args: f"concat_ws('', {args.text})"
+    )
+
+
+# CAST without a word boundary: try_cast( matches too
+_ANY_CAST_RE = re.compile(r"CAST\s*\(", re.I)
+_BOOL_PREDICATE_RE = _call_re("starts_with", "ends_with", "startswith", "endswith")
 
 
 def rewrite_bool_string_cast(sql: str) -> str:
@@ -1657,28 +1563,24 @@ def rewrite_bool_string_cast(sql: str) -> str:
     ascii.slt:87) — not Spark's 'false'/'true'. Covers the syntactically
     detectable producers (starts_with/ends_with); boolean *columns* are
     handled schema-aware in Engine._coerce_bool_string_args."""
-    pat = re.compile(
-        r"CAST\s*\(\s*((?:starts_with|ends_with|startswith|endswith)\s*\()",
-        re.I,
-    )
-    pos = 0
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            return sql
-        fn_open = m.start(1)
-        fn_end = _find_call_end(sql, sql.index("(", fn_open))
-        cast_end = _find_call_end(sql, sql.index("(", m.start()))
+
+    def bool_cast(m: re.Match, args: CallArgs) -> str | None:
+        fm, _, end = next(iter_calls(args.text, _BOOL_PREDICATE_RE), (None, None, 0))
         # only rewrite CAST(fn(...) AS STRING) — the fn call must span the
         # whole cast operand
-        tail = sql[fn_end : cast_end - 1]
-        if not re.fullmatch(r"\s*AS\s+(STRING|VARCHAR|TEXT)\s*", tail, re.I):
-            pos = fn_end
-            continue
-        inner = sql[fn_open:fn_end]
-        repl = f"CAST(CAST({inner} AS INT) AS STRING)"
-        sql = sql[: m.start()] + repl + sql[cast_end:]
-        pos = m.start() + len(repl)
+        if not fm or args.text[: fm.start()].strip() or not re.fullmatch(
+            r"\s*AS\s+(STRING|VARCHAR|TEXT)\s*", args.text[end:], re.I
+        ):
+            return None
+        return f"CAST(CAST({args.text[fm.start() : end]} AS INT) AS STRING)"
+
+    return rewrite_calls(sql, _ANY_CAST_RE, bool_cast)
+
+
+_FLOAT_LIT = r"-?(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?"
+_TO_TS_ANY_RE = re.compile(r"\bto_timestamp\w*\s*\(", re.I)
+_LOG_FAMILY_RE = _call_re("ln", "log10", "log2", "log")
+_SUM_AVG_RE = _call_re("SUM", "AVG")
 
 
 def _check_unsupported_casts(sql: str) -> None:
@@ -1686,78 +1588,69 @@ def _check_unsupported_casts(sql: str) -> None:
     Float64 → Timestamp is unsupported (:1522), Timestamp → Float64 is
     unsupported (:2041), and chr() of a code point beyond the encoding is
     an execution error (:2267). Spark would silently do all three."""
-    if re.search(
-        r"CAST\s*\(\s*-?(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?\s+AS\s+TIMESTAMP\b",
-        sql, re.I,
-    ):
-        raise ValueError(
-            "This feature is not implemented: Unsupported CAST from "
-            "Float64 to Timestamp(Nanosecond, None)"
-        )
-    pat = re.compile(r"CAST\s*\(\s*(to_timestamp\w*\s*\(|time\s+AS)", re.I)
-    pos = 0
-    while True:
-        m = pat.search(sql, pos)
-        if not m:
-            break
-        inner = m.group(1)
-        if re.match(r"time\s", inner, re.I):  # CAST(time AS ...
-            tail_start = m.end()
-        else:
-            tail_start = _find_call_end(sql, m.end(1) - 1)
-        cast_end = _find_call_end(sql, sql.index("(", m.start()))
-        tail = sql[tail_start : cast_end - 1]
-        if re.search(r"AS\s+(DOUBLE|FLOAT|REAL)\s*$", tail, re.I) or (
-            inner.upper().startswith("TIME")
-            and re.match(r"\s*(DOUBLE|FLOAT|REAL)\s*$", tail, re.I)
+    casts = list(iter_calls(sql, _ANY_CAST_RE))
+    for _, args, _ in casts:
+        if re.match(_FLOAT_LIT + r"\s+AS\s+TIMESTAMP\b", args.text.strip(), re.I):
+            raise ValueError(
+                "This feature is not implemented: Unsupported CAST from "
+                "Float64 to Timestamp(Nanosecond, None)"
+            )
+    for _, args, _ in casts:
+        operand = args.text.strip()
+        fm, _, end = next(iter_calls(operand, _TO_TS_ANY_RE), (None, None, 0))
+        if re.fullmatch(r"time\s+AS\s+(DOUBLE|FLOAT|REAL)\s*", operand, re.I) or (
+            fm and fm.start() == 0
+            and re.search(r"AS\s+(DOUBLE|FLOAT|REAL)\s*$", operand[end:], re.I)
         ):
             raise ValueError(
                 "This feature is not implemented: Unsupported CAST from "
                 "Timestamp(Nanosecond, None) to Float64"
             )
-        pos = m.end()
-    for m in re.finditer(r"\bchr\s*\(\s*(-?\d+)\s*\)", sql, re.I):
-        if not 0 <= int(m.group(1)) <= 0x10FFFF:
+    for _, args, _ in iter_calls(sql, _CHR_RE):
+        if re.fullmatch(r"-?\d+", args.text.strip()) and not (
+            0 <= int(args.text) <= 0x10FFFF
+        ):
             raise ValueError(
                 "Execution error: requested character too large for encoding."
             )
     # the log family rejects the timestamp column (ln.slt:23 expects a
     # planning error; the float-math rewrite would otherwise cast it)
-    if re.search(r"\b(ln|log10|log2|log)\s*\(\s*(?:\w+\.)?time\s*\)", sql, re.I):
-        raise ValueError(
-            "Error during planning: No function matches the given name and "
-            "argument types for log over Timestamp(Nanosecond, None)"
-        )
+    for _, args, _ in iter_calls(sql, _LOG_FAMILY_RE):
+        if re.fullmatch(r"(?:\w+\.)?time", args.text.strip(), re.I):
+            raise ValueError(
+                "Error during planning: No function matches the given name and "
+                "argument types for log over Timestamp(Nanosecond, None)"
+            )
     # DataFusion's simplify_expressions folds constants EAGERLY, so an
     # invalid string→boolean cast errors even in a dead AND branch
     # (sqlancer/select.slt:3466) — Spark would fold the branch away first
-    for m in re.finditer(
-        r"CAST\s*\(\s*CAST\s*\(\s*(-?(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?)"
-        r"\s+AS\s+(?:STRING|VARCHAR)\s*\)\s+AS\s+BOOLEAN\s*\)",
-        sql, re.I,
-    ):
+    for _, args, _ in casts:
         # constant-folded float→string→boolean (select.slt:3466)
-        raise ValueError(
-            f"Arrow error: Cast error: Cannot cast value '{m.group(1)}' "
-            "to value of Boolean type"
+        fm = re.fullmatch(
+            r"CAST\s*\(\s*(" + _FLOAT_LIT + r")\s+AS\s+(?:STRING|VARCHAR)\s*\)"
+            r"\s+AS\s+BOOLEAN",
+            args.text.strip(), re.I,
         )
-    for m in re.finditer(
-        r"CAST\s*\(\s*'([^']*)'\s+AS\s+BOOLEAN\s*\)", sql, re.I
-    ):
-        if m.group(1).strip().lower() not in (
+        if fm:
+            raise ValueError(
+                f"Arrow error: Cast error: Cannot cast value '{fm.group(1)}' "
+                "to value of Boolean type"
+            )
+    for _, args, _ in casts:
+        lm = re.fullmatch(r"'([^']*)'\s+AS\s+BOOLEAN", args.text.strip(), re.I)
+        if lm and lm.group(1).strip().lower() not in (
             "true", "false", "t", "f", "yes", "no", "y", "n", "1", "0",
             "on", "off",
         ):
             raise ValueError(
-                f"Arrow error: Cast error: Cannot cast value '{m.group(1)}' "
+                f"Arrow error: Cast error: Cannot cast value '{lm.group(1)}' "
                 "to value of Boolean type"
             )
     # SUM/AVG over a string literal (unary +/- is identity on Utf8 in
     # DataFusion, so SUM(+('-991419863')) is a Sum-of-Utf8 planning error,
     # sqlancer/select.slt:1091); Spark would coerce the string to double
-    for m in re.finditer(r"\b(SUM|AVG)\s*\(", sql, re.I):
-        end = _find_call_end(sql, m.end() - 1)
-        inner = sql[m.end() : end - 1].strip()
+    for m, args, _ in iter_calls(sql, _SUM_AVG_RE):
+        inner = args.text.strip()
         while True:
             stripped = re.sub(r"^[+\-]\s*", "", inner).strip()
             if stripped != inner:
@@ -1828,6 +1721,9 @@ def _balanced(s: str) -> bool:
     return depth == 0
 
 
+_NULL_AGG_RE = _call_re("SUM", "AVG", "MIN", "MAX")
+
+
 def rewrite_dql(sql: str, *, fuzzer_arith: bool = True) -> str:
     """``fuzzer_arith=False`` skips rewrite_fuzzer_arith_parity's
     infix→try_op conversion, which assumes integer operands; the engine
@@ -1847,12 +1743,11 @@ def rewrite_dql(sql: str, *, fuzzer_arith: bool = True) -> str:
     sql = rewrite_approx_median(sql)
     # parity: DataFusion cannot type SUM over a bare NULL
     # (sqlancer/function.slt:272 expects a planning error)
-    if re.search(
-        r"\b(SUM|AVG|MIN|MAX)\s*\(\s*(?:ALL\s+|DISTINCT\s+)?NULL\s*\)", sql, re.I
-    ):
-        raise ValueError(
-            "The aggregate function does not support inputs of type Null."
-        )
+    for _, args, _ in iter_calls(sql, _NULL_AGG_RE):
+        if re.fullmatch(r"(?:ALL\s+|DISTINCT\s+)?NULL", args.text.strip(), re.I):
+            raise ValueError(
+                "The aggregate function does not support inputs of type Null."
+            )
     # parity pair of planning errors the reference corpus asserts: the bare
     # current_user keyword (session.slt:80 — only the () form exists),
     # and a FROM-less SELECT * (example/world.slt:24)
